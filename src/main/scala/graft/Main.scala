@@ -1,6 +1,6 @@
 package graft
 
-import graft.spark.{EncodePipeline, TokenTableGen, EncodedChunk}
+import graft.spark.{EncodePipeline, EncodedChunk, TokenRow, TokenTableGen}
 import org.apache.spark.sql.SparkSession
 
 /** spark-submit entry for the encode job (north rule: batch job with
@@ -51,7 +51,7 @@ object Main {
     val raw = m.getLong(2); val enc = m.getLong(3); val parts = m.getLong(4)
 
     val chunks = spark.read.parquet(s"$ckptDir/chunks").as[EncodedChunk]
-    val mismatches = EncodePipeline.verifyRoundTrip(src, EncodePipeline.decode(chunks))
+    val mismatches = EncodePipeline.verifyRoundTrip(src, EncodePipeline.decodeDF(chunks).as[TokenRow])
 
     println(
       s"""{"rows":$rows,"tokens":$toks,"partitions":$parts,""" +

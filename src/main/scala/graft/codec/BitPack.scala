@@ -109,54 +109,6 @@ object BitPack {
     ((n.toLong * bitWidth + 7) / 8).toInt
   }
 
-  /** Deprecated parquet BIT_PACKED for levels: MSB-first within each
-    * value, values packed back-to-back with per-byte bit order reversed
-    * relative to the RLE-hybrid layout (reference:
-    * encoding/bitpacked/bitpacked.go:38-69,110-119). Kept for capability
-    * parity with the reference's level codecs (SURVEY.md E3).
-    */
-  object LegacyLevels {
-    def pack(src: Array[Int], off: Int, n: Int, bitWidth: Int, out: ByteWriter): Unit = {
-      if (bitWidth == 0 || n == 0) return
-      val mask = (1L << bitWidth) - 1L
-      var acc = 0L
-      var bits = 0
-      var i = 0
-      while (i < n) {
-        // MSB-first: append value bits high-to-low
-        acc = (acc << bitWidth) | (src(off + i).toLong & mask)
-        bits += bitWidth
-        while (bits >= 8) {
-          out.writeByte(((acc >>> (bits - 8)) & 0xFF).toInt)
-          bits -= 8
-        }
-        i += 1
-      }
-      if (bits > 0) out.writeByte(((acc << (8 - bits)) & 0xFF).toInt)
-    }
-
-    def unpack(buf: Array[Byte], off: Int, bitWidth: Int,
-               dst: Array[Int], dstOff: Int, n: Int): Int = {
-      if (bitWidth == 0) { java.util.Arrays.fill(dst, dstOff, dstOff + n, 0); return 0 }
-      val mask = (1L << bitWidth) - 1L
-      var acc = 0L
-      var bits = 0
-      var p = off
-      var i = 0
-      while (i < n) {
-        while (bits < bitWidth) {
-          acc = (acc << 8) | (buf(p).toLong & 0xFFL)
-          p += 1
-          bits += 8
-        }
-        dst(dstOff + i) = ((acc >>> (bits - bitWidth)) & mask).toInt
-        bits -= bitWidth
-        i += 1
-      }
-      bytesFor(n, bitWidth)
-    }
-  }
-
   /** Bits needed for an int treated as unsigned-after-wrap (reference
     * uses bits.Len32, rle/dictionary.go:52-59). */
   def widthOfUnsignedInt(v: Int): Int = 32 - java.lang.Integer.numberOfLeadingZeros(v)

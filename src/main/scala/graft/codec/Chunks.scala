@@ -301,28 +301,6 @@ object Chunks {
     }
   }
 
-  /** Distinct page codec names inside a chunk (metrics) — skips page
-    * payloads via the offset index, no decoding. */
-  def pageCodecNames(bytes: Array[Byte]): String = {
-    val r = new ByteReader(bytes)
-    val codec = r.readByte()
-    if (codec != PagedInt) return Codecs.names.getOrElse(codec, "UNKNOWN")
-    r.readUvarint() // n
-    val numPages = r.readUvarint().toInt
-    r.readUvarint() // pageValues
-    val pageLens = new Array[Int](numPages)
-    var p = 0
-    while (p < numPages) { pageLens(p) = r.readUvarint().toInt; p += 1 }
-    val seen = scala.collection.mutable.LinkedHashSet[String]()
-    p = 0
-    while (p < numPages) {
-      seen += Codecs.names.getOrElse(r.buf(r.pos) & 0xFF, "UNKNOWN")
-      r.skip(pageLens(p))
-      p += 1
-    }
-    seen.mkString("+")
-  }
-
   /** Slice [from, from+count) out of an int chunk. For a PAGED chunk only
     * the covering pages are decoded — non-covering pages are skipped by
     * BYTES via the offset index (the reference's SeekToRow mechanism,
@@ -371,8 +349,6 @@ object Chunks {
     require(written == count, s"slice decoded $written of $count")
     (dst, lastPage - firstPage + 1, numPages)
   }
-
-  def intCodecOf(bytes: Array[Byte]): Int = bytes(0) & 0xFF
 
   // ----------------------------------------------------------------- longs
 

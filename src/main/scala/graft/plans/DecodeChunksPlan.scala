@@ -127,9 +127,9 @@ object GraftStrategy extends SparkStrategy {
 /** Columnar decode for GENERIC (any-schema) chunk tables: output/
   * colIndices/colTypes are parallel — each output attribute decodes the
   * chunk column at its index. The child is the projected chunk metadata
-  * (num_rows, chunk_id, col_crcs, cols_bin); the per-column payloads
-  * live inside ONE array column, so projection saves decode CPU and CRC
-  * work, not parquet bytes (the documented generic-format trade-off). */
+  * (num_rows, chunk_id, col_crcs) plus one `bin_<i>` payload column per
+  * decoded engine column, so projection saves parquet bytes as well as
+  * decode CPU and CRC work. */
 case class DecodeGenericChunks(output: Seq[Attribute], colIndices: Seq[Int],
                                colTypes: Seq[String], child: LogicalPlan)
     extends UnaryNode {
@@ -140,9 +140,8 @@ case class DecodeGenericChunks(output: Seq[Attribute], colIndices: Seq[Int],
 }
 
 /** Same automatic pruning as the token node: a narrower parent Project
-  * drops decode work column by column — and for the columnar table
-  * layout (bin_<i> parquet columns) it also re-narrows the node's child
-  * projection, so the scan skips the dropped columns' BYTES. */
+  * drops decode work column by column and re-narrows the node's child
+  * projection, so the scan skips the dropped columns' `bin_<i>` BYTES. */
 object DecodeGenericChunksPruning extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case p @ Project(projList, dg: DecodeGenericChunks)
@@ -154,15 +153,11 @@ object DecodeGenericChunksPruning extends Rule[LogicalPlan] {
       val keptIndices = kept.map { case (_, i) => dg.colIndices(i) }
       val newChild = dg.child match {
         case Project(_, src) =>
-          // which payload layout feeds this node: the single cols_bin
-          // array, or one bin_<i> parquet column per engine column. ALL
-          // kept bins must exist in the columnar case — silently dropping
-          // a missing one would surface later as a NoSuchElementException
-          // inside the batch iterator; fall back to the unmodified child
-          // instead, exactly as the meta-column forall below does.
-          val hasColsBin = src.output.exists(_.name == "cols_bin")
+          // ALL kept bins must exist — silently dropping a missing one
+          // would surface later as a NoSuchElementException inside the
+          // batch iterator; fall back to the unmodified child instead
           val needed = Seq("num_rows", "chunk_id", "col_crcs") ++
-            (if (hasColsBin) Seq("cols_bin") else keptIndices.map(ci => s"bin_$ci"))
+            keptIndices.map(ci => s"bin_$ci")
           if (needed.forall(n => src.output.exists(_.name == n)))
             Project(needed.map(n => src.output.find(_.name == n).get), src)
           else dg.child
@@ -562,11 +557,11 @@ case class DecodeChunksExec(output: Seq[Attribute], child: SparkPlan)
 }
 
 /** One ColumnarBatch per GENERIC chunk row: each selected column decodes
-  * from its payload in cols_bin (per-column CRC verified) straight into a
+  * from its `bin_<i>` payload (per-column CRC verified) straight into a
   * reused OnHeapColumnVector — primitives land as positional puts with
   * null interleaving, strings/binary via the allocation-free sink, array
   * columns as bulk child-vector fills plus offsets. */
-private[plans] final class GenericChunkBatchIterator(
+private[graft] final class GenericChunkBatchIterator(
     rows: Iterator[InternalRow], chunkCols: Seq[String], output: Seq[Attribute],
     colIndices: Array[Int], colTypes: Array[String])
   extends Iterator[ColumnarBatch] {
@@ -575,12 +570,7 @@ private[plans] final class GenericChunkBatchIterator(
   private val iNumRows = idx("num_rows")
   private val iChunkId = idx("chunk_id")
   private val iCrcs = idx("col_crcs")
-  // two physical layouts: the chunk-row form (one cols_bin array) or the
-  // columnar table form (one bin_<i> parquet column per engine column —
-  // byte-level projection at the scan)
-  private val iBins = idx.getOrElse("cols_bin", -1)
-  private val binOrdinals: Array[Int] =
-    if (iBins >= 0) null else colIndices.map(ci => idx(s"bin_$ci"))
+  private val binOrdinals: Array[Int] = colIndices.map(ci => idx(s"bin_$ci"))
   private val schema = StructType(output.map(a =>
     StructField(a.name, a.dataType, nullable = true)).toArray)
   private var vectors: Array[OnHeapColumnVector] = _
@@ -592,7 +582,6 @@ private[plans] final class GenericChunkBatchIterator(
     val n = row.getInt(iNumRows)
     val chunkId = row.getLong(iChunkId)
     val crcs = row.getArray(iCrcs)
-    val bins = if (iBins >= 0) row.getArray(iBins) else null
     if (vectors == null)
       vectors = OnHeapColumnVector.allocateColumns(math.max(n, 1024), schema)
     else {
@@ -602,7 +591,7 @@ private[plans] final class GenericChunkBatchIterator(
     var k = 0
     while (k < colIndices.length) {
       val ci = colIndices(k)
-      val bin = if (bins != null) bins.getBinary(ci) else row.getBinary(binOrdinals(k))
+      val bin = row.getBinary(binOrdinals(k))
       val crc = new java.util.zip.CRC32()
       crc.update(bin)
       require(crc.getValue == crcs.getLong(ci),

@@ -220,7 +220,7 @@ object RoundTrips {
         lit("tpch").as("source"))
       .as[TokenRow]
     val chunks = EncodePipeline.encode(rows, numParts = encParts(spark), tokensPerChunk = 256 * 1024)
-    EncodePipeline.decode(chunks)
+    EncodePipeline.decodeDF(chunks).as[TokenRow]
       .flatMap(r => r.tokens.map(t => (r.doc_id.toLong, t.toLong)))
       .toDF("l_orderkey", "l_linenumber")
       .orderBy("l_orderkey", "l_linenumber")
@@ -243,7 +243,7 @@ object RoundTrips {
       .as[TokenRow]
     val chunks = EncodePipeline.encode(rows, numParts = encParts(spark), tokensPerChunk = 256 * 1024,
       blockCodec = blockCodec)
-    EncodePipeline.decode(chunks)
+    EncodePipeline.decodeDF(chunks).as[TokenRow]
       .flatMap(r => r.tokens.map(t => (r.doc_id.toLong, t.toLong)))
       .toDF("l_orderkey", "l_linenumber")
       .orderBy("l_orderkey", "l_linenumber")
@@ -328,8 +328,7 @@ object RoundTrips {
     val merged = EncodePipeline.compactSorted(
       spark, Seq(s"$base/runA", s"$base/runB", s"$base/runC"), s"$base/merged",
       tokensPerChunk = 2048)
-    EncodePipeline.decode(merged.as[graft.spark.EncodedChunk])
-      .toDF()
+    EncodePipeline.decodeDF(merged.as[graft.spark.EncodedChunk])
       .select(col("doc_id"), col("source"),
         expr("aggregate(tokens, CAST(0 AS BIGINT), (a, x) -> a + x)").as("tok_sum"))
       .orderBy("doc_id")
@@ -374,8 +373,7 @@ object RoundTrips {
     val merged = EncodePipeline.compactSorted(
       spark, Seq(s"$base/runA", s"$base/runB", s"$base/runC"), s"$base/merged",
       tokensPerChunk = 2048, dropDuplicates = true)
-    EncodePipeline.decode(merged.as[graft.spark.EncodedChunk])
-      .toDF()
+    EncodePipeline.decodeDF(merged.as[graft.spark.EncodedChunk])
       .select(col("doc_id"), col("source"),
         expr("aggregate(tokens, CAST(0 AS BIGINT), (a, x) -> a + x)").as("tok_sum"))
       .orderBy("doc_id")
@@ -437,8 +435,7 @@ object RoundTrips {
             s"[${b.getString(1)},${b.getString(2)}]")
       case _ =>
     }
-    EncodePipeline.decode(merged.as[graft.spark.EncodedChunk])
-      .toDF()
+    EncodePipeline.decodeDF(merged.as[graft.spark.EncodedChunk])
       .select(col("doc_id"), col("source"),
         expr("aggregate(tokens, CAST(0 AS BIGINT), (a, x) -> a + x)").as("tok_sum"))
       .orderBy("doc_id")
@@ -478,9 +475,9 @@ object RoundTrips {
         .otherwise(col("l_returnflag")).as("flag"),
       (col("l_discount") > 0.05).as("discounted"),
       array(col("l_linenumber"), floor(col("l_quantity")).cast("int")).as("pair"))
-    // persist through the DEFAULT sink (columnar bin_<i> layout since
-    // round 4) and read back via the auto-detecting table reader, so the
-    // oracle checks the on-disk default path, not an in-memory shortcut
+    // persist through the table sink (bin_<i> layout) and read back via
+    // the table reader, so the oracle checks the on-disk path, not an
+    // in-memory shortcut
     val base = s"${System.getProperty("java.io.tmpdir")}/graft-generic-q-" +
       java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
@@ -597,8 +594,7 @@ object RoundTrips {
         when(col("l_returnflag") === "N", lit(null).cast("string"))
           .otherwise(col("l_returnflag")).as("source"))
       .as[TokenRow]
-    val decoded = EncodePipeline.decode(EncodePipeline.encode(src, numParts = encParts(spark)))
-    decoded.toDF()
+    EncodePipeline.decodeDF(EncodePipeline.encode(src, numParts = encParts(spark)))
       .select(col("doc_id"), col("n_tok"), col("source"),
         expr("aggregate(tokens, CAST(0 AS BIGINT), (acc, x) -> acc + x)").as("tok_sum"))
       .orderBy("doc_id", "n_tok", "source", "tok_sum")
@@ -973,7 +969,7 @@ object RoundTrips {
       java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
     graft.spark.GenericEncode.encodeWrite(src, base, rowsPerChunk = 256)
-    graft.spark.GenericEncode.decodeColumnarTable(spark, base, Seq("doc_id", "n_chars"))
+    graft.spark.GenericEncode.readTable(spark, base, Seq("doc_id", "n_chars"))
       .filter(col("n_chars") >= 200L)
       .orderBy("doc_id")
   }
@@ -1365,7 +1361,7 @@ object RoundTrips {
     append(slice(col("doc_id") % 2 === 1))
     SnapshotLog.commit(spark, base, "append")
     def decodeAt(v: Option[Int], tag: Int) =
-      EncodePipeline.decode(
+      EncodePipeline.decodeDF(
           SnapshotLog.readChunks(spark, base, v).as[graft.spark.EncodedChunk])
         .select(lit(tag).as("snap"), col("doc_id"), col("source"),
           col("n_tok").cast("long").as("n_tok"))

@@ -95,7 +95,7 @@ object ChunkJoin {
           if (lb >= probeArr.length ||
               probeArr(lb)._1.compareTo(UTF8String.fromString(c.last_doc_id)) > 0)
             Iterator.empty
-          else EncodePipeline.decodeChunk(c).flatMap { row =>
+          else EncodePipeline.decodeChunkRows(c, 0, c.num_rows).flatMap { row =>
             val key = UTF8String.fromString(row.doc_id)
             while (i < probeArr.length && probeArr(i)._1.compareTo(key) < 0) i += 1
             var j = i

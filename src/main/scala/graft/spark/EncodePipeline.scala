@@ -394,55 +394,6 @@ object EncodePipeline {
 
   // ----------------------------------------------------------------- decode
 
-  /** Chunk table → token rows; pure per-chunk flatMap, no shuffle. */
-  def decode(chunks: Dataset[EncodedChunk]): Dataset[TokenRow] = {
-    val spark = chunks.sparkSession
-    import spark.implicits._
-    chunks.flatMap(decodeChunk)
-  }
-
-  /** Null-aware decode: rows whose tokens were NULL come back with
-    * `tokens = null, n_tok = -1`; NULL sources come back null. */
-  def decodeChunk(c: EncodedChunk): Iterator[TokenRow] = {
-    val crc = new java.util.zip.CRC32()
-    crc.update(c.tokens_bin); crc.update(c.lens_bin)
-    crc.update(c.docid_bin); crc.update(c.source_bin)
-    crc.update(c.tokens_bloom)
-    require(crc.getValue == c.crc32, s"chunk ${c.chunk_id}: CRC mismatch")
-    val lens = Chunks.decodeInts(BlockCompression.decompress(c.lens_bin))
-    val (tokFlags, tokensInner) = Chunks.unwrapNullable(BlockCompression.decompress(c.tokens_bin))
-    val tokens = StreamedTokens.decode(tokensInner, lens)
-    val docIds = Chunks.decodeStrings(BlockCompression.decompress(c.docid_bin))
-    val (srcFlags, srcInner) = Chunks.unwrapNullable(BlockCompression.decompress(c.source_bin))
-    val srcDense = Chunks.decodeStrings(srcInner)
-    val offsets = new Array[Int](lens.length + 1)
-    var i = 0
-    while (i < lens.length) { offsets(i + 1) = offsets(i) + lens(i); i += 1 }
-    var tokCursor = 0
-    var srcCursor = 0
-    Iterator.tabulate(c.num_rows) { r =>
-      val tokensOut =
-        if (tokFlags != null && tokFlags(r)) null
-        else {
-          val k = tokCursor
-          tokCursor += 1
-          java.util.Arrays.copyOfRange(tokens, offsets(k), offsets(k + 1))
-        }
-      val sourceOut =
-        if (srcFlags != null && srcFlags(r)) null
-        else {
-          val s = srcDense(srcCursor)
-          srcCursor += 1
-          new String(s, UTF_8)
-        }
-      TokenRow(
-        new String(docIds(r), UTF_8),
-        tokensOut,
-        if (tokensOut == null) -1 else tokensOut.length,
-        sourceOut)
-    }
-  }
-
   /** Decode as a columnar scan: a custom Catalyst plan
     * (`graft.plans.DecodeChunksExec`) decodes each chunk into reused
     * `OnHeapColumnVector`s and emits `ColumnarBatch`es — zero per-row
@@ -452,22 +403,27 @@ object EncodePipeline {
     * consumers. `cols` projects the decode: only the streams those
     * columns need are fetched, CRC-checked, and decoded, and Catalyst
     * ColumnPruning shrinks it automatically under aggregates/projects
-    * (reference reads pages per requested column, file.go:439-485). */
+    * (reference reads pages per requested column, file.go:439-485).
+    * Rows whose tokens were NULL come back with `tokens = null,
+    * n_tok = -1`; NULL sources come back null. This is the one
+    * Dataset-level token decoder: typed callers take
+    * `decodeDF(chunks).as[TokenRow]`. */
   def decodeDF(chunks: Dataset[EncodedChunk],
                cols: Seq[String] = Seq("doc_id", "tokens", "n_tok", "source")): DataFrame =
     graft.plans.GraftPlans.decodeDF(chunks.toDF(), cols)
 
-  /** Partial chunk decode: only rows [fromRow, toRow) of one chunk. Token
-    * pages outside the range are skipped by bytes via the paged offset
-    * index (reference SeekToRow, file.go:684-709); the row-level streams
-    * (lens, doc_id, source — a few % of chunk bytes) decode fully. */
+  /** Per-chunk typed decode of rows [fromRow, toRow) — the whole chunk is
+    * `decodeChunkRows(c, 0, c.num_rows)`. Token pages outside the range
+    * are skipped by bytes via the paged offset index (reference
+    * SeekToRow, file.go:684-709); the row-level streams (lens, doc_id,
+    * source — a few % of chunk bytes) decode fully. */
   def decodeChunkRows(c: EncodedChunk, fromRow: Int, toRow: Int): Iterator[TokenRow] = {
     require(fromRow >= 0 && fromRow <= toRow && toRow <= c.num_rows,
       s"rows [$fromRow,$toRow) of ${c.num_rows}")
-    // Same corruption-fails-loudly stance as decodeChunk/decodeDF: the
-    // partial read skips token-page DECODE, but the chunk's bytes are all
-    // in hand, so the CRC pass (proportional to bytes, not rows) is cheap
-    // relative to having fetched them.
+    // Same corruption-fails-loudly stance as decodeDF: the partial read
+    // skips token-page DECODE, but the chunk's bytes are all in hand, so
+    // the CRC pass (proportional to bytes, not rows) is cheap relative to
+    // having fetched them.
     val crc = new java.util.zip.CRC32()
     crc.update(c.tokens_bin); crc.update(c.lens_bin)
     crc.update(c.docid_bin); crc.update(c.source_bin)
@@ -816,7 +772,7 @@ object EncodePipeline {
     val all = chunkDirs
       .map(d => spark.read.parquet(d).as[EncodedChunk])
       .reduce(_ unionByName _)
-    encodeCheckpointed(spark, decode(all), numParts, outDir, tokensPerChunk)
+    encodeCheckpointed(spark, decodeDF(all).as[TokenRow], numParts, outDir, tokensPerChunk)
   }
 
   /** Sorted-run-aware compaction: merge several chunk tables while
@@ -1056,7 +1012,7 @@ object EncodePipeline {
     val decoded = joined
       .filter(t => t._2._4 > 1L || t._2._5)
       .flatMap { case ((run, c), (g, _, _, _, _)) =>
-        decodeChunk(c).map(r =>
+        decodeChunkRows(c, 0, c.num_rows).map(r =>
           (r.doc_id, r.tokens, r.n_tok, r.source, g, addedOf(run)))
       }
       .toDF("doc_id", "tokens", "n_tok", "source", "part_id", "__added")

@@ -936,10 +936,12 @@ object GenericEncode {
 
   /** Row-offset seek over a generic chunk table (schema-generic SeekToRow,
     * reference file.go:684-709): covering chunks come from the same
-    * distributed row index the token pipeline uses, and each covering
-    * chunk decodes only the requested columns, sliced to the needed rows.
-    * Generic columns carry no intra-chunk page index, so partial-ness is
-    * chunk-granular (the token table additionally byte-skips pages). */
+    * distributed row index the token pipeline uses, each covering chunk
+    * decodes only the requested columns through the same columnar batch
+    * kernel as [[decode]], and rows [from, to) are copied out of the
+    * batch. Generic columns carry no intra-chunk page index, so
+    * partial-ness is chunk-granular (the token table additionally
+    * byte-skips pages). */
   def seekRows(spark: SparkSession, chunks: Dataset[GenericChunk], start: Long, count: Long,
                cols: Seq[String] = Seq.empty): DataFrame = {
     val meta = metaHead(chunks)
@@ -957,27 +959,29 @@ object GenericEncode {
     }.toMap
     val bc = spark.sparkContext.broadcast(ranges)
     val (allNames, allTypes) = meta.get
-    val selected: Seq[Int] =
-      if (cols.isEmpty) allNames.indices
-      else {
-        val keep = allNames.zipWithIndex.filter { case (n, _) =>
-          cols.contains(n.split(Sep, 2)(0))
-        }
-        // mirror decode(): a misspelled column must fail loudly, not
-        // silently return zero-column rows
-        require(keep.nonEmpty, s"no requested column among $cols in table schema")
-        keep.map(_._2)
-      }
-    val schema = StructType(selected.map(i =>
-      StructField(allNames(i), parseType(allTypes(i)), nullable = true)))
-    val full = selected.size == allNames.size
-    val sel = selected.toArray
-    val rowRdd = chunks
+    val selected = selectedCols(allNames, cols)
+    val attrs = attrsOf(allNames, allTypes, selected)
+    val payload = binFrame(chunks, allNames.length)
       .filter(fcol("chunk_id").isin(ranges.keys.toSeq.map(Long.box): _*))
-      .rdd.flatMap { c =>
-        val (from, to) = bc.value(c.chunk_id)
-        decodeChunkInternal(c, sel, full).slice(from, to)
-      }
+      .select(payloadCols(selected).map(fcol): _*)
+    val payloadNames = payload.columns.toSeq
+    val iChunkId = payloadNames.indexOf("chunk_id")
+    val types = selected.map(allTypes(_)).toArray
+    val sel = selected.toArray
+    val rowRdd = payload.queryExecution.toRdd.mapPartitions { it =>
+      import scala.jdk.CollectionConverters._
+      // the batch iterator pulls exactly one chunk row per batch, so the
+      // id seen last is the current batch's chunk
+      var chunkId = 0L
+      val tagged = it.map { r => chunkId = r.getLong(iChunkId); r }
+      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(attrs, attrs)
+      new graft.plans.GenericChunkBatchIterator(tagged, payloadNames, attrs, sel, types)
+        .flatMap { batch =>
+          val (from, to) = bc.value(chunkId)
+          batch.rowIterator().asScala.slice(from, to).map(r => proj(r).copy(): InternalRow)
+        }
+    }
+    val schema = StructType(attrs.map(a => StructField(a.name, a.dataType, nullable = true)))
     val flat = org.apache.spark.sql.graftbridge.ColumnBridge
       .internalCreateDataFrame(spark, rowRdd, schema)
     if (schema.fieldNames.exists(_.contains(Sep))) unflatten(flat) else flat
@@ -990,25 +994,49 @@ object GenericEncode {
     "col_nulls", "col_mins", "col_maxs", "col_blooms", "enc_bytes", "crc32",
     "col_crcs")
 
-  /** DEFAULT persisted layout for generic chunk tables: columnar
-    * (`bin_<i>`). Every new table should go through this sink; pre-
-    * round-4 tables in the single cols_bin array layout stay readable
-    * through [[readTable]]'s auto-detection. */
-  def write(chunks: Dataset[GenericChunk], path: String): Unit =
-    writeColumnar(chunks, path)
+  /** The one generic chunk layout: the chunk metadata plus ONE PARQUET
+    * COLUMN PER ENGINE COLUMN (`bin_<i>`). Persisted, a projected read
+    * skips the unselected columns' BYTES at the parquet layer — the
+    * per-column I/O pruning the reference gets from its page layout
+    * (file.go:439-485); in memory, `cols_bin[i] AS bin_i` is the same
+    * frame, so every decode reads one shape. */
+  private def binFrame(chunks: Dataset[GenericChunk], n: Int): DataFrame =
+    chunks.toDF().select(ChunkMetaCols.map(fcol) ++
+      (0 until n).map(i => fcol("cols_bin").getItem(i).as(s"bin_$i")): _*)
 
-  /** Read a persisted generic chunk table in EITHER layout — columnar
-    * `bin_<i>` (the default sink since round 4) or the legacy single
-    * cols_bin array — detected from the parquet schema. Projection
-    * (`cols`) reaches the parquet byte level on the columnar layout;
-    * on the legacy layout it saves decode/CRC work only. */
+  /** Persist `chunks` (of `n` engine columns) in the `bin_<i>` layout.
+    * The width is the caller's: [[encodeWrite]] derives it from the
+    * source schema, so the encode DAG runs once. */
+  private[graft] def writeColumnarN(chunks: Dataset[GenericChunk], path: String,
+                                    n: Int): Unit =
+    binFrame(chunks, n).write.mode("overwrite")
+      .option("compression", EncodePipeline.ChunkTableCompression)
+      .parquet(path)
+
+  /** Encode `df` and persist it in the `bin_<i>` layout in ONE pipeline
+    * execution: the width comes from the SOURCE schema ([[flatWidth]]),
+    * so no probe row of the encoded dataset re-runs the upstream DAG. */
+  def encodeWrite(df: DataFrame, path: String,
+                  rowsPerChunk: Int = DefaultRowsPerChunk): Unit =
+    writeColumnarN(encode(df, rowsPerChunk), path, flatWidth(df))
+
+  /** Read a persisted generic chunk table (`bin_<i>` layout). Projection
+    * (`cols`) reaches the parquet byte level: the decode plan's child
+    * selects only the requested columns' payloads, and the pruning rule
+    * narrows it further under parent Projects. Tables in the pre-round-4
+    * single `cols_bin` array layout are refused: re-encode their source
+    * with [[encodeWrite]]. */
   def readTable(spark: SparkSession, path: String,
                 cols: Seq[String] = Seq.empty): DataFrame = {
-    import spark.implicits._
     val df = spark.read.parquet(path)
     if (df.schema.fieldNames.contains("cols_bin"))
-      decode(spark, df.as[GenericChunk], cols)
-    else decodeColumnarTable(spark, path, cols)
+      throw new IllegalArgumentException(
+        s"generic chunk table at $path uses the legacy single-array cols_bin " +
+          "layout, which is no longer read; re-encode its source with " +
+          "GenericEncode.encodeWrite (per-column bin_<i> layout)")
+    val head = df.select("col_names", "col_types").limit(1).collect()
+    if (head.isEmpty) spark.emptyDataFrame
+    else decodeBins(spark, df, head(0).getSeq[String](0), head(0).getSeq[String](1), cols)
   }
 
   /** Least common type of two column types under the engine's widening
@@ -1082,112 +1110,59 @@ object GenericEncode {
     readTable(spark, outDir)
   }
 
-  /** Write a chunk table with ONE PARQUET COLUMN PER ENGINE COLUMN
-    * (`bin_<i>`) instead of the single `cols_bin` array: a projected read
-    * of such a table skips the unselected columns' BYTES at the parquet
-    * layer — the full per-column I/O pruning the reference gets from its
-    * page layout (file.go:439-485) — not just their decode/CRC work. */
-  def writeColumnar(chunks: Dataset[GenericChunk], path: String): Unit = {
-    // NO schema side-channel for this entry point: probe one chunk row
-    // for the column count. This EXECUTES part of the upstream encode
-    // DAG a second time — prefer [[encodeWrite]], which derives the
-    // width from the source schema and runs the pipeline exactly once.
-    val head = chunks.limit(1).collect()
-    require(head.nonEmpty, "empty chunk table")
-    writeColumnarN(chunks, path, head(0).col_names.length)
-  }
-
-  private def writeColumnarN(chunks: Dataset[GenericChunk], path: String,
-                             n: Int): Unit = {
-    val base = ChunkMetaCols.map(fcol)
-    val bins = (0 until n).map(i => fcol("cols_bin").getItem(i).as(s"bin_$i"))
-    chunks.toDF().select(base ++ bins: _*).write.mode("overwrite")
-      .option("compression", EncodePipeline.ChunkTableCompression)
-      .parquet(path)
-  }
-
-  /** Encode `df` and persist it columnar in ONE pipeline execution: the
-    * `bin_<i>` projection width comes from the SOURCE schema
-    * ([[flatWidth]]), not from collecting a probe row of the encoded
-    * dataset — the probe ran every upstream shuffle/sort a second time
-    * before the write re-ran it for real (measured: the generic-table
-    * and token-index queries paid their encode roughly twice). */
-  def encodeWrite(df: DataFrame, path: String,
-                  rowsPerChunk: Int = DefaultRowsPerChunk): Unit =
-    writeColumnarN(encode(df, rowsPerChunk), path, flatWidth(df))
-
-  /** Columnar-layout reader: the decode plan's child selects only the
-    * requested columns' `bin_<i>` payloads, so parquet never reads the
-    * rest (and the pruning rule narrows it further under parent
-    * Projects). Same schema-from-the-chunks contract as `decode`. */
-  def decodeColumnarTable(spark: SparkSession, path: String,
-                          cols: Seq[String] = Seq.empty): DataFrame = {
-    val df = spark.read.parquet(path)
-    val head = df.select("col_names", "col_types").limit(1).collect()
-    if (head.isEmpty) return spark.emptyDataFrame
-    val allNames = head(0).getSeq[String](0)
-    val allTypes = head(0).getSeq[String](1)
-    val selected: Seq[Int] =
-      if (cols.isEmpty) allNames.indices
-      else {
-        val keep = allNames.zipWithIndex.filter { case (nm, _) =>
-          cols.contains(nm.split(Sep, 2)(0))
-        }
-        require(keep.nonEmpty, s"no requested column among $cols in table schema")
-        keep.map(_._2)
-      }
-    val attrs = selected.map(i =>
-      org.apache.spark.sql.catalyst.expressions.AttributeReference(
-        allNames(i), parseType(allTypes(i)), nullable = true)())
-    graft.plans.GraftPlans.install(spark)
-    val bridge = org.apache.spark.sql.graftbridge.ColumnBridge
-    val projected = df.select(
-      (Seq("num_rows", "chunk_id", "col_crcs") ++ selected.map(i => s"bin_$i")).map(fcol): _*)
-    val flat = bridge.ofRows(spark, graft.plans.DecodeGenericChunks(
-      attrs, selected, selected.map(allTypes(_)), bridge.analyzedPlan(projected)))
-    if (attrs.exists(_.name.contains(Sep))) unflatten(flat) else flat
-  }
-
   // ---------------------------------------------------------------- decode
 
-  /** Chunk table → rows with the original schema (schema is read from
-    * the chunks themselves — the reader needs no side channel; struct
-    * nesting rebuilds from the flattened leaf names). `cols` restricts
-    * the decode to those TOP-LEVEL columns: skipped columns are never
-    * CRC'd or decoded (their bytes still ride in the chunk row — the
-    * per-column byte layout inside one parquet array column is the
-    * documented trade-off of the generic format).
-    *
-    * The scan is COLUMNAR: a custom Catalyst plan
-    * (plans.DecodeGenericChunksExec) decodes each chunk column straight
-    * into reused OnHeapColumnVectors — no boxed value per row — and a
-    * parent Project narrows the decode automatically (same optimizer
-    * rule family as the token pipeline's decodeDF). Every read column's
-    * CRC is verified per chunk. */
+  /** In-memory chunk table → rows with the original schema (schema is
+    * read from the chunks themselves — the reader needs no side channel;
+    * struct nesting rebuilds from the flattened leaf names). `cols`
+    * restricts the decode to those TOP-LEVEL columns: skipped columns
+    * are never CRC'd or decoded. Same plan as [[readTable]], over the
+    * in-memory `bin_<i>` frame. */
   def decode(spark: SparkSession, chunks: Dataset[GenericChunk],
-             cols: Seq[String] = Seq.empty): DataFrame = {
-    val meta = metaHead(chunks)
-    if (meta.isEmpty) return spark.emptyDataFrame
-    val (allNames, allTypes) = meta.get
-    val selected: Seq[Int] =
-      if (cols.isEmpty) allNames.indices
-      else {
-        val keep = allNames.zipWithIndex.filter { case (n, _) =>
-          cols.contains(n.split(Sep, 2)(0))
-        }
-        require(keep.nonEmpty, s"no requested column among $cols in table schema")
-        keep.map(_._2)
-      }
-    val attrs = selected.map(i =>
-      org.apache.spark.sql.catalyst.expressions.AttributeReference(
-        allNames(i), parseType(allTypes(i)), nullable = true)())
+             cols: Seq[String] = Seq.empty): DataFrame =
+    metaHead(chunks) match {
+      case None => spark.emptyDataFrame
+      case Some((names, types)) =>
+        decodeBins(spark, binFrame(chunks, names.length), names, types, cols)
+    }
+
+  /** The one generic decode: a columnar Catalyst plan
+    * (plans.DecodeGenericChunksExec) over a `bin_<i>` frame decodes each
+    * chunk column straight into reused OnHeapColumnVectors — no boxed
+    * value per row — and a parent Project narrows the decode (and the
+    * scan's payload columns) automatically, the same optimizer rule
+    * family as the token pipeline's decodeDF. Every read column's CRC is
+    * verified per chunk. */
+  private def decodeBins(spark: SparkSession, bins: DataFrame, names: Seq[String],
+                         types: Seq[String], cols: Seq[String]): DataFrame = {
+    val selected = selectedCols(names, cols)
+    val attrs = attrsOf(names, types, selected)
     graft.plans.GraftPlans.install(spark)
     val bridge = org.apache.spark.sql.graftbridge.ColumnBridge
-    val projected = chunks.toDF().select("num_rows", "chunk_id", "col_crcs", "cols_bin")
+    val projected = bins.select(payloadCols(selected).map(fcol): _*)
     val flat = bridge.ofRows(spark, graft.plans.DecodeGenericChunks(
-      attrs, selected, selected.map(allTypes(_)), bridge.analyzedPlan(projected)))
+      attrs, selected, selected.map(types(_)), bridge.analyzedPlan(projected)))
     if (attrs.exists(_.name.contains(Sep))) unflatten(flat) else flat
   }
+
+  /** Engine-column indices for the requested TOP-LEVEL columns (all when
+    * empty); a misspelled column fails loudly instead of decoding to
+    * zero-column rows. */
+  private def selectedCols(names: Seq[String], cols: Seq[String]): Seq[Int] =
+    if (cols.isEmpty) names.indices
+    else {
+      val keep = names.indices.filter(i => cols.contains(names(i).split(Sep, 2)(0)))
+      require(keep.nonEmpty, s"no requested column among $cols in table schema")
+      keep
+    }
+
+  private def attrsOf(names: Seq[String], types: Seq[String], selected: Seq[Int]) =
+    selected.map(i => org.apache.spark.sql.catalyst.expressions.AttributeReference(
+      names(i), parseType(types(i)), nullable = true)())
+
+  /** The chunk columns a decode of `selected` reads. */
+  private def payloadCols(selected: Seq[Int]): Seq[String] =
+    Seq("num_rows", "chunk_id", "col_crcs") ++ selected.map(i => s"bin_$i")
 
   private def parseType(s: String): DataType = s match {
     case "int" => IntegerType
@@ -1209,144 +1184,5 @@ object GenericEncode {
       val Array(p, sc) = dec.stripPrefix("decimal(").stripSuffix(")").split(",")
       DecimalType(p.trim.toInt, sc.trim.toInt)
     case other => throw new IllegalArgumentException(s"generic decode: $other")
-  }
-
-  /** Decode the selected columns of one chunk to InternalRows (Catalyst
-    * values — no java boxing, no Row/RowEncoder round-trip). A full
-    * decode verifies the whole-chunk CRC; a projected decode verifies
-    * the per-column CRCs of only what it reads. */
-  private def decodeChunkInternal(c: GenericChunk, selected: Array[Int],
-                                  full: Boolean): Iterator[InternalRow] = {
-    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    import org.apache.spark.unsafe.types.UTF8String
-    if (full) {
-      val crc = new java.util.zip.CRC32()
-      c.cols_bin.foreach(crc.update)
-      c.col_blooms.foreach(crc.update)
-      require(crc.getValue == c.crc32, s"generic chunk ${c.chunk_id}: CRC mismatch")
-    } else {
-      selected.foreach { i =>
-        val crc = new java.util.zip.CRC32()
-        crc.update(c.cols_bin(i))
-        require(crc.getValue == c.col_crcs(i),
-          s"generic chunk ${c.chunk_id}: column ${c.col_names(i)} CRC mismatch")
-      }
-    }
-    val nSel = selected.length
-    val cols = new Array[Array[Any]](nSel)
-    var si = 0
-    while (si < nSel) {
-      val ci = selected(si)
-      val (flags, inner) = Chunks.unwrapNullable(c.cols_bin(ci))
-      val dense: Array[Any] = c.col_types(ci) match {
-        case "int" | "date" => Chunks.decodeInts(inner).map(v => v: Any)
-        case "bigint" | "timestamp" | "timestamp_ntz" =>
-          Chunks.decodeLongs(inner).map(v => v: Any)
-        case "double" => Chunks.decodeDoubles(inner).map(v => v: Any)
-        case "float" => Chunks.decodeFloats(inner).map(v => v: Any)
-        case dec if dec.startsWith("decimal(") =>
-          val dt = parseType(dec).asInstanceOf[DecimalType]
-          Chunks.decodeLongs(inner)
-            .map(u => org.apache.spark.sql.types.Decimal
-              .createUnsafe(u, dt.precision, dt.scale): Any)
-        case "boolean" => Chunks.decodeBooleans(inner).map(v => v: Any)
-        case "string" => Chunks.decodeStrings(inner).map(b => UTF8String.fromBytes(b): Any)
-        case "binary" => Chunks.decodeStrings(inner).map(b => b: Any)
-        case t if t.startsWith("array<") =>
-          val r = new ByteReader(inner)
-          val lensLen = r.readUvarint().toInt
-          val lens = Chunks.decodeInts(r.readBytes(lensLen))
-          val rest = java.util.Arrays.copyOfRange(r.buf, r.pos, r.buf.length)
-          // element stream: dense values directly, or dense values inside
-          // a NULLABLE wrapper whose bitmap spans ALL elements
-          val (ef, denseBin) = Chunks.unwrapNullable(rest)
-          def slices(mk: (Int, Int) => Any): Array[Any] = {
-            val out = new Array[Any](lens.length)
-            var off = 0
-            var i = 0
-            while (i < lens.length) { out(i) = mk(off, lens(i)); off += lens(i); i += 1 }
-            out
-          }
-          if (ef == null) t match {
-            case "array<int>" =>
-              val flat = StreamedTokens.decode(denseBin, lens)
-              slices((off, n) => UnsafeArrayData.fromPrimitiveArray(
-                java.util.Arrays.copyOfRange(flat, off, off + n)))
-            case "array<bigint>" =>
-              val flat = Chunks.decodeLongs(denseBin)
-              slices((off, n) => UnsafeArrayData.fromPrimitiveArray(
-                java.util.Arrays.copyOfRange(flat, off, off + n)))
-            case "array<float>" =>
-              val flat = Chunks.decodeFloats(denseBin)
-              slices((off, n) => UnsafeArrayData.fromPrimitiveArray(
-                java.util.Arrays.copyOfRange(flat, off, off + n)))
-            case "array<double>" =>
-              val flat = Chunks.decodeDoubles(denseBin)
-              slices((off, n) => UnsafeArrayData.fromPrimitiveArray(
-                java.util.Arrays.copyOfRange(flat, off, off + n)))
-            case "array<string>" =>
-              val flat = Chunks.decodeStrings(denseBin)
-              slices { (off, n) =>
-                val a = new Array[Any](n)
-                var k = 0
-                while (k < n) { a(k) = UTF8String.fromBytes(flat(off + k)); k += 1 }
-                new GenericArrayData(a)
-              }
-            case other => throw new IllegalArgumentException(s"generic decode: $other")
-          } else {
-            val dense: Int => Any = t match {
-              case "array<int>" =>
-                val a = Chunks.decodeInts(denseBin); k => a(k)
-              case "array<bigint>" =>
-                val a = Chunks.decodeLongs(denseBin); k => a(k)
-              case "array<float>" =>
-                val a = Chunks.decodeFloats(denseBin); k => a(k)
-              case "array<double>" =>
-                val a = Chunks.decodeDoubles(denseBin); k => a(k)
-              case "array<string>" =>
-                val a = Chunks.decodeStrings(denseBin); k => UTF8String.fromBytes(a(k))
-              case other => throw new IllegalArgumentException(s"generic decode: $other")
-            }
-            val out = new Array[Any](lens.length)
-            var e = 0
-            var d2 = 0
-            var i = 0
-            while (i < lens.length) {
-              val a = new Array[Any](lens(i))
-              var k = 0
-              while (k < lens(i)) {
-                if (ef(e)) a(k) = null else { a(k) = dense(d2); d2 += 1 }
-                e += 1
-                k += 1
-              }
-              out(i) = new GenericArrayData(a)
-              i += 1
-            }
-            out
-          }
-        case other => throw new IllegalArgumentException(s"generic decode: $other")
-      }
-      cols(si) =
-        if (flags == null) dense
-        else {
-          val out = new Array[Any](c.num_rows)
-          var d = 0
-          var i = 0
-          while (i < c.num_rows) {
-            if (!flags(i)) { out(i) = dense(d); d += 1 }
-            i += 1
-          }
-          out
-        }
-      si += 1
-    }
-    Iterator.tabulate(c.num_rows) { r =>
-      val vals = new Array[Any](nSel)
-      var k = 0
-      while (k < nSel) { vals(k) = cols(k)(r); k += 1 }
-      new GenericInternalRow(vals): InternalRow
-    }
   }
 }

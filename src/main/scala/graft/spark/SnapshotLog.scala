@@ -285,41 +285,48 @@ object SnapshotLog {
     * (doc_id, del_seq) — del_seq is each delete's effect version, which
     * scopes it to data files STRICTLY older than itself. */
   def readDeletes(spark: SparkSession, dir: String,
-                  version: Option[Int] = None): Option[DataFrame] = {
-    val snap = resolve(spark, dir, version)
+                  version: Option[Int] = None): Option[DataFrame] =
+    deletesOf(spark, dir, resolve(spark, dir, version))
+
+  private def deletesOf(spark: SparkSession, dir: String,
+                        snap: Snapshot): Option[DataFrame] =
     if (snap.deletes.isEmpty) None
     else Some(snap.deletes.zip(snap.deleteSeqs).map { case (f, s) =>
       spark.read.parquet(s"$dir/$f")
         .select(col("doc_id"), lit(s).as("del_seq"))
     }.reduce(_ unionAll _))
+
+  /** Decoded token rows of `files` (each paired with its added-version)
+    * minus the applicable equality deletes (broadcast anti-join — delete
+    * sets are mutation-sized; compaction folds them away). "Applicable"
+    * is sequence-scoped: a delete at version s hides rows only from files
+    * added BEFORE s, so an upsert's own rows survive the delete it
+    * committed alongside them. Files sharing an added-version decode as
+    * one branch; branch count = appends since the last compaction. The
+    * decode is the columnar `decodeDF`, so a count or a projection
+    * decodes only the streams it needs. */
+  private def liveRows(spark: SparkSession, dir: String, files: Seq[(String, Int)],
+                       deletes: Option[DataFrame]): Dataset[TokenRow] = {
+    import spark.implicits._
+    def decodeFiles(fs: Seq[String]) = EncodePipeline.decodeDF(
+      spark.read.parquet(fs.map(f => s"$dir/$f"): _*).as[EncodedChunk])
+    (deletes match {
+      case None => decodeFiles(files.map(_._1))
+      case Some(del) =>
+        files.groupBy(_._2).toSeq.sortBy(_._1).map { case (added, fs) =>
+          val applicable = del.filter(col("del_seq") > added).select(col("doc_id"))
+          decodeFiles(fs.map(_._1)).join(broadcast(applicable), Seq("doc_id"), "left_anti")
+        }.reduce(_ unionAll _)
+    }).as[TokenRow]
   }
 
   /** Merge-on-read row view AS OF a snapshot: decoded token rows minus
-    * the applicable equality deletes (broadcast anti-join — delete sets
-    * are mutation-sized; compaction folds them away). "Applicable" is
-    * sequence-scoped: a delete at version s hides rows only from files
-    * added BEFORE s, so an upsert's own rows survive the delete it
-    * committed alongside them. Files sharing an added-version decode as
-    * one branch; branch count = appends since the last compaction. */
+    * the equality deletes that apply to them (see [[liveRows]]). */
   def readRows(spark: SparkSession, dir: String,
                version: Option[Int] = None): Dataset[TokenRow] = {
-    import spark.implicits._
     val snap = resolve(spark, dir, version)
     require(snap.files.nonEmpty, s"snapshot v${snap.version} at $dir is empty")
-    def decodeFiles(fs: Seq[String]) = EncodePipeline.decode(
-      spark.read.parquet(fs.map(f => s"$dir/$f"): _*).as[EncodedChunk])
-    readDeletes(spark, dir, Some(snap.version)) match {
-      case None => decodeFiles(snap.files)
-      case Some(del) =>
-        snap.files.zip(snap.fileAdded).groupBy(_._2).toSeq.sortBy(_._1)
-          .map { case (added, fs) =>
-            val applicable = del.filter(col("del_seq") > added)
-              .select(col("doc_id"))
-            decodeFiles(fs.map(_._1))
-              .join(broadcast(applicable), Seq("doc_id"), "left_anti")
-              .select("doc_id", "tokens", "n_tok", "source").as[TokenRow]
-          }.reduce(_ unionAll _)
-    }
+    liveRows(spark, dir, snap.files.zip(snap.fileAdded), deletesOf(spark, dir, snap))
   }
 
   /** Incremental read (CDC-style consumption): the rows APPENDED between
@@ -353,24 +360,8 @@ object SnapshotLog {
     val to = snapshot(spark, dir, toVersion)
     val fresh = to.files.zip(to.fileAdded)
       .filter { case (_, a) => a > fromVersion && a <= toVersion }
-    if (fresh.isEmpty)
-      return spark.emptyDataset[TokenRow]
-    val del = if (to.deletes.isEmpty) None else Some(
-      to.deletes.zip(to.deleteSeqs).map { case (f, s) =>
-        spark.read.parquet(s"$dir/$f")
-          .select(col("doc_id"), lit(s).as("del_seq"))
-      }.reduce(_ unionAll _))
-    fresh.groupBy(_._2).toSeq.sortBy(_._1).map { case (added, fs) =>
-      val rows = EncodePipeline.decode(
-        spark.read.parquet(fs.map(f => s"$dir/${f._1}"): _*).as[EncodedChunk])
-      del match {
-        case None => rows
-        case Some(d) =>
-          rows.join(broadcast(d.filter(col("del_seq") > added)
-              .select(col("doc_id"))), Seq("doc_id"), "left_anti")
-            .select("doc_id", "tokens", "n_tok", "source").as[TokenRow]
-      }
-    }.reduce(_ unionAll _)
+    if (fresh.isEmpty) spark.emptyDataset[TokenRow]
+    else liveRows(spark, dir, fresh, deletesOf(spark, dir, to))
   }
 
   /** MERGE-style upsert, one atomic commit: the incoming rows are
@@ -430,7 +421,11 @@ object SnapshotLog {
     val matched = obs.get("n").asInstanceOf[Long]
     val (hfs, root) = fs(spark, dir)
     if (matched == 0L) { // no empty commits
-      hfs.delete(new Path(root, sub), true)
+      // an aborted removal must not leave a stray d-vNNNNN dir unannounced
+      val stray = new Path(root, sub)
+      if (!hfs.delete(stray, true) && hfs.exists(stray))
+        throw new java.io.IOException(
+          s"deleteWhere at $dir matched no rows but could not remove $stray")
       return cur
     }
     val written = listParquet(hfs, root, sub).keys.toSeq.sorted

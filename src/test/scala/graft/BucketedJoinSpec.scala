@@ -8,13 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * makes every later join of those tables exchange-free — the shuffle is
   * paid ONCE at layout time (the 100-TB fact-table pattern). The plan
   * assertion is the point: no Exchange anywhere in the joined plan. */
-class BucketedJoinSpec extends AnyFunSuite {
+class BucketedJoinSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = SparkTestSession.spark
 
   test("join of two bucketed tables has no exchange and exact results") {
     import spark.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-bkt-spec").toString
+    val base = tmpDir("bkt-spec")
     val left = (1 to 5000).map(i => (i.toLong % 700, s"l$i")).toDF("k", "lv")
     val right = (1 to 900).map(i => (i.toLong, s"r$i")).toDF("k2", "rv")
     spark.sql("DROP TABLE IF EXISTS bkt_spec_l")

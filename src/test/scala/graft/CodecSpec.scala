@@ -66,18 +66,6 @@ class CodecSpec extends AnyFunSuite {
     }
   }
 
-  test("legacy BIT_PACKED levels round-trip (E3)") {
-    for (bw <- 1 to 8; n <- Seq(1, 7, 8, 9, 100)) {
-      val r = rng(bw * 100 + n)
-      val src = Array.fill(n)(r.nextInt(1 << bw))
-      val out = new ByteWriter()
-      BitPack.LegacyLevels.pack(src, 0, n, bw, out)
-      val dst = new Array[Int](n)
-      BitPack.LegacyLevels.unpack(out.toArray, 0, bw, dst, 0, n)
-      assert(dst.toSeq == src.toSeq, s"bw=$bw n=$n")
-    }
-  }
-
   test("RLE round-trip (levels + index shapes)") {
     val levelVectors = Seq(
       Array(0, 1, 0, 2, 3, 4, 5, 6, 127, 127, 0),

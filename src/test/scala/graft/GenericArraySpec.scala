@@ -9,11 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * element-level nulls (the reference encodes ANY repeated leaf with full
   * rep/def-level null support — column_buffer.go:421-454), plus the
   * schema-evolving table merge (merge.go:20-72, convert.go:348-443). */
-class GenericArraySpec extends AnyFunSuite {
+class GenericArraySpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = SparkTestSession.spark
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
 
   test("array<bigint> and array<double> round-trip (both decode paths)") {
     val df = spark.range(3000).select(
@@ -23,8 +21,8 @@ class GenericArraySpec extends AnyFunSuite {
       array(col("id") * 0.5, lit(math.Pi) * col("id"),
         lit(Double.MinPositiveValue)).as("dbls"))
       .coalesce(1).sortWithinPartitions("k")
-    val dir = tmp("graft-arr64")
-    GenericEncode.write(GenericEncode.encode(df, rowsPerChunk = 512), s"$dir/t")
+    val dir = tmpDir("arr64")
+    GenericEncode.encodeWrite(df, s"$dir/t", rowsPerChunk = 512)
     // columnar path
     val back = GenericEncode.readTable(spark, s"$dir/t").orderBy("k").collect()
     assert(back.length == 3000)
@@ -32,7 +30,7 @@ class GenericArraySpec extends AnyFunSuite {
     assert(r.getSeq[Long](1) ==
       Seq(2999L * 1000000000L, 2999L * -7L, Long.MaxValue - 2999L))
     assert(r.getSeq[Double](2) == Seq(2999 * 0.5, math.Pi * 2999, Double.MinPositiveValue))
-    // row path (seekRows decodes through decodeChunkInternal)
+    // seek path (seekRows copies the covering rows out of the decoded batches)
     val seek = GenericEncode.seekRows(spark,
       GenericEncode.encode(df, rowsPerChunk = 512), 1000, 5)
       .collect().sortBy(_.getInt(0))
@@ -54,8 +52,8 @@ class GenericArraySpec extends AnyFunSuite {
       array(when(col("id") % 4 === 0, lit(null))
         .otherwise(concat(lit("s-"), col("id"))).cast("string"), lit("tail")).as("as"))
       .coalesce(1).sortWithinPartitions("k")
-    val dir = tmp("graft-arrnull")
-    GenericEncode.write(GenericEncode.encode(df, rowsPerChunk = 256), s"$dir/t")
+    val dir = tmpDir("arrnull")
+    GenericEncode.encodeWrite(df, s"$dir/t", rowsPerChunk = 256)
     val back = GenericEncode.readTable(spark, s"$dir/t").orderBy("k")
     // spot-check null positions and values on both a null-bearing and a
     // dense row, via the columnar reader
@@ -96,9 +94,9 @@ class GenericArraySpec extends AnyFunSuite {
       (col("id") * 2).cast("int").as("extra"),
       col("id").cast("bigint").as("doc_id"),
       (col("id") * 0.5).cast("double").as("score"))
-    val d1 = tmp("graft-ev1"); val d2 = tmp("graft-ev2"); val out = tmp("graft-evout")
-    GenericEncode.write(GenericEncode.encode(v1), s"$d1/t")
-    GenericEncode.write(GenericEncode.encode(v2), s"$d2/t")
+    val d1 = tmpDir("ev1"); val d2 = tmpDir("ev2"); val out = tmpDir("evout")
+    GenericEncode.encodeWrite(v1, s"$d1/t")
+    GenericEncode.encodeWrite(v2, s"$d2/t")
     val merged = GenericEncode.mergeTables(spark, Seq(s"$d1/t", s"$d2/t"), s"$out/t")
     // union schema: first-appearance order, widened, evolution-nullable
     assert(merged.schema.fieldNames.toSeq == Seq("doc_id", "score", "tag", "extra"))
@@ -114,10 +112,10 @@ class GenericArraySpec extends AnyFunSuite {
     assert(rows(7).getDouble(1) == 3.5)
     // incompatible same-name types fail loudly, not coerce silently
     val bad = spark.range(5).select(col("id").cast("bigint").as("score"))
-    val d3 = tmp("graft-ev3")
-    GenericEncode.write(GenericEncode.encode(bad.toDF()), s"$d3/t")
+    val d3 = tmpDir("ev3")
+    GenericEncode.encodeWrite(bad.toDF(), s"$d3/t")
     val ex = intercept[Exception] {
-      GenericEncode.mergeTables(spark, Seq(s"$d1/t", s"$d3/t"), tmp("graft-evx") + "/t")
+      GenericEncode.mergeTables(spark, Seq(s"$d1/t", s"$d3/t"), tmpDir("evx") + "/t")
     }
     assert(ex.getMessage.contains("incompatible"), ex.getMessage)
   }

@@ -10,11 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * arrays (the rep/def-level analog; reference column_buffer.go:421-454
   * encodes any repeated group) and decode rebuilds elements, null
   * elements, null inner structs, and null arrays exactly. */
-class GenericNestedArraySpec extends AnyFunSuite {
+class GenericNestedArraySpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = SparkTestSession.spark
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
 
   private def srcDf = spark.range(2000).select(
     col("id").cast("int").as("k"),
@@ -33,8 +31,8 @@ class GenericNestedArraySpec extends AnyFunSuite {
 
   test("array<struct> round-trips exactly, incl. null array/element/inner") {
     val df = srcDf.coalesce(2)
-    val dir = tmp("graft-arrstruct")
-    GenericEncode.writeColumnar(GenericEncode.encode(df, rowsPerChunk = 256), s"$dir/t")
+    val dir = tmpDir("arrstruct")
+    GenericEncode.encodeWrite(df, s"$dir/t", rowsPerChunk = 256)
     val back = GenericEncode.readTable(spark, s"$dir/t")
     assert(back.schema("spans").dataType == df.schema("spans").dataType ||
       back.schema("spans").dataType.simpleString == df.schema("spans").dataType.simpleString,
@@ -47,8 +45,8 @@ class GenericNestedArraySpec extends AnyFunSuite {
 
   test("explode over the decoded repeated group matches the source explode") {
     val df = srcDf
-    val dir = tmp("graft-arrstruct-x")
-    GenericEncode.writeColumnar(GenericEncode.encode(df, rowsPerChunk = 512), s"$dir/t")
+    val dir = tmpDir("arrstruct-x")
+    GenericEncode.encodeWrite(df, s"$dir/t", rowsPerChunk = 512)
     def flat(d: org.apache.spark.sql.DataFrame) = d
       .select(col("k"), posexplode_outer(col("spans")))
       .select(col("k"), col("pos"), col("col.off").as("off"),
@@ -67,8 +65,8 @@ class GenericNestedArraySpec extends AnyFunSuite {
         col("id").as("n"),
         expr("transform(sequence(0, CAST(id % 3 AS INT)), i -> named_struct('a', i * 1))")
           .as("items")).as("wrap"))
-    val dir = tmp("graft-arrstruct-n")
-    GenericEncode.writeColumnar(GenericEncode.encode(df, rowsPerChunk = 128), s"$dir/t")
+    val dir = tmpDir("arrstruct-n")
+    GenericEncode.encodeWrite(df, s"$dir/t", rowsPerChunk = 128)
     val got = GenericEncode.readTable(spark, s"$dir/t").orderBy("k").collect()
     val want = df.orderBy("k").collect()
     assert(got.length == want.length)

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Per-column stats, blooms, CRCs, and projected decode on the generic
   * (any-schema) chunk format — reference column_index.go:259-272 +
   * bloom.go:16-70 applied to arbitrary columns. */
-class GenericStatsSpec extends AnyFunSuite {
+class GenericStatsSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = SparkTestSession.spark
 
   /** 10k rows sorted by k, cut into ~20 chunks of 512 — tight per-chunk
@@ -154,8 +154,8 @@ class GenericStatsSpec extends AnyFunSuite {
         c.copy(cols_bin = c.cols_bin.map(_ => Array[Byte](9)))
       else c
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-gpush").toString
-    GenericEncode.write(corrupted, s"$dir/t")
+    val dir = tmpDir("gpush")
+    GenericEncode.writeColumnarN(corrupted, s"$dir/t", 4)
     // corruption is real: an unfiltered read that touches the payload
     // fails loudly (count() alone prunes to metadata-only by design)
     intercept[Exception] {
@@ -185,11 +185,9 @@ class GenericStatsSpec extends AnyFunSuite {
   }
 
   test("columnar table layout: projected reads skip unselected columns' BYTES") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-gcol").toString
-    // the DEFAULT sink IS the columnar layout (round-4 judge item 7)
-    GenericEncode.write(chunks, s"$dir/t")
-    // full round-trip parity with the array-layout decode, via the
-    // auto-detecting default reader
+    val dir = tmpDir("gcol")
+    GenericEncode.writeColumnarN(chunks, s"$dir/t", 4)
+    // full round-trip through the table reader
     val full = GenericEncode.readTable(spark, s"$dir/t")
       .orderBy("k").collect()
     assert(full.length == 10000 && full(123).getInt(0) == 123)
@@ -208,12 +206,14 @@ class GenericStatsSpec extends AnyFunSuite {
     auto.count()
     val autoRead = auto.queryExecution.executedPlan.toString.split("ReadSchema:").last
     assert(autoRead.contains("bin_2") && !autoRead.contains("bin_1"), autoRead.take(500))
-    // legacy single-array layout stays readable through the same reader
+    // the retired single-array cols_bin layout is refused up front, with
+    // a message naming the layout and the way out
     chunks.toDF().write.mode("overwrite").parquet(s"$dir/legacy")
-    val legacy = GenericEncode.readTable(spark, s"$dir/legacy", Seq("k", "name"))
-      .orderBy("k").collect()
-    assert(legacy.length == 10000 && legacy(42).getInt(0) == 42 &&
-      legacy(42).getString(1) == "key-00042")
+    val ex = intercept[IllegalArgumentException] {
+      GenericEncode.readTable(spark, s"$dir/legacy", Seq("k", "name"))
+    }
+    assert(ex.getMessage.contains("cols_bin") && ex.getMessage.contains("re-encode"),
+      ex.getMessage)
   }
 
   test("seekRows: generic row-offset read touches only covering chunks") {
@@ -241,8 +241,8 @@ class GenericStatsSpec extends AnyFunSuite {
       (1 to 57).map(i => (math.sin(i.toDouble) * 1000).toFloat)
     val df = vals.zipWithIndex.map { case (f, i) => (i, f) }.toDF("id", "x")
       .coalesce(1).sortWithinPartitions("x")
-    val dir = java.nio.file.Files.createTempDirectory("graft-float").toString
-    GenericEncode.write(GenericEncode.encode(df, rowsPerChunk = 8), s"$dir/t")
+    val dir = tmpDir("float")
+    GenericEncode.encodeWrite(df, s"$dir/t", rowsPerChunk = 8)
     val t = () => GenericEncode.readTable(spark, s"$dir/t")
     vals.distinct.foreach { f =>
       val got = t().filter(col("x") === f).count()
@@ -265,8 +265,8 @@ class GenericStatsSpec extends AnyFunSuite {
       when(col("id") % 10 === 0, lit(Float.NaN))
         .otherwise((col("id").cast("double") / 10).cast("float")).as("f"))
       .coalesce(1).sortWithinPartitions("k")
-    val dir = java.nio.file.Files.createTempDirectory("graft-nan").toString
-    GenericEncode.write(GenericEncode.encode(df, rowsPerChunk = 10), s"$dir/t")
+    val dir = tmpDir("nan")
+    GenericEncode.encodeWrite(df, s"$dir/t", rowsPerChunk = 10)
     // every non-NaN value is <= 9.9, so `> 9.9` matches EXACTLY the 10 NaN
     // rows — which live in chunks whose finite max is far below the bound
     // (a finite max stat would prune them; NaN-seen chunks track no max)
@@ -281,7 +281,7 @@ class GenericStatsSpec extends AnyFunSuite {
 
   test("corrupted bloom bytes fail the probe loudly (no silent chunk drop)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-bloomcrc").toString
+    val dir = tmpDir("bloomcrc")
     // flip one bit inside every bloom's block payload (past the 5-byte
     // header) — a false NEGATIVE is the corruption pruning can't tolerate
     val corrupted = chunks.map { c =>
@@ -290,7 +290,7 @@ class GenericStatsSpec extends AnyFunSuite {
       }
       c.copy(col_blooms = blooms)
     }
-    GenericEncode.write(corrupted, s"$dir/t")
+    GenericEncode.writeColumnarN(corrupted, s"$dir/t", 4)
     val ex = intercept[Exception] {
       GenericEncode.readTable(spark, s"$dir/t")
         .filter(col("name") === "key-04321").count()

@@ -9,12 +9,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * has nothing to score and must be ABSENT, not zero/null — the driver
   * oracle's GROUP BY has the same convention).
   */
-class PerplexitySpec extends AnyFunSuite {
+class PerplexitySpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
 
   private def docsDir(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ppl-").toString
+    val dir = tmpDir("ppl-")
     rows.map { case (id, t) => (id, t, "en", "web", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

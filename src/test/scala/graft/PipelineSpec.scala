@@ -3,7 +3,6 @@ package graft
 import graft.spark._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 object SparkTestSession {
   lazy val spark: SparkSession = {
@@ -19,7 +18,7 @@ object SparkTestSession {
   }
 }
 
-class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PipelineSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = SparkTestSession.spark
 
   test("token generator is deterministic and partition-independent") {
@@ -35,9 +34,10 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("encode → decode round-trip is exact (per-row token-array equality)") {
+    import spark.implicits._
     val src = TokenTableGen.generate(spark, 5000, 8)
     val chunks = EncodePipeline.encode(src, numParts = 6, tokensPerChunk = 64 * 1024)
-    val decoded = EncodePipeline.decode(chunks)
+    val decoded = EncodePipeline.decodeDF(chunks).as[TokenRow]
     assert(EncodePipeline.verifyRoundTrip(src, decoded) == 0L)
   }
 
@@ -79,12 +79,13 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val mean = perPart.sum.toDouble / perPart.length
     assert(perPart.max < mean * 1.8, s"mass skew survived: max=${perPart.max} mean=$mean parts=${perPart.mkString(",")}")
     // and the round-trip still holds under skew
-    assert(EncodePipeline.verifyRoundTrip(rows, EncodePipeline.decode(chunks)) == 0L)
+    assert(EncodePipeline.verifyRoundTrip(rows,
+      EncodePipeline.decodeDF(chunks).as[TokenRow]) == 0L)
   }
 
   test("checkpoint metrics carry lineage: doc_id range, wall_ms, attempt") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-lineage").toString
+    val dir = tmpDir("lineage")
     val src = TokenTableGen.generate(spark, 2000, 4)
     val m = EncodePipeline.encodeCheckpointed(spark, src, 4, dir, tokensPerChunk = 64 * 1024)
     val row = m.orderBy("part_id").head()
@@ -97,7 +98,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("streaming ingest: micro-batch encode appends decodable chunks") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
+    val dir = tmpDir("stream")
     val ms = MemoryStream[TokenRow](spark)
     val rows1 = (0 until 500).map(i => TokenTableGen.genRow(i.toLong))
     val rows2 = (500 until 1000).map(i => TokenTableGen.genRow(i.toLong))
@@ -110,7 +111,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       q.processAllAvailable()
     } finally q.stop()
     val chunks = spark.read.parquet(s"$dir/chunks").as[EncodedChunk]
-    val decoded = EncodePipeline.decode(chunks).collect().sortBy(_.doc_id)
+    val decoded = EncodePipeline.decodeDF(chunks).as[TokenRow].collect().sortBy(_.doc_id)
     val expected = (rows1 ++ rows2).sortBy(_.doc_id)
     assert(decoded.length == 1000)
     assert(decoded.zip(expected).forall { case (a, b) =>
@@ -120,13 +121,13 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming batch replay is idempotent (no duplicate chunks)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-replay").toString
+    val dir = tmpDir("stream-replay")
     val rows = spark.createDataset((0 until 400).map(i => TokenTableGen.genRow(i.toLong)))
     // foreachBatch is at-least-once: simulate a crash-replay of batch 7
     graft.streaming.StreamingEncode.writeBatch(rows, 7L, s"$dir/chunks", 32 * 1024, 0)
     graft.streaming.StreamingEncode.writeBatch(rows, 7L, s"$dir/chunks", 32 * 1024, 0)
     val chunks = spark.read.parquet(s"$dir/chunks").as[EncodedChunk]
-    val decoded = EncodePipeline.decode(chunks)
+    val decoded = EncodePipeline.decodeDF(chunks).as[TokenRow]
     assert(decoded.count() == 400, "replayed batch must overwrite, not append")
     assert(EncodePipeline.verifyRoundTrip(rows, decoded) == 0L)
   }
@@ -134,8 +135,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("aligned encode round-trips without an exchange") {
     import spark.implicits._
     val src = TokenTableGen.generate(spark, 3000, 5)
-    val decoded = EncodePipeline.decode(
-      EncodePipeline.encodeAligned(src, tokensPerChunk = 64 * 1024))
+    val decoded = EncodePipeline.decodeDF(
+      EncodePipeline.encodeAligned(src, tokensPerChunk = 64 * 1024)).as[TokenRow]
     assert(EncodePipeline.verifyRoundTrip(src, decoded) == 0L)
   }
 
@@ -196,13 +197,14 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       b(b.length / 2) = (b(b.length / 2) ^ 0x40).toByte
       b
     })
-    val ex = intercept[Exception](EncodePipeline.decodeChunk(corrupted).toArray)
+    val ex = intercept[Exception](
+      EncodePipeline.decodeChunkRows(corrupted, 0, corrupted.num_rows).toArray)
     assert(ex.getMessage.contains("CRC"), ex.getMessage)
   }
 
   test("compaction merges incremental chunk tables into one layout") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-compact").toString
+    val base = tmpDir("compact")
     // two disjoint incremental runs
     val srcA = TokenTableGen.generate(spark, 1500, 3)
     val srcB = spark.range(1500, 3000, 1, 3).as[Long].map(TokenTableGen.genRow)
@@ -214,7 +216,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       tokensPerChunk = 64 * 1024)
     val merged = spark.read.parquet(s"$base/merged/chunks").as[EncodedChunk]
     val full = TokenTableGen.generate(spark, 3000, 4)
-    assert(EncodePipeline.verifyRoundTrip(full, EncodePipeline.decode(merged)) == 0L)
+    assert(EncodePipeline.verifyRoundTrip(full,
+      EncodePipeline.decodeDF(merged).as[TokenRow]) == 0L)
     // merged layout is globally range-ordered: partition doc_id ranges
     // must not overlap
     val ranges = spark.read.parquet(s"$base/merged/metrics")
@@ -226,7 +229,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("decodeDF (InternalRow path) matches typed decode exactly") {
+  test("decodeDF (InternalRow path) matches the source rows exactly, nulls included") {
     import spark.implicits._
     val rows = spark.range(0, 2000, 1, 4).as[Long].map { i =>
       val tokens = if (i % 7 == 0) null else Array.tabulate(12)(k => (i + k).toInt)
@@ -234,10 +237,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       TokenRow(f"doc/$i%012d", tokens, if (tokens == null) -1 else tokens.length, source)
     }
     val chunks = EncodePipeline.encode(rows, 4, tokensPerChunk = 4096).cache()
-    val typed = EncodePipeline.decode(chunks)
     val df = EncodePipeline.decodeDF(chunks)
-    import spark.implicits._
-    assert(EncodePipeline.verifyRoundTrip(typed, df.as[TokenRow]) == 0L)
+    assert(EncodePipeline.verifyRoundTrip(rows, df.as[TokenRow]) == 0L)
     assert(df.count() == 2000)
     chunks.unpersist()
   }
@@ -255,7 +256,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(agg.getLong(0) == (0 until 3000).count(_ % 7 == 0))
     assert(agg.getLong(1) == (0 until 3000).count(_ % 5 == 0))
     assert(agg.getLong(2) == 3000L)
-    assert(EncodePipeline.verifyRoundTrip(rows, EncodePipeline.decode(chunks)) == 0L)
+    assert(EncodePipeline.verifyRoundTrip(rows,
+      EncodePipeline.decodeDF(chunks).as[TokenRow]) == 0L)
     chunks.unpersist()
   }
 
@@ -263,26 +265,27 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val rows = spark.range(0, 200, 1, 2).as[Long]
       .map(i => TokenRow(f"doc/$i%012d", null, -1, null))
-    val decoded = EncodePipeline.decode(EncodePipeline.encode(rows, 2))
+    val decoded = EncodePipeline.decodeDF(EncodePipeline.encode(rows, 2)).as[TokenRow]
     assert(EncodePipeline.verifyRoundTrip(rows, decoded) == 0L)
   }
 
   test("checkpoint metadata goes through Hadoop FS: file: URI works end-to-end") {
     import spark.implicits._
-    val dir = "file:" + java.nio.file.Files.createTempDirectory("graft-ckpt-uri").toString
+    val dir = "file:" + tmpDir("ckpt-uri")
     val src = TokenTableGen.generate(spark, 1500, 4)
     val m1 = EncodePipeline.encodeCheckpointed(spark, src, 4, dir, tokensPerChunk = 64 * 1024)
     assert(m1.selectExpr("sum(num_rows)").head().getLong(0) == 1500L)
     // resume over the same URI: nothing re-encodes, attempt stays 1
     val m2 = EncodePipeline.encodeCheckpointed(spark, src, 4, dir, tokensPerChunk = 64 * 1024)
     assert(m2.selectExpr("max(attempt)").head().getInt(0) == 1)
-    val decoded = EncodePipeline.decode(spark.read.parquet(s"$dir/chunks").as[EncodedChunk])
+    val decoded = EncodePipeline.decodeDF(
+      spark.read.parquet(s"$dir/chunks").as[EncodedChunk]).as[TokenRow]
     assert(EncodePipeline.verifyRoundTrip(src, decoded) == 0L)
   }
 
   test("metrics swap window: a crash leaving only .staging still resumes") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-crash").toString
+    val dir = tmpDir("ckpt-crash")
     val src = TokenTableGen.generate(spark, 1500, 4)
     EncodePipeline.encodeCheckpointed(spark, src, 4, dir, tokensPerChunk = 64 * 1024)
     // simulate dying between "metrics -> old" and "staging -> metrics":
@@ -299,7 +302,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("FORMAT_VERSION marker: mismatched or unversioned checkpoints fail explicitly") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-ver").toString
+    val dir = tmpDir("ckpt-ver")
     val src = TokenTableGen.generate(spark, 800, 2)
     EncodePipeline.encodeCheckpointed(spark, src, 2, dir, tokensPerChunk = 64 * 1024)
     val vf = java.nio.file.Paths.get(dir, "FORMAT_VERSION")
@@ -323,7 +326,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(m3.selectExpr("sum(num_rows)").head().getLong(0) == 800L)
     // unversioned dir whose chunk schema does NOT match → honest
     // "version unknown" error (not a claim about which round wrote it)
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-ckpt-ver2").toString
+    val dir2 = tmpDir("ckpt-ver2")
     spark.range(5).toDF("x").write.parquet(s"$dir2/chunks")
     val exOld = intercept[IllegalArgumentException] {
       EncodePipeline.encodeCheckpointed(spark, src, 2, dir2, tokensPerChunk = 64 * 1024)
@@ -494,7 +497,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val chunks = EncodePipeline.encode(src, 4, tokensPerChunk = 1 << 20).cache()
     // canonical order reference: full decode sorted by (part_id, chunk, row)
     val metas = chunks.collect().sortBy(c => (c.part_id, c.chunk_id))
-    val fullOrdered = metas.flatMap(c => EncodePipeline.decodeChunk(c).toSeq)
+    val fullOrdered = metas.flatMap(c => EncodePipeline.decodeChunkRows(c, 0, c.num_rows).toSeq)
     for (start <- Seq(0L, 17L, 1999L, 3990L)) {
       val got = EncodePipeline.seekToRows(chunks, start, 10).collect()
         .sortBy(_.doc_id)
@@ -541,7 +544,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("sorted-run compaction re-encodes only overlapping chunks") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, md5}
-    val base = java.nio.file.Files.createTempDirectory("graft-compact-sorted").toString
+    val base = tmpDir("compact-sorted")
     def doc(i: Long, suffix: String = "") = f"doc/$i%012d$suffix"
     def rows(range: Range, suffix: String = "") =
       spark.createDataset(range.map(i =>
@@ -558,7 +561,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       tokensPerChunk = 8 * 1024)
     // content is exact
     val full = a.union(b).union(c)
-    val decoded = EncodePipeline.decode(out.as[EncodedChunk])
+    val decoded = EncodePipeline.decodeDF(out.as[EncodedChunk]).as[TokenRow]
     assert(EncodePipeline.verifyRoundTrip(full, decoded) == 0L)
     // non-overlapping chunks passed through byte-identical (>= 2x less
     // encode work: far more than half the chunks are untouched)
@@ -584,7 +587,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("bin-pack compaction coalesces tiny disjoint runs; big chunks pass through") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, md5}
-    val base = java.nio.file.Files.createTempDirectory("graft-binpack").toString
+    val base = tmpDir("binpack")
     def rows(range: Range) =
       spark.createDataset(range.map(i =>
         TokenRow(f"doc/$i%012d", Array.tabulate(8)(k => i + k), 8, "web")))
@@ -610,7 +613,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // rows are exact
     val full = (0 until 8).map(r => rows(600 + r * 25 until 600 + (r + 1) * 25))
       .reduce(_ union _).union(rows(bigRange))
-    val decoded = EncodePipeline.decode(out.as[EncodedChunk])
+    val decoded = EncodePipeline.decodeDF(out.as[EncodedChunk]).as[TokenRow]
     assert(EncodePipeline.verifyRoundTrip(full, decoded) == 0L)
     // tiny chunks collapsed: packed tiny region ≈ 1600 tok / 1024 ≈ 2 bins
     val packedCount = out.count()
@@ -632,7 +635,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("bin-pack dedupes and keeps overlap semantics when runs overlap") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-binpack-dd").toString
+    val base = tmpDir("binpack-dd")
     def rows(range: Range) =
       spark.createDataset(range.map(i =>
         TokenRow(f"doc/$i%012d", Array.tabulate(8)(k => i + k), 8, "web")))
@@ -644,7 +647,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val out = EncodePipeline.compactBinPack(
       spark, Seq(s"$base/a", s"$base/b"), s"$base/packed",
       tokensPerChunk = 512, dropDuplicates = true)
-    val decoded = EncodePipeline.decode(out.as[EncodedChunk])
+    val decoded = EncodePipeline.decodeDF(out.as[EncodedChunk]).as[TokenRow]
     assert(EncodePipeline.verifyRoundTrip(rows(0 until 100), decoded) == 0L)
   }
 
@@ -655,7 +658,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // tight intervals aligned with the doc ranges
     val rows = spark.createDataset((0 until 2000).map(i =>
       TokenRow(f"doc/$i%06d", Array(i / 100), 1, "web")))
-    val base = java.nio.file.Files.createTempDirectory("graft-tok-push").toString
+    val base = tmpDir("tok-push")
     // corrupt every chunk whose doc range starts past doc/001000: reads
     // succeed only when pruning skips those chunks entirely
     EncodePipeline.encode(rows, 4, tokensPerChunk = 256)
@@ -699,7 +702,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("compaction dedupe drops duplicate doc_ids; pass-through chunks stay byte-identical") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, md5}
-    val base = java.nio.file.Files.createTempDirectory("graft-compact-dd").toString
+    val base = tmpDir("compact-dd")
     def doc(i: Long) = f"doc/$i%012d"
     def rows(range: Range) =
       spark.createDataset(range.map(i =>
@@ -714,7 +717,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark, Seq(s"$base/runA", s"$base/runB", s"$base/runC"), s"$base/merged",
       tokensPerChunk = 8 * 1024, dropDuplicates = true)
     // exactly the deduped union: 2000 rows, each doc_id once
-    val decoded = EncodePipeline.decode(out.as[EncodedChunk])
+    val decoded = EncodePipeline.decodeDF(out.as[EncodedChunk]).as[TokenRow]
     assert(EncodePipeline.verifyRoundTrip(a.union(b), decoded) == 0L)
     // chunks away from the overlap pass through byte-identical
     val inHashes = Seq("runA", "runB", "runC")
@@ -729,12 +732,12 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark, Seq(s"$base/runA", s"$base/runB"), s"$base/merged2",
       tokensPerChunk = 8 * 1024, dropDuplicates = true)
     assert(EncodePipeline.verifyRoundTrip(
-      a.union(b), EncodePipeline.decode(out2.as[EncodedChunk])) == 0L)
+      a.union(b), EncodePipeline.decodeDF(out2.as[EncodedChunk]).as[TokenRow]) == 0L)
   }
 
   test("checkpointed encode resumes idempotently") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = tmpDir("ckpt")
     val src = TokenTableGen.generate(spark, 3000, 4)
     val m1 = EncodePipeline.encodeCheckpointed(spark, src, 4, dir, tokensPerChunk = 64 * 1024)
     val rows1 = m1.selectExpr("sum(num_rows)").head().getLong(0)
@@ -745,7 +748,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows2 == 3000L)
     // decoded output matches source exactly
     val chunks = spark.read.parquet(s"$dir/chunks").as[EncodedChunk]
-    val decoded = EncodePipeline.decode(chunks)
+    val decoded = EncodePipeline.decodeDF(chunks).as[TokenRow]
     assert(EncodePipeline.verifyRoundTrip(src, decoded) == 0L)
   }
 }

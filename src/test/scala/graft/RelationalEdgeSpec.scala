@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * instant as the purchase. Both must agree with the DuckDB oracle's
   * conventions (`>=` break, `>=` as-of bound).
   */
-class RelationalEdgeSpec extends AnyFunSuite {
+class RelationalEdgeSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = SparkTestSession.spark
 
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
@@ -20,7 +20,7 @@ class RelationalEdgeSpec extends AnyFunSuite {
     * queries run through their real entry points. */
   private def eventsDir(rows: Seq[(Long, java.sql.Timestamp, Long, String, Double, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-reledge-").toString
+    val dir = tmpDir("reledge-")
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     dir

@@ -9,13 +9,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * (moved out of the query hot path — the queries keep an O(1) planted-
   * needle gate) and the directory-partitioned index layout. Runs on a
   * self-synthesized embeddings table, no external data. */
-class SimilaritySpec extends AnyFunSuite {
+class SimilaritySpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = SparkTestSession.spark
 
   /** Deterministic 64-dim embeddings parquet in a temp dir shaped like
     * the driver's table (vec_id, embedding: array<float>). */
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-simspec").toString
+    val d = tmpDir("simspec")
     val df = spark.range(600).select(
       col("id").as("vec_id"),
       transform(sequence(lit(0), lit(63)),

@@ -10,14 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * snapshot's visible row set never changes (later appends invisible,
   * later compactions can't yank files), versions are monotone, and
   * expiry deletes exactly the files no retained snapshot can reach. */
-class SnapshotSpec extends AnyFunSuite {
+class SnapshotSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = SparkTestSession.spark
 
-  private def freshDir(tag: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft-snap-$tag").toFile
-    d.delete()
-    d.getAbsolutePath
-  }
+  /** A path that does not exist yet, inside a directory the spec removes. */
+  private def freshDir(tag: String): String = s"${tmpDir(s"snap-$tag")}/t"
 
   private def writeSlice(dir: String, rows: org.apache.spark.sql.Dataset[TokenRow],
                          mode: String = "append"): Unit =
@@ -28,9 +25,9 @@ class SnapshotSpec extends AnyFunSuite {
 
   private def docIdsAt(dir: String, v: Option[Int]): Set[String] = {
     import spark.implicits._
-    EncodePipeline.decode(
-        SnapshotLog.readChunks(spark, dir, v).as[EncodedChunk])
-      .select("doc_id").as[String].collect().toSet
+    EncodePipeline.decodeDF(
+        SnapshotLog.readChunks(spark, dir, v).as[EncodedChunk], Seq("doc_id"))
+      .as[String].collect().toSet
   }
 
   test("time travel: v1 sees only the first slice after a later append") {
@@ -70,7 +67,7 @@ class SnapshotSpec extends AnyFunSuite {
     // v1 still reads exactly the original row set
     assert(docIdsAt(dir, Some(v1)) == want)
     // v2 sees both file generations (append-emulated rewrite = 2x rows)
-    val v2Rows = EncodePipeline.decode(
+    val v2Rows = EncodePipeline.decodeDF(
       SnapshotLog.readChunks(spark, dir, Some(v2)).as[EncodedChunk]).count()
     assert(v2Rows == 2L * rows.count())
   }
@@ -261,6 +258,53 @@ class SnapshotSpec extends AnyFunSuite {
     writeSlice(dir, a.map(r => r.copy(doc_id = r.doc_id + "-x")))
     val v6 = SnapshotLog.commit(spark, dir, "append")
     assert(ids(v5, v6) == ka.map(_ + "-x"))
+  }
+
+  test("merge-on-read keeps NULL tokens and sources exactly; corruption fails loudly") {
+    import spark.implicits._
+    val dir = freshDir("nulls")
+    def row(i: Long): TokenRow = {
+      val tokens =
+        if (i % 4 == 0) null else Array.tabulate((i % 5).toInt + 1)(k => (i * 7 + k).toInt)
+      val source = if (i % 3 == 0) null else s"src${i % 2}"
+      TokenRow(f"doc/$i%06d", tokens, if (tokens == null) -1 else tokens.length, source)
+    }
+    def norm(rs: Seq[TokenRow]) = rs
+      .map(r => (r.doc_id, Option(r.tokens).map(_.toSeq), r.n_tok, Option(r.source)))
+      .sortBy(_._1)
+    val a = (0L until 300L).map(row)
+    val b = (300L until 500L).map(row)
+    assert(a.exists(_.tokens == null) && a.exists(_.source == null)) // non-vacuous
+    writeSlice(dir, spark.createDataset(a))
+    val v1 = SnapshotLog.commit(spark, dir, "append")
+    writeSlice(dir, spark.createDataset(b))
+    val v2 = SnapshotLog.commit(spark, dir, "append")
+    val got = SnapshotLog.readRows(spark, dir, Some(v2)).collect().toSeq
+    assert(norm(got) == norm(a ++ b))
+    assert(got.filter(_.tokens == null).forall(_.n_tok == -1))
+    assert(norm(SnapshotLog.readIncremental(spark, dir, v1, v2).collect().toSeq) == norm(b))
+    // with an equality delete in effect (the anti-join path)
+    val v3 = SnapshotLog.deleteWhere(spark, dir, col("n_tok") === 2)
+    assert(v3 == v2 + 1)
+    assert(norm(SnapshotLog.readRows(spark, dir, Some(v3)).collect().toSeq) ==
+      norm((a ++ b).filter(_.n_tok != 2)))
+    assert(norm(SnapshotLog.readIncremental(spark, dir, v1, v3).collect().toSeq) ==
+      norm(b.filter(_.n_tok != 2)))
+    // a data file whose chunk has one flipped payload byte fails the read
+    // with a CRC error instead of returning wrong rows
+    val cdir = freshDir("nulls-crc")
+    val good = EncodePipeline.encode(spark.createDataset(a), numParts = 1,
+      tokensPerChunk = 4096).collect()
+    val bin = good.head.tokens_bin.clone()
+    bin(bin.length / 2) = (bin(bin.length / 2) ^ 0x20).toByte
+    (good.head.copy(tokens_bin = bin) +: good.tail).toSeq.toDS()
+      .write.option("compression", EncodePipeline.ChunkTableCompression)
+      .parquet(s"$cdir/chunks")
+    SnapshotLog.commit(spark, cdir, "append")
+    val ex = intercept[Exception](SnapshotLog.readRows(spark, cdir).collect())
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ messages(e.getCause))
+    assert(messages(ex).exists(_.contains("CRC mismatch")), ex.toString)
   }
 
   test("rewrite commit validates removed files against the parent") {

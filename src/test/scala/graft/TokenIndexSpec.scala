@@ -5,16 +5,14 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class TokenIndexSpec extends AnyFunSuite {
+class TokenIndexSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = SparkTestSession.spark
 
-  private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-tis-$tag").toString
 
   test("index lookup equals brute-force membership for several tokens") {
     import spark.implicits._
     val rows = TokenTableGen.generate(spark, 3000, 5)
-    val base = tmp("rt")
+    val base = tmpDir("tis-rt")
     EncodePipeline.encode(rows, numParts = 4, tokensPerChunk = 8 * 1024)
       .write.mode("overwrite")
       .option("compression", EncodePipeline.ChunkTableCompression)
@@ -37,7 +35,7 @@ class TokenIndexSpec extends AnyFunSuite {
   test("lookup decodes only posting-listed chunks (exactness of the index)") {
     import spark.implicits._
     val rows = TokenTableGen.generate(spark, 2000, 4)
-    val base = tmp("prune")
+    val base = tmpDir("tis-prune")
     EncodePipeline.encode(rows, numParts = 4, tokensPerChunk = 8 * 1024)
       .write.mode("overwrite")
       .option("compression", EncodePipeline.ChunkTableCompression)
@@ -52,7 +50,7 @@ class TokenIndexSpec extends AnyFunSuite {
       .as[Long].collect().toSet
     assert(listed.nonEmpty)
     val containing = chunks.collect()
-      .filter(c => EncodePipeline.decodeChunk(c)
+      .filter(c => EncodePipeline.decodeChunkRows(c, 0, c.num_rows)
         .exists(r => r.tokens != null && r.tokens.contains(tok)))
       .map(_.chunk_id).toSet
     assert(listed == containing)
@@ -61,7 +59,7 @@ class TokenIndexSpec extends AnyFunSuite {
   test("phrase lookup equals brute-force consecutive-subsequence scan") {
     import spark.implicits._
     val rows = TokenTableGen.generate(spark, 2500, 6)
-    val base = tmp("phrase")
+    val base = tmpDir("tis-phrase")
     EncodePipeline.encode(rows, numParts = 4, tokensPerChunk = 8 * 1024)
       .write.mode("overwrite")
       .option("compression", EncodePipeline.ChunkTableCompression)
@@ -98,7 +96,7 @@ class TokenIndexSpec extends AnyFunSuite {
     val all = TokenTableGen.generate(spark, 2400, 5)
     val a = all.filter(_.doc_id.hashCode % 3 != 0)
     val b = all.filter(_.doc_id.hashCode % 3 == 0)
-    val base = tmp("incr")
+    val base = tmpDir("tis-incr")
     val aParts = 3
     EncodePipeline.encode(a, aParts, tokensPerChunk = 8 * 1024)
       .write.mode("overwrite")
@@ -143,7 +141,7 @@ class TokenIndexSpec extends AnyFunSuite {
       .collect()
     val bad = chunks.head.copy(tokens_bin = chunks.head.tokens_bin.clone())
     bad.tokens_bin(bad.tokens_bin.length / 2) = (bad.tokens_bin(bad.tokens_bin.length / 2) ^ 0x5a).toByte
-    val base = tmp("crc")
+    val base = tmpDir("tis-crc")
     val ex = intercept[Throwable] {
       TokenIndex.build(spark.createDataset(Seq(bad)), s"$base/index")
     }
