@@ -1,10 +1,13 @@
 package graft.queries
 
 import graft.codec._
-import graft.spark.{ChunkJoin, EncodePipeline, TokenTableGen, TokenRow}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.spark.{ChunkJoin, EncodePipeline, EncodedChunk, GenericEncode, SnapshotLog, TokenTableGen, TokenRow}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.nio.charset.StandardCharsets.UTF_8
+import scala.reflect.ClassTag
 
 /** Codec round-trip queries for the driver's DuckDB oracle: each query
   * pushes a real testdata column through encode→decode inside a
@@ -32,14 +35,183 @@ object RoundTrips {
   private def encParts(spark: SparkSession): Int =
     spark.sparkContext.defaultParallelism
 
+  /** Scratch-name suffix: the first 8 hex digits of MD5(sf dir), so
+    * reruns on one dir reuse their scratch and two dirs never collide. */
+  private def dirKey(dir: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+
+  /** A query's scratch path, `<java.io.tmpdir>/graft-<tag>-q-<dirKey>`. */
+  private def scratch(dir: String, tag: String): String =
+    s"${System.getProperty("java.io.tmpdir")}/graft-$tag-q-${dirKey(dir)}"
+
+  /** [[scratch]], emptied first: a stale snapshot log or stream checkpoint
+    * would shift versions or skip batches on a rerun. */
+  private def freshScratch(spark: SparkSession, dir: String, tag: String): String = {
+    val base = scratch(dir, tag)
+    val basePath = new org.apache.hadoop.fs.Path(base)
+    basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(basePath, true)
+    base
+  }
+
+  /** Each partition of `values` as ONE chunk through `codec` (encode then
+    * decode) inside a mapPartitions stage — the codec round-trip shape. */
+  private def roundTrip[T: Encoder: ClassTag](values: Dataset[T])(
+      codec: Array[T] => Array[T]): Dataset[T] =
+    values.mapPartitions(it => codec(it.toArray).iterator)
+
+  /** lineitem as token rows, one per order: doc_id = the zero-padded
+    * l_orderkey, tokens = its sorted line numbers, source = 'tpch'. */
+  private def orderRows(spark: SparkSession, dir: String): Dataset[TokenRow] = {
+    import spark.implicits._
+    table(spark, dir, "lineitem")
+      .groupBy("l_orderkey")
+      .agg(sort_array(collect_list(col("l_linenumber"))).as("tokens"))
+      .select(
+        format_string("%015d", col("l_orderkey")).as("doc_id"),
+        col("tokens"),
+        size(col("tokens")).as("n_tok"),
+        lit("tpch").as("source"))
+      .as[TokenRow]
+  }
+
+  /** Document rows as token rows: doc_id = the 8-digit zero-padded
+    * `doc_id` column, tokens = `tokens` (so n_tok is their count). */
+  private def docRows(docs: DataFrame, tokens: Seq[Column], source: Column): Dataset[TokenRow] = {
+    import docs.sparkSession.implicits._
+    docs.select(
+        lpad(col("doc_id").cast("string"), 8, "0").as("doc_id"),
+        array(tokens: _*).as("tokens"),
+        lit(tokens.length).as("n_tok"),
+        source.as("source"))
+      .as[TokenRow]
+  }
+
+  /** documents with tokens [n_chars], source = lang. */
+  private def charRows(docs: DataFrame): Dataset[TokenRow] =
+    docRows(docs, Seq(col("n_chars").cast("int")), col("lang"))
+
+  /** documents with tokens [n_chars, length(lang)]. */
+  private def charLangRows(docs: DataFrame, source: Column): Dataset[TokenRow] =
+    docRows(docs, Seq(col("n_chars").cast("int"), length(col("lang")).cast("int")), source)
+
+  /** Nullable lineitem token rows: tokens NULL where l_discount > 0.08
+    * (n_tok = -1), source NULL where l_returnflag = 'N'. */
+  private def nullableRows(spark: SparkSession, dir: String): Dataset[TokenRow] = {
+    import spark.implicits._
+    table(spark, dir, "lineitem")
+      .select(
+        concat(lpad(col("l_orderkey").cast("string"), 10, "0"), lit("-"),
+          lpad(col("l_linenumber").cast("string"), 4, "0")).as("doc_id"),
+        when(col("l_discount") > 0.08, lit(null))
+          .otherwise(array(col("l_linenumber"),
+            floor(col("l_quantity")).cast("int"))).as("tokens"),
+        when(col("l_discount") > 0.08, lit(-1)).otherwise(lit(2)).as("n_tok"),
+        when(col("l_returnflag") === "N", lit(null).cast("string"))
+          .otherwise(col("l_returnflag")).as("source"))
+      .as[TokenRow]
+  }
+
+  /** (doc_id, source, tok_sum) ORDER BY doc_id — token rows restated as
+    * scalars the oracle can compare. */
+  private def tokSums(rows: Dataset[_]): DataFrame =
+    rows.select(col("doc_id"), col("source"),
+        expr("aggregate(tokens, CAST(0 AS BIGINT), (a, x) -> a + x)").as("tok_sum"))
+      .orderBy("doc_id")
+
+  /** (snap, doc_id, source, n_tok) — one snapshot's row view, tagged. */
+  private def snapView(rows: Dataset[_], tag: Int): DataFrame =
+    rows.select(lit(tag).as("snap"), col("doc_id"), col("source"),
+      col("n_tok").cast("long").as("n_tok"))
+
+  /** [[snapView]] of the merge-on-read rows of table `base` at version `v`. */
+  private def rowsAt(spark: SparkSession, base: String, v: Int, tag: Int): DataFrame =
+    snapView(SnapshotLog.readRows(spark, base, Some(v)), tag)
+
+  /** Writes `chunks` as a chunk table (engine codecs only, no parquet
+    * compression on top — see [[EncodePipeline.ChunkTableCompression]]). */
+  private def writeChunks(chunks: Dataset[EncodedChunk], path: String,
+                          mode: String = "overwrite"): Unit =
+    chunks.write.mode(mode)
+      .option("compression", EncodePipeline.ChunkTableCompression)
+      .parquet(path)
+
+  private def readChunkTable(spark: SparkSession, path: String): Dataset[EncodedChunk] = {
+    import spark.implicits._
+    spark.read.parquet(path).as[EncodedChunk]
+  }
+
+  /** Persists `src` through the generic table sink (bin_<i> layout) at
+    * scratch `tag` and reads it back through the table reader, so the
+    * oracle checks the on-disk path, not an in-memory shortcut. */
+  private def genericTable(spark: SparkSession, dir: String, tag: String, src: DataFrame,
+                           rowsPerChunk: Int = GenericEncode.DefaultRowsPerChunk,
+                           cols: Seq[String] = Seq.empty): DataFrame = {
+    val base = scratch(dir, tag)
+    GenericEncode.encodeWrite(src, base, rowsPerChunk)
+    GenericEncode.readTable(spark, base, cols)
+  }
+
+  /** The snapshot queries' table at fresh scratch `tag`: documents as
+    * [[charRows]], landed by [[append]]s of row slices. */
+  private final class SnapshotTable(spark: SparkSession, dir: String, tag: String) {
+    val base: String = freshScratch(spark, dir, tag)
+    private val docs = table(spark, dir, "documents")
+    private def slice(pred: Column) = charRows(docs.filter(pred))
+    // ONE bounds pass shared by every append: the slices share the full
+    // table's key distribution, so per-slice re-sampling bought nothing
+    // but an extra scan+collect per encode (layout-only; rows unchanged)
+    private val bounds = EncodePipeline.massBalancedBounds(slice(lit(true)), 4)
+
+    /** Encodes and appends the rows matching `pred`, commits; returns the
+      * new snapshot version. */
+    def append(pred: Column): Int = {
+      writeChunks(EncodePipeline.encode(slice(pred), numParts = 4, tokensPerChunk = 2048,
+        boundsOverride = Some(bounds)), s"$base/chunks", "append")
+      SnapshotLog.commit(spark, base, "append")
+    }
+  }
+
+  /** Streams `out` into an append-mode memory sink named
+    * `graft_stream_<name>_<dirKey>`, lets `feed` drive the micro-batches,
+    * and returns the sink's table. `stateRows` (the input size) scopes the
+    * state fan-out of a stateful query to the data, not the session
+    * constant — see [[graft.streaming.StateScope]] (result-invariant). */
+  private def memorySink(spark: SparkSession, dir: String, name: String, out: DataFrame,
+                         stateRows: Option[Long])(feed: StreamingQuery => Unit): DataFrame = {
+    val qname = s"graft_stream_${name}_${dirKey(dir)}"
+    def run(): Unit = {
+      val q = out.writeStream.outputMode("append")
+        .format("memory").queryName(qname).start()
+      try feed(q) finally q.stop()
+    }
+    stateRows match {
+      case Some(n) => graft.streaming.StateScope.withStateParts(spark, n)(run())
+      case None => run()
+    }
+    spark.table(qname)
+  }
+
+  /** Feeds `rows` to `ms` in three micro-batches, then each of `extra` as
+    * a batch of its own, waiting for `q` after every batch. */
+  private def feedThirds[T](ms: MemoryStream[T], q: StreamingQuery, rows: Seq[T],
+                            extra: T*): Unit = {
+    rows.grouped((rows.length + 2) / 3).foreach { g =>
+      ms.addData(g)
+      q.processAllAvailable()
+    }
+    extra.foreach { e =>
+      ms.addData(Seq(e))
+      q.processAllAvailable()
+    }
+  }
+
   /** DELTA_BINARY_PACKED int64 over o_orderkey (sorted-ish ids). */
   def deltaLong(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    table(spark, dir, "orders").select("o_orderkey").as[Long]
-      .mapPartitions { it =>
-        val arr = it.toArray
-        val enc = Chunks.encodeLongs(arr, 0, arr.length, Codecs.DeltaLong)
-        Chunks.decodeLongs(enc).iterator
+    roundTrip(table(spark, dir, "orders").select("o_orderkey").as[Long]) { a =>
+        Chunks.decodeLongs(Chunks.encodeLongs(a, 0, a.length, Codecs.DeltaLong))
       }
       .toDF("o_orderkey")
       .orderBy("o_orderkey")
@@ -49,11 +221,9 @@ object RoundTrips {
     * multiset must match exactly, so compare group counts. */
   def dictString(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    table(spark, dir, "lineitem").select("l_returnflag").as[String]
-      .mapPartitions { it =>
-        val arr = it.map(_.getBytes(UTF_8)).toArray
-        val enc = Chunks.encodeStrings(arr, 0, arr.length, Codecs.DictBytes)
-        Chunks.decodeStrings(enc).iterator.map(new String(_, UTF_8))
+    roundTrip(table(spark, dir, "lineitem").select("l_returnflag").as[String]) { a =>
+        val enc = Chunks.encodeStrings(a.map(_.getBytes(UTF_8)), 0, a.length, Codecs.DictBytes)
+        Chunks.decodeStrings(enc).map(new String(_, UTF_8))
       }
       .toDF("l_returnflag")
       .groupBy("l_returnflag").agg(count(lit(1)).as("cnt"))
@@ -63,11 +233,8 @@ object RoundTrips {
   /** RLE hybrid over small ints (l_linenumber). */
   def rleInt(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    table(spark, dir, "lineitem").select("l_linenumber").as[Int]
-      .mapPartitions { it =>
-        val arr = it.toArray
-        val enc = Chunks.encodeInts(arr, 0, arr.length, Codecs.RleInt)
-        Chunks.decodeInts(enc).iterator
+    roundTrip(table(spark, dir, "lineitem").select("l_linenumber").as[Int]) { a =>
+        Chunks.decodeInts(Chunks.encodeInts(a, 0, a.length, Codecs.RleInt))
       }
       .toDF("ln")
       .groupBy("ln").agg(count(lit(1)).as("cnt"))
@@ -82,15 +249,11 @@ object RoundTrips {
     * recomputes the same column relationally). */
   def pforInt(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    table(spark, dir, "lineitem")
+    val v = table(spark, dir, "lineitem")
       .select(when(col("l_orderkey") % 97 === 0,
           col("l_partkey").cast("int") + 1000000000)
         .otherwise(col("l_linenumber").cast("int")).as("v")).as[Int]
-      .mapPartitions { it =>
-        val arr = it.toArray
-        val enc = Chunks.encodeInts(arr, 0, arr.length, Codecs.PforInt)
-        Chunks.decodeInts(enc).iterator
-      }
+    roundTrip(v)(a => Chunks.decodeInts(Chunks.encodeInts(a, 0, a.length, Codecs.PforInt)))
       .toDF("v")
       .select(col("v").cast("long").as("v"))
       .orderBy("v")
@@ -99,16 +262,12 @@ object RoundTrips {
   /** FSST over document text, key association preserved per row. */
   def fsstText(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    table(spark, dir, "documents").select("doc_id", "text").as[(Long, String)]
-      .mapPartitions { it =>
-        val rows = it.toArray
+    roundTrip(table(spark, dir, "documents").select("doc_id", "text").as[(Long, String)]) { rows =>
         val ids = rows.map(_._1)
         val texts = rows.map(_._2.getBytes(UTF_8))
         val encIds = Chunks.encodeLongs(ids, 0, ids.length)
         val encTexts = Chunks.encodeStrings(texts, 0, texts.length, Codecs.FsstBytes)
-        val outIds = Chunks.decodeLongs(encIds)
-        val outTexts = Chunks.decodeStrings(encTexts)
-        outIds.iterator.zip(outTexts.iterator.map(new String(_, UTF_8)))
+        Chunks.decodeLongs(encIds).zip(Chunks.decodeStrings(encTexts).map(new String(_, UTF_8)))
       }
       .toDF("doc_id", "text")
       .orderBy("doc_id")
@@ -117,12 +276,11 @@ object RoundTrips {
   /** DELTA_BYTE_ARRAY (front coding) over sorted p_name strings. */
   def deltaByteArray(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    table(spark, dir, "part").select("p_name").as[String]
+    val names = table(spark, dir, "part").select("p_name").as[String]
       .repartition(4).sortWithinPartitions("p_name")
-      .mapPartitions { it =>
-        val arr = it.map(_.getBytes(UTF_8)).toArray
-        val enc = Chunks.encodeStrings(arr, 0, arr.length, Codecs.DeltaBytes)
-        Chunks.decodeStrings(enc).iterator.map(new String(_, UTF_8))
+    roundTrip(names) { a =>
+        val enc = Chunks.encodeStrings(a.map(_.getBytes(UTF_8)), 0, a.length, Codecs.DeltaBytes)
+        Chunks.decodeStrings(enc).map(new String(_, UTF_8))
       }
       .toDF("p_name")
       .orderBy("p_name")
@@ -131,11 +289,8 @@ object RoundTrips {
   /** BYTE_STREAM_SPLIT over doubles — must be bit-identical. */
   def byteStreamSplit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    table(spark, dir, "lineitem").select("l_extendedprice").as[Double]
-      .mapPartitions { it =>
-        val arr = it.toArray
-        val enc = Chunks.encodeDoubles(arr, 0, arr.length, Codecs.BssDouble)
-        Chunks.decodeDoubles(enc).iterator
+    roundTrip(table(spark, dir, "lineitem").select("l_extendedprice").as[Double]) { a =>
+        Chunks.decodeDoubles(Chunks.encodeDoubles(a, 0, a.length, Codecs.BssDouble))
       }
       .toDF("l_extendedprice")
       .orderBy("l_extendedprice")
@@ -148,9 +303,7 @@ object RoundTrips {
     * choosing ALP or stops beating PLAIN on this column. */
   def alpDouble(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    table(spark, dir, "lineitem").select("l_extendedprice").as[Double]
-      .mapPartitions { it =>
-        val arr = it.toArray
+    roundTrip(table(spark, dir, "lineitem").select("l_extendedprice").as[Double]) { arr =>
         val enc = Chunks.encodeDoubles(arr, 0, arr.length)
         if (arr.length > 256) {
           require((enc(0) & 0xFF) == Codecs.AlpDouble,
@@ -158,7 +311,7 @@ object RoundTrips {
           require(enc.length < 5L * arr.length,
             s"ALP ${enc.length}B did not beat PLAIN ${8L * arr.length}B decisively")
         }
-        Chunks.decodeDoubles(enc).iterator
+        Chunks.decodeDoubles(enc)
       }
       .toDF("l_extendedprice")
       .orderBy("l_extendedprice")
@@ -173,10 +326,9 @@ object RoundTrips {
     * PLAIN 4x on this column. */
   def xorDouble(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    table(spark, dir, "lineitem")
+    val v = table(spark, dir, "lineitem")
       .select((lit(1.0) + col("l_quantity") / 1048576.0).as("v")).as[Double]
-      .mapPartitions { it =>
-        val arr = it.toArray
+    roundTrip(v) { arr =>
         val enc = Chunks.encodeDoubles(arr, 0, arr.length)
         if (arr.length > 256) {
           require((enc(0) & 0xFF) == Codecs.XorDouble,
@@ -184,7 +336,7 @@ object RoundTrips {
           require(enc.length * 4L < 8L * arr.length,
             s"XOR ${enc.length}B did not beat PLAIN ${8L * arr.length}B 4x")
         }
-        Chunks.decodeDoubles(enc).iterator
+        Chunks.decodeDoubles(enc)
       }
       .toDF("v")
       .orderBy("v")
@@ -193,14 +345,10 @@ object RoundTrips {
   /** PLAIN over full-range ints (hash of keys) — selector floor. */
   def plainInt(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    table(spark, dir, "lineitem")
+    val v = table(spark, dir, "lineitem")
       .select((col("l_orderkey") * 2654435761L + col("l_linenumber")).cast("long").as("v"))
       .as[Long]
-      .mapPartitions { it =>
-        val arr = it.toArray
-        val enc = Chunks.encodeLongs(arr, 0, arr.length, Codecs.PlainLong)
-        Chunks.decodeLongs(enc).iterator
-      }
+    roundTrip(v)(a => Chunks.decodeLongs(Chunks.encodeLongs(a, 0, a.length, Codecs.PlainLong)))
       .toDF("v")
       .orderBy("v")
   }
@@ -208,23 +356,8 @@ object RoundTrips {
   /** The full array pipeline on real data: lineitem grouped to
     * (doc_id, tokens) rows, encoded through EncodePipeline chunks, decoded
     * back, exploded — identity oracle on (l_orderkey, l_linenumber). */
-  def tokensPipeline(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val rows = table(spark, dir, "lineitem")
-      .groupBy("l_orderkey")
-      .agg(sort_array(collect_list(col("l_linenumber"))).as("tokens"))
-      .select(
-        format_string("%015d", col("l_orderkey")).as("doc_id"),
-        col("tokens"),
-        size(col("tokens")).as("n_tok"),
-        lit("tpch").as("source"))
-      .as[TokenRow]
-    val chunks = EncodePipeline.encode(rows, numParts = encParts(spark), tokensPerChunk = 256 * 1024)
-    EncodePipeline.decodeDF(chunks).as[TokenRow]
-      .flatMap(r => r.tokens.map(t => (r.doc_id.toLong, t.toLong)))
-      .toDF("l_orderkey", "l_linenumber")
-      .orderBy("l_orderkey", "l_linenumber")
-  }
+  def tokensPipeline(spark: SparkSession, dir: String): DataFrame =
+    tokensPipelineCompressed(spark, dir, BlockCompression.None)
 
   /** Same pipeline with a block-compression layer on top of the
     * lightweight encodings (reference compress.Codec analog — one
@@ -232,17 +365,8 @@ object RoundTrips {
   private def tokensPipelineCompressed(spark: SparkSession, dir: String,
                                        blockCodec: Int): DataFrame = {
     import spark.implicits._
-    val rows = table(spark, dir, "lineitem")
-      .groupBy("l_orderkey")
-      .agg(sort_array(collect_list(col("l_linenumber"))).as("tokens"))
-      .select(
-        format_string("%015d", col("l_orderkey")).as("doc_id"),
-        col("tokens"),
-        size(col("tokens")).as("n_tok"),
-        lit("tpch").as("source"))
-      .as[TokenRow]
-    val chunks = EncodePipeline.encode(rows, numParts = encParts(spark), tokensPerChunk = 256 * 1024,
-      blockCodec = blockCodec)
+    val chunks = EncodePipeline.encode(orderRows(spark, dir), numParts = encParts(spark),
+      tokensPerChunk = 256 * 1024, blockCodec = blockCodec)
     EncodePipeline.decodeDF(chunks).as[TokenRow]
       .flatMap(r => r.tokens.map(t => (r.doc_id.toLong, t.toLong)))
       .toDF("l_orderkey", "l_linenumber")
@@ -277,62 +401,19 @@ object RoundTrips {
     * sort), so seekToRows(100, 50) must equal the SQL LIMIT/OFFSET of
     * the same ordering — and only the covering chunks/pages decode. */
   def seekRows(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val src = table(spark, dir, "documents")
-      .select(
-        lpad(col("doc_id").cast("string"), 8, "0").as("doc_id"),
-        array(col("n_chars").cast("int"), length(col("lang")).cast("int")).as("tokens"),
-        lit(2).as("n_tok"),
-        col("source"))
-      .as[TokenRow]
+    val src = charLangRows(table(spark, dir, "documents"), col("source"))
     val chunks = EncodePipeline.encode(src, numParts = 4, tokensPerChunk = 4096)
-    EncodePipeline.seekToRows(chunks, 100, 50)
-      .toDF()
-      .select(col("doc_id"), col("source"),
-        expr("aggregate(tokens, CAST(0 AS BIGINT), (a, x) -> a + x)").as("tok_sum"))
-      .orderBy("doc_id")
+    tokSums(EncodePipeline.seekToRows(chunks, 100, 50))
   }
 
   /** Sorted-run-aware compaction (R5 MergeRowGroups) end-to-end: two
     * disjoint runs plus one overlapping run merge via compactSorted —
     * disjoint chunks pass through byte-identical, only the overlap
     * re-encodes — and the decoded union must match the SQL restatement. */
-  def compactMerge(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val docsT = table(spark, dir, "documents")
-      .select(
-        lpad(col("doc_id").cast("string"), 8, "0").as("doc_id"),
-        array(col("n_chars").cast("int")).as("tokens"),
-        lit(1).as("n_tok"),
-        col("lang").as("source"))
-    val runA = docsT.filter(col("doc_id") < "00000250").as[TokenRow]
-    val runB = docsT.filter(col("doc_id") >= "00000250").as[TokenRow]
+  def compactMerge(spark: SparkSession, dir: String): DataFrame =
     // overlapping run: same key range as the A/B boundary, suffixed keys
-    val runC = docsT.filter(col("doc_id") >= "00000240" && col("doc_id") < "00000260")
-      .withColumn("doc_id", concat(col("doc_id"), lit("-x"))).as[TokenRow]
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-compact-q-" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    locally { // independent run ingests — overlap (guide §2.6)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      Await.result(Future.sequence(Seq(
-        Future(EncodePipeline.encode(runA, 2, tokensPerChunk = 2048)
-          .write.mode("overwrite").parquet(s"$base/runA")),
-        Future(EncodePipeline.encode(runB, 2, tokensPerChunk = 2048)
-          .write.mode("overwrite").parquet(s"$base/runB")),
-        Future(EncodePipeline.encode(runC, 1, tokensPerChunk = 2048)
-          .write.mode("overwrite").parquet(s"$base/runC")))), Duration.Inf)
-    }
-    val merged = EncodePipeline.compactSorted(
-      spark, Seq(s"$base/runA", s"$base/runB", s"$base/runC"), s"$base/merged",
-      tokensPerChunk = 2048)
-    EncodePipeline.decodeDF(merged.as[graft.spark.EncodedChunk])
-      .select(col("doc_id"), col("source"),
-        expr("aggregate(tokens, CAST(0 AS BIGINT), (a, x) -> a + x)").as("tok_sum"))
-      .orderBy("doc_id")
-  }
+    compactThreeRuns(spark, dir, "compact", concat(col("doc_id"), lit("-x")),
+      dropDuplicates = false)
 
   /** Dedupe-during-merge compaction (reference SortingWriter's
     * DropDuplicatedRows, sorting.go:123-126 / config.go:671-673): runs A
@@ -342,22 +423,23 @@ object RoundTrips {
     * row per doc_id, so the merged table decodes to exactly the base
     * corpus — which is the oracle. Non-overlapping chunks pass through
     * byte-identical (asserted separately in PipelineSpec). */
-  def compactDedup(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val docsT = table(spark, dir, "documents")
-      .select(
-        lpad(col("doc_id").cast("string"), 8, "0").as("doc_id"),
-        array(col("n_chars").cast("int")).as("tokens"),
-        lit(1).as("n_tok"),
-        col("lang").as("source"))
-    val runA = docsT.filter(col("doc_id") < "00000250").as[TokenRow]
-    val runB = docsT.filter(col("doc_id") >= "00000250").as[TokenRow]
+  def compactDedup(spark: SparkSession, dir: String): DataFrame =
     // duplicate re-ingest: identical rows, same doc_ids, straddling the boundary
+    compactThreeRuns(spark, dir, "compactdd", col("doc_id"), dropDuplicates = true)
+
+  /** [[compactMerge]] / [[compactDedup]]: documents split at doc_id
+    * 00000250 into runs A and B, plus a run C over [00000240, 00000260)
+    * keyed by `runCKeys`; the three runs are encoded independently and
+    * merged by compactSorted, and the merged table is decoded back. */
+  private def compactThreeRuns(spark: SparkSession, dir: String, tag: String,
+                               runCKeys: Column, dropDuplicates: Boolean): DataFrame = {
+    import spark.implicits._
+    val docsT = charRows(table(spark, dir, "documents"))
+    val runA = docsT.filter(col("doc_id") < "00000250")
+    val runB = docsT.filter(col("doc_id") >= "00000250")
     val runC = docsT.filter(col("doc_id") >= "00000240" && col("doc_id") < "00000260")
-      .as[TokenRow]
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-compactdd-q-" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+      .withColumn("doc_id", runCKeys).as[TokenRow]
+    val base = scratch(dir, tag)
     locally { // independent run ingests — overlap (guide §2.6)
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
@@ -372,11 +454,8 @@ object RoundTrips {
     }
     val merged = EncodePipeline.compactSorted(
       spark, Seq(s"$base/runA", s"$base/runB", s"$base/runC"), s"$base/merged",
-      tokensPerChunk = 2048, dropDuplicates = true)
-    EncodePipeline.decodeDF(merged.as[graft.spark.EncodedChunk])
-      .select(col("doc_id"), col("source"),
-        expr("aggregate(tokens, CAST(0 AS BIGINT), (a, x) -> a + x)").as("tok_sum"))
-      .orderBy("doc_id")
+      tokensPerChunk = 2048, dropDuplicates = dropDuplicates)
+    tokSums(EncodePipeline.decodeDF(merged.as[EncodedChunk]))
   }
 
   /** OPTIMIZE small files (compactBinPack): six disjoint tiny runs —
@@ -390,15 +469,8 @@ object RoundTrips {
     * table must still equal the documents restatement — the oracle. */
   def compactBinPack(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val docsT = table(spark, dir, "documents")
-      .select(
-        lpad(col("doc_id").cast("string"), 8, "0").as("doc_id"),
-        array(col("n_chars").cast("int")).as("tokens"),
-        lit(1).as("n_tok"),
-        col("lang").as("source"))
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-binpack-q-" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+    val docsT = charRows(table(spark, dir, "documents"))
+    val base = scratch(dir, "binpack")
     // The five stripe ingests are independent jobs — overlap them on
     // driver threads so each job's task tail back-fills the others
     // (guide §2.6); Spark's scheduler runs concurrent actions natively
@@ -411,11 +483,7 @@ object RoundTrips {
       val hi = f"${(i + 1) * 100}%08d"
       val run = docsT
         .filter(col("doc_id") >= lo && (if (i == 4) lit(true) else col("doc_id") < hi))
-        .as[TokenRow]
-      EncodePipeline.encode(run, 1, tokensPerChunk = 16)
-        .write.mode("overwrite")
-        .option("compression", EncodePipeline.ChunkTableCompression)
-        .parquet(s"$base/run$i")
+      writeChunks(EncodePipeline.encode(run, 1, tokensPerChunk = 16), s"$base/run$i")
       s"$base/run$i"
     } }), Duration.Inf)
     val tiny = stripes.map(spark.read.parquet(_)).reduce(_ unionByName _)
@@ -435,10 +503,7 @@ object RoundTrips {
             s"[${b.getString(1)},${b.getString(2)}]")
       case _ =>
     }
-    EncodePipeline.decodeDF(merged.as[graft.spark.EncodedChunk])
-      .select(col("doc_id"), col("source"),
-        expr("aggregate(tokens, CAST(0 AS BIGINT), (a, x) -> a + x)").as("tok_sum"))
-      .orderBy("doc_id")
+    tokSums(EncodePipeline.decodeDF(merged.as[EncodedChunk]))
   }
 
   /** Codec auto-selector demo on the deterministic synth table: one row
@@ -475,14 +540,7 @@ object RoundTrips {
         .otherwise(col("l_returnflag")).as("flag"),
       (col("l_discount") > 0.05).as("discounted"),
       array(col("l_linenumber"), floor(col("l_quantity")).cast("int")).as("pair"))
-    // persist through the table sink (bin_<i> layout) and read back via
-    // the table reader, so the oracle checks the on-disk path, not an
-    // in-memory shortcut
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-generic-q-" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    graft.spark.GenericEncode.encodeWrite(src, base, rowsPerChunk = 16 * 1024)
-    graft.spark.GenericEncode.readTable(spark, base)
+    genericTable(spark, dir, "generic", src, rowsPerChunk = 16 * 1024)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
         col("flag"), col("discounted"),
         expr("aggregate(pair, CAST(0 AS BIGINT), (a, x) -> a + x)").as("pair_sum"))
@@ -508,11 +566,7 @@ object RoundTrips {
         col("o_totalprice").cast("double"),
         when(col("o_orderkey") % 5 === 0, lit(null))
           .otherwise(col("o_totalprice").cast("double") / 2).cast("double")).as("dbls"))
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-garr-q-" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    graft.spark.GenericEncode.encodeWrite(src, base, rowsPerChunk = 16 * 1024)
-    graft.spark.GenericEncode.readTable(spark, base)
+    genericTable(spark, dir, "garr", src, rowsPerChunk = 16 * 1024)
       .select(col("o_orderkey"),
         element_at(col("longs"), 1).as("l1"),
         element_at(col("longs"), 2).as("l2"),
@@ -538,15 +592,10 @@ object RoundTrips {
       col("c_name"),
       col("c_custkey").cast("long").as("c_custkey"),
       col("c_acctbal").cast("double").as("c_acctbal"))
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val base = System.getProperty("java.io.tmpdir")
-    val d1 = s"$base/graft-gev1-q-$key"
-    val d2 = s"$base/graft-gev2-q-$key"
-    graft.spark.GenericEncode.encodeWrite(v1, d1)
-    graft.spark.GenericEncode.encodeWrite(v2, d2)
-    graft.spark.GenericEncode
-      .mergeTables(spark, Seq(d1, d2), s"$base/graft-gevm-q-$key")
+    val (d1, d2) = (scratch(dir, "gev1"), scratch(dir, "gev2"))
+    GenericEncode.encodeWrite(v1, d1)
+    GenericEncode.encodeWrite(v2, d2)
+    GenericEncode.mergeTables(spark, Seq(d1, d2), scratch(dir, "gevm"))
       .orderBy("c_custkey")
   }
 
@@ -561,11 +610,11 @@ object RoundTrips {
       col("ts").cast("date").as("day"),
       col("value").cast("float").as("fval"),
       array(col("value").cast("float"), (col("value") * 2.0d).cast("float")).as("fpair"))
-    val chunks = graft.spark.GenericEncode.encode(src, rowsPerChunk = 16 * 1024)
+    val chunks = GenericEncode.encode(src, rowsPerChunk = 16 * 1024)
     // temporal columns comparison-projected to strings: pandas/duckdb
     // normalize DATE/TIMESTAMP objects differently, the VALUES are what
     // the oracle checks (the round-trip itself ran on the native types)
-    graft.spark.GenericEncode.decode(spark, chunks)
+    GenericEncode.decode(spark, chunks)
       .select(col("event_id"),
         date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_str"),
         date_format(col("day"), "yyyy-MM-dd").as("day_str"),
@@ -582,18 +631,7 @@ object RoundTrips {
     * in SQL, so any bitmap slip is a hash mismatch. Reference semantics:
     * null.go:22-60, column_buffer_go18.go:90-140. */
   def nullableRoundTrip(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val src = table(spark, dir, "lineitem")
-      .select(
-        concat(lpad(col("l_orderkey").cast("string"), 10, "0"), lit("-"),
-          lpad(col("l_linenumber").cast("string"), 4, "0")).as("doc_id"),
-        when(col("l_discount") > 0.08, lit(null))
-          .otherwise(array(col("l_linenumber"),
-            floor(col("l_quantity")).cast("int"))).as("tokens"),
-        when(col("l_discount") > 0.08, lit(-1)).otherwise(lit(2)).as("n_tok"),
-        when(col("l_returnflag") === "N", lit(null).cast("string"))
-          .otherwise(col("l_returnflag")).as("source"))
-      .as[TokenRow]
+    val src = nullableRows(spark, dir)
     EncodePipeline.decodeDF(EncodePipeline.encode(src, numParts = encParts(spark)))
       .select(col("doc_id"), col("n_tok"), col("source"),
         expr("aggregate(tokens, CAST(0 AS BIGINT), (acc, x) -> acc + x)").as("tok_sum"))
@@ -610,10 +648,9 @@ object RoundTrips {
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"), col("o_orderstatus"))
       .repartitionByRange(4, col("o_orderkey"))
       .sortWithinPartitions("o_orderkey")
-    val chunks = graft.spark.GenericEncode.encode(src, rowsPerChunk = 2048)
-    val pruned = graft.spark.GenericEncode.pruneRange(
-      chunks, "o_orderkey", Some("5000"), Some("7000"))
-    graft.spark.GenericEncode.decode(spark, pruned, Seq("o_orderkey", "o_totalprice"))
+    val chunks = GenericEncode.encode(src, rowsPerChunk = 2048)
+    val pruned = GenericEncode.pruneRange(chunks, "o_orderkey", Some("5000"), Some("7000"))
+    GenericEncode.decode(spark, pruned, Seq("o_orderkey", "o_totalprice"))
       .filter(col("o_orderkey").between(5000L, 7000L))
       .orderBy("o_orderkey")
   }
@@ -630,11 +667,8 @@ object RoundTrips {
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"), col("o_orderstatus"))
       .repartitionByRange(4, col("o_orderkey"))
       .sortWithinPartitions("o_orderkey")
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-autoprune-q-" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    graft.spark.GenericEncode.encodeWrite(src, base, rowsPerChunk = 2048)
-    graft.spark.GenericEncode.readTable(spark, base, Seq("o_orderkey", "o_totalprice"))
+    genericTable(spark, dir, "autoprune", src, rowsPerChunk = 2048,
+        cols = Seq("o_orderkey", "o_totalprice"))
       .filter(col("o_orderkey").between(500L, 900L))
       .orderBy("o_orderkey")
   }
@@ -651,11 +685,8 @@ object RoundTrips {
       table(spark, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"), col("o_orderstatus")),
       Seq("o_custkey", "o_orderkey"), numParts = 4)
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-zorder-q-" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    graft.spark.GenericEncode.encodeWrite(src, base, rowsPerChunk = 1024)
-    graft.spark.GenericEncode.readTable(spark, base, Seq("o_orderkey", "o_custkey", "o_totalprice"))
+    genericTable(spark, dir, "zorder", src, rowsPerChunk = 1024,
+        cols = Seq("o_orderkey", "o_custkey", "o_totalprice"))
       .filter(col("o_custkey").between(100L, 300L) && col("o_orderkey").between(2000L, 20000L))
       .orderBy("o_orderkey")
   }
@@ -667,17 +698,8 @@ object RoundTrips {
     * doc_id streams. Oracle: orders whose linenumber set contains the
     * token. */
   def searchToken(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val rows = table(spark, dir, "lineitem")
-      .groupBy("l_orderkey")
-      .agg(sort_array(collect_list(col("l_linenumber"))).as("tokens"))
-      .select(
-        format_string("%015d", col("l_orderkey")).as("doc_id"),
-        col("tokens"),
-        size(col("tokens")).as("n_tok"),
-        lit("tpch").as("source"))
-      .as[TokenRow]
-    val chunks = EncodePipeline.encode(rows, numParts = encParts(spark), tokensPerChunk = 64 * 1024)
+    val chunks = EncodePipeline.encode(orderRows(spark, dir), numParts = encParts(spark),
+      tokensPerChunk = 64 * 1024)
     EncodePipeline.searchToken(chunks, 7).toDF("doc_id").orderBy("doc_id")
   }
 
@@ -688,24 +710,10 @@ object RoundTrips {
     * by hand (PipelineSpec proves the pruning with corrupted
     * out-of-range chunks). Same oracle as q_search_token. */
   def autoSearch(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val rows = table(spark, dir, "lineitem")
-      .groupBy("l_orderkey")
-      .agg(sort_array(collect_list(col("l_linenumber"))).as("tokens"))
-      .select(
-        format_string("%015d", col("l_orderkey")).as("doc_id"),
-        col("tokens"),
-        size(col("tokens")).as("n_tok"),
-        lit("tpch").as("source"))
-      .as[TokenRow]
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-autosearch-q-" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    EncodePipeline.encode(rows, numParts = 8, tokensPerChunk = 64 * 1024)
-      .write.mode("overwrite")
-      .option("compression", EncodePipeline.ChunkTableCompression)
-      .parquet(base)
-    EncodePipeline.decodeDF(spark.read.parquet(base).as[graft.spark.EncodedChunk])
+    val base = scratch(dir, "autosearch")
+    writeChunks(EncodePipeline.encode(orderRows(spark, dir), numParts = 8,
+      tokensPerChunk = 64 * 1024), base)
+    EncodePipeline.decodeDF(readChunkTable(spark, base))
       .filter(array_contains(col("tokens"), 7))
       .select("doc_id")
       .orderBy("doc_id")
@@ -721,11 +729,10 @@ object RoundTrips {
     * making the result exactly the batch restatement the oracle runs. */
   def streamingWindow(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val rows = table(spark, dir, "events")
       .select(col("ts"), col("event_type"), col("value"))
       .as[(java.sql.Timestamp, String, Double)]
-      .collect().sortBy(_._1.getTime)
+      .collect().sortBy(_._1.getTime).toSeq
     val sentinel = {
       val maxTs = rows.last._1.getTime
       (new java.sql.Timestamp(maxTs + 2 * 3600 * 1000L), "sentinel", 0.0)
@@ -738,25 +745,9 @@ object RoundTrips {
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("win_start"),
         col("event_type"), col("cnt"), col("min_v"), col("max_v"))
-    val qname = "graft_stream_window_" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    // state fan-out sized to the data, not the session constant — see
-    // graft.streaming.StateScope (result-invariant; conf-overridable)
-    graft.streaming.StateScope.withStateParts(spark, rows.length.toLong) {
-      val q = agg.writeStream.outputMode("append")
-        .format("memory").queryName(qname).start()
-      try {
-        val batchSize = (rows.length + 2) / 3
-        rows.grouped(batchSize).foreach { g =>
-          ms.addData(g.toSeq)
-          q.processAllAvailable()
-        }
-        ms.addData(Seq(sentinel))
-        q.processAllAvailable()
-      } finally q.stop()
-    }
-    spark.table(qname).orderBy("win_start", "event_type")
+    memorySink(spark, dir, "window", agg, Some(rows.length.toLong))(
+        feedThirds(ms, _, rows, sentinel))
+      .orderBy("win_start", "event_type")
   }
 
   /** Stream-stream interval join (attribution): clicks and purchases
@@ -773,7 +764,6 @@ object RoundTrips {
     * Oracle restates as a batch self-join. */
   def streamingJoin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val ev = table(spark, dir, "events")
       .select(col("ts"), col("user_id"), col("event_type"), col("event_id"))
       .as[(java.sql.Timestamp, Long, String, Long)]
@@ -789,27 +779,20 @@ object RoundTrips {
                |AND p_ts >= c_ts
                |AND p_ts <= c_ts + interval 30 minutes""".stripMargin))
       .select(col("user_id"), col("click_id"), col("purchase_id"))
-    val qname = "graft_stream_join_" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
     // A stream-stream join keeps ~4 state stores per side per shuffle
     // partition; at the session's 32 partitions each micro-batch commits
     // hundreds of store files for a toy input. Scope the state fan-out
     // to the data (was a hard-coded 8; now the shared scale-adaptive
     // derivation) — result is partition-invariant.
-    graft.streaming.StateScope.withStateParts(spark, ev.length.toLong) {
-      val q = joined.writeStream.outputMode("append")
-        .format("memory").queryName(qname).start()
-      try {
+    memorySink(spark, dir, "join", joined, Some(ev.length.toLong)) { q =>
         val slices = ev.grouped((ev.length + 2) / 3)
         slices.foreach { g =>
           msClick.addData(g.filter(_._3 == "click").map(e => (e._1, e._2, e._4)).toSeq)
           msPurch.addData(g.filter(_._3 == "purchase").map(e => (e._1, e._2, e._4)).toSeq)
           q.processAllAvailable()
         }
-      } finally q.stop()
-    }
-    spark.table(qname).orderBy("user_id", "click_id", "purchase_id")
+      }
+      .orderBy("user_id", "click_id", "purchase_id")
   }
 
   /** Stream-static enrichment join: the event stream picks up per-type
@@ -821,30 +804,19 @@ object RoundTrips {
     * restates as a batch join. */
   def streamingEnrich(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val evBatch = table(spark, dir, "events")
     val dim = evBatch.groupBy(col("event_type"))
       .agg(count(lit(1)).as("type_count"))
     val rows = evBatch
       .select(col("event_id"), col("event_type"))
-      .as[(Long, String)].collect().sortBy(_._1)
+      .as[(Long, String)].collect().sortBy(_._1).toSeq
     val ms = MemoryStream[(Long, String)](spark)
     val enriched = ms.toDF().toDF("event_id", "event_type")
       .join(broadcast(dim), "event_type")
       .filter(col("event_id") % 11 === 0)
       .select(col("event_id"), col("event_type"), col("type_count"))
-    val qname = "graft_stream_enrich_" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val q = enriched.writeStream.outputMode("append")
-      .format("memory").queryName(qname).start()
-    try {
-      rows.grouped((rows.length + 2) / 3).foreach { g =>
-        ms.addData(g.toSeq)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    spark.table(qname).orderBy("event_id")
+    memorySink(spark, dir, "enrich", enriched, None)(feedThirds(ms, _, rows))
+      .orderBy("event_id")
   }
 
   /** Pure-SQL read path: a persisted chunk table registered as a temp
@@ -852,21 +824,9 @@ object RoundTrips {
     * ride the same decode plan, pushdown rules and all. Oracle restates
     * the SQL over the source table. */
   def sqlTable(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val src = table(spark, dir, "documents")
-      .select(
-        lpad(col("doc_id").cast("string"), 8, "0").as("doc_id"),
-        array(col("n_chars").cast("int"), length(col("lang")).cast("int")).as("tokens"),
-        lit(2).as("n_tok"),
-        col("lang").as("source"))
-      .as[TokenRow]
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-sqltbl-q-" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    EncodePipeline.encode(src, numParts = 4, tokensPerChunk = 4096)
-      .write.mode("overwrite")
-      .option("compression", EncodePipeline.ChunkTableCompression)
-      .parquet(base)
+    val src = charLangRows(table(spark, dir, "documents"), col("lang"))
+    val base = scratch(dir, "sqltbl")
+    writeChunks(EncodePipeline.encode(src, numParts = 4, tokensPerChunk = 4096), base)
     graft.spark.GraftTables.registerTokenTable(spark, "graft_docs", base)
     spark.sql(
       """SELECT doc_id, source,
@@ -881,21 +841,10 @@ object RoundTrips {
     * place — no exchange anywhere in the plan. Oracle is the identity
     * restatement. */
   def alignedRoundTrip(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val src = table(spark, dir, "documents")
-      .select(
-        lpad(col("doc_id").cast("string"), 8, "0").as("doc_id"),
-        array(col("n_chars").cast("int"), length(col("lang")).cast("int")).as("tokens"),
-        lit(2).as("n_tok"),
-        col("lang").as("source"))
+    val src = charLangRows(table(spark, dir, "documents"), col("lang"))
       .repartitionByRange(4, col("doc_id"))
       .sortWithinPartitions("doc_id")
-      .as[TokenRow]
-    val chunks = EncodePipeline.encodeAligned(src, tokensPerChunk = 4096)
-    EncodePipeline.decodeDF(chunks)
-      .select(col("doc_id"), col("source"),
-        expr("aggregate(tokens, CAST(0 AS BIGINT), (a, x) -> a + x)").as("tok_sum"))
-      .orderBy("doc_id")
+    tokSums(EncodePipeline.decodeDF(EncodePipeline.encodeAligned(src, tokensPerChunk = 4096)))
   }
 
   /** Structured-Streaming ingest end-to-end: the documents table streams
@@ -906,33 +855,14 @@ object RoundTrips {
     * replay-idempotence property is additionally spec-verified. */
   def streamingIngest(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val rows = table(spark, dir, "documents")
-      .select(
-        lpad(col("doc_id").cast("string"), 8, "0").as("doc_id"),
-        array(col("n_chars").cast("int"), length(col("lang")).cast("int")).as("tokens"),
-        lit(2).as("n_tok"),
-        col("lang").as("source"))
-      .as[TokenRow].collect().sortBy(_.doc_id)
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-stream-q-" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+    val rows = charLangRows(table(spark, dir, "documents"), col("lang"))
+      .collect().sortBy(_.doc_id).toSeq
+    val base = freshScratch(spark, dir, "stream")
     val ms = MemoryStream[TokenRow](spark)
     val q = graft.streaming.StreamingEncode.start(
       spark, ms.toDF(), s"$base/chunks", s"$base/ckpt", tokensPerChunk = 4096)
-    try {
-      val batchSize = (rows.length + 2) / 3
-      rows.grouped(batchSize).foreach { g =>
-        ms.addData(g.toSeq)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val chunks = spark.read.parquet(s"$base/chunks").as[graft.spark.EncodedChunk]
-    EncodePipeline.decodeDF(chunks)
-      .select(col("doc_id"), col("source"),
-        expr("aggregate(tokens, CAST(0 AS BIGINT), (a, x) -> a + x)").as("tok_sum"))
-      .orderBy("doc_id")
+    try feedThirds(ms, q, rows) finally q.stop()
+    tokSums(EncodePipeline.decodeDF(readChunkTable(spark, s"$base/chunks")))
   }
 
   /** Streaming stateful exact-dedup end-to-end: the documents table
@@ -946,11 +876,9 @@ object RoundTrips {
     import spark.implicits._
     val docs = table(spark, dir, "documents").select("doc_id", "text")
       .as[(Long, String)].collect().sortBy(_._1).toSeq
-    val qname = "graft_stream_dedup_" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
     graft.streaming.StreamingDedup.runBatches(spark,
-      Seq(docs, docs.filter(_._1 % 10 == 0), docs.filter(_._1 % 20 == 0)), qname)
+      Seq(docs, docs.filter(_._1 % 10 == 0), docs.filter(_._1 % 20 == 0)),
+      s"graft_stream_dedup_${dirKey(dir)}")
       .select(col("doc_id"), col("fp"))
       .orderBy("doc_id")
   }
@@ -965,11 +893,7 @@ object RoundTrips {
         col("lang"), col("n_chars").cast("long").as("n_chars"), col("source"))
       .repartitionByRange(2, col("doc_id"))
       .sortWithinPartitions("doc_id")
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-gcol-q-" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    graft.spark.GenericEncode.encodeWrite(src, base, rowsPerChunk = 256)
-    graft.spark.GenericEncode.readTable(spark, base, Seq("doc_id", "n_chars"))
+    genericTable(spark, dir, "gcol", src, rowsPerChunk = 256, cols = Seq("doc_id", "n_chars"))
       .filter(col("n_chars") >= 200L)
       .orderBy("doc_id")
   }
@@ -985,9 +909,8 @@ object RoundTrips {
         col("lang"), col("n_chars").cast("long").as("n_chars"))
       .repartitionByRange(2, col("doc_id"))
       .sortWithinPartitions("doc_id")
-    val chunks = graft.spark.GenericEncode.encode(src, rowsPerChunk = 64)
-    graft.spark.GenericEncode.seekRows(spark, chunks, 100, 50,
-        Seq("doc_id", "lang", "n_chars"))
+    val chunks = GenericEncode.encode(src, rowsPerChunk = 64)
+    GenericEncode.seekRows(spark, chunks, 100, 50, Seq("doc_id", "lang", "n_chars"))
       .orderBy("doc_id")
   }
 
@@ -998,19 +921,7 @@ object RoundTrips {
     * reads pages per requested column, file.go:439-485). The oracle
     * checks values; ProjectionSpec asserts the stream-skipping. */
   def decodeProject(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val src = table(spark, dir, "lineitem")
-      .select(
-        concat(lpad(col("l_orderkey").cast("string"), 10, "0"), lit("-"),
-          lpad(col("l_linenumber").cast("string"), 4, "0")).as("doc_id"),
-        when(col("l_discount") > 0.08, lit(null))
-          .otherwise(array(col("l_linenumber"),
-            floor(col("l_quantity")).cast("int"))).as("tokens"),
-        when(col("l_discount") > 0.08, lit(-1)).otherwise(lit(2)).as("n_tok"),
-        when(col("l_returnflag") === "N", lit(null).cast("string"))
-          .otherwise(col("l_returnflag")).as("source"))
-      .as[TokenRow]
-    val chunks = EncodePipeline.encode(src, numParts = encParts(spark))
+    val chunks = EncodePipeline.encode(nullableRows(spark, dir), numParts = encParts(spark))
     // (l_orderkey, l_linenumber) is NOT unique in the synthetic lineitem,
     // so doc_id alone is not a total order — add the value columns
     EncodePipeline.decodeDF(chunks, Seq("doc_id", "n_tok", "source"))
@@ -1037,11 +948,7 @@ object RoundTrips {
       when(nullMap, lit(null)).otherwise(
         map(lit("chars"), col("n_chars").cast("long"),
           lit("langlen"), length(col("lang")).cast("long"))).as("props"))
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-gstruct-q-" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    graft.spark.GenericEncode.encodeWrite(src, base, rowsPerChunk = 4096)
-    graft.spark.GenericEncode.readTable(spark, base)
+    genericTable(spark, dir, "gstruct", src, rowsPerChunk = 4096)
       .select(col("doc_id"),
         col("meta.lang").as("lang"),
         col("meta.n_chars").as("n_chars"),
@@ -1068,11 +975,10 @@ object RoundTrips {
     * restates with an explicit k=0..3 unnest. */
   def streamingSliding(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val rows = table(spark, dir, "events")
       .select(col("ts"), col("event_type"), col("value"))
       .as[(java.sql.Timestamp, String, Double)]
-      .collect().sortBy(_._1.getTime)
+      .collect().sortBy(_._1.getTime).toSeq
     val maxTs = rows.last._1.getTime
     val late = (rows.head._1, rows.head._2, -1.0e9)
     val sentinel = (new java.sql.Timestamp(maxTs + 3 * 3600 * 1000L), "sentinel", 0.0)
@@ -1084,27 +990,9 @@ object RoundTrips {
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("win_start"),
         col("event_type"), col("cnt"), col("min_v"), col("max_v"))
-    val qname = "graft_stream_sliding_" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    // state fan-out sized to the data, not the session constant — see
-    // graft.streaming.StateScope (result-invariant; conf-overridable)
-    graft.streaming.StateScope.withStateParts(spark, rows.length.toLong) {
-      val q = agg.writeStream.outputMode("append")
-        .format("memory").queryName(qname).start()
-      try {
-        val batchSize = (rows.length + 2) / 3
-        rows.grouped(batchSize).foreach { g =>
-          ms.addData(g.toSeq)
-          q.processAllAvailable()
-        }
-        ms.addData(Seq(late))
-        q.processAllAvailable()
-        ms.addData(Seq(sentinel))
-        q.processAllAvailable()
-      } finally q.stop()
-    }
-    spark.table(qname).orderBy("win_start", "event_type")
+    memorySink(spark, dir, "sliding", agg, Some(rows.length.toLong))(
+        feedThirds(ms, _, rows, late, sentinel))
+      .orderBy("win_start", "event_type")
   }
 
   /** STREAMING session windows (gap 4 h) under a 30-minute watermark in
@@ -1123,11 +1011,10 @@ object RoundTrips {
     * sentinel row would fail the oracle. */
   def streamingSession(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val rows = table(spark, dir, "events")
       .select(col("ts"), col("user_id"), col("value"))
       .as[(java.sql.Timestamp, Long, Double)]
-      .collect().sortBy(_._1.getTime)
+      .collect().sortBy(_._1.getTime).toSeq
     val maxTs = rows.last._1.getTime
     val late = (rows.head._1, rows.head._2, -1.0e9)
     val sentinel = (new java.sql.Timestamp(maxTs + 6 * 3600 * 1000L), -1L, 0.0)
@@ -1141,27 +1028,9 @@ object RoundTrips {
         date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss").as("sess_start"),
         date_format(col("session_window.end"), "yyyy-MM-dd HH:mm:ss").as("sess_end"),
         col("n_events"), col("min_v"), col("max_v"))
-    val qname = "graft_stream_session_" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    // state fan-out sized to the data, not the session constant — see
-    // graft.streaming.StateScope (result-invariant; conf-overridable)
-    graft.streaming.StateScope.withStateParts(spark, rows.length.toLong) {
-      val q = agg.writeStream.outputMode("append")
-        .format("memory").queryName(qname).start()
-      try {
-        val batchSize = (rows.length + 2) / 3
-        rows.grouped(batchSize).foreach { g =>
-          ms.addData(g.toSeq)
-          q.processAllAvailable()
-        }
-        ms.addData(Seq(late))
-        q.processAllAvailable()
-        ms.addData(Seq(sentinel))
-        q.processAllAvailable()
-      } finally q.stop()
-    }
-    spark.table(qname).orderBy("user_id", "sess_start")
+    memorySink(spark, dir, "session", agg, Some(rows.length.toLong))(
+        feedThirds(ms, _, rows, late, sentinel))
+      .orderBy("user_id", "sess_start")
   }
 
   /** Repeated-group round-trip: array<struct<off,tag>> columns derived
@@ -1171,7 +1040,6 @@ object RoundTrips {
     * struct-of-arrays shredding and decoded back. Output is the EXPLODED
     * flat view so the DuckDB oracle can restate it relationally. */
   def genericNested(spark: SparkSession, dir: String): DataFrame = {
-    import graft.spark.GenericEncode
     val src = table(spark, dir, "documents").select(
       col("doc_id"),
       when(col("doc_id") % 11 === 0, lit(null)).otherwise(
@@ -1181,11 +1049,7 @@ object RoundTrips {
                |    'tag', CASE WHEN i = 2 THEN NULL
                |           ELSE concat(lang, '-', CAST(i AS STRING)) END)
                |  END)""".stripMargin)).as("spans"))
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-nested-q-" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    GenericEncode.encodeWrite(src, base)
-    GenericEncode.readTable(spark, base)
+    genericTable(spark, dir, "nested", src)
       .select(col("doc_id"), posexplode_outer(col("spans")))
       .select(col("doc_id"), col("pos").cast("long").as("pos"),
         col("col.off").as("off"), col("col.tag").as("tag"))
@@ -1199,25 +1063,10 @@ object RoundTrips {
     * q_search_token, so the three search strategies (hand pruning, auto
     * pushdown, secondary index) are provably answer-equivalent. */
   def tokenIndex(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val rows = table(spark, dir, "lineitem")
-      .groupBy("l_orderkey")
-      .agg(sort_array(collect_list(col("l_linenumber"))).as("tokens"))
-      .select(
-        format_string("%015d", col("l_orderkey")).as("doc_id"),
-        col("tokens"),
-        size(col("tokens")).as("n_tok"),
-        lit("tpch").as("source"))
-      .as[TokenRow]
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-tokenidx-q-" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    EncodePipeline.encode(rows, numParts = 8, tokensPerChunk = 64 * 1024)
-      .write.mode("overwrite")
-      .option("compression", EncodePipeline.ChunkTableCompression)
-      .parquet(s"$base/chunks")
-    val persisted = spark.read.parquet(s"$base/chunks")
-      .as[graft.spark.EncodedChunk]
+    val base = scratch(dir, "tokenidx")
+    writeChunks(EncodePipeline.encode(orderRows(spark, dir), numParts = 8,
+      tokensPerChunk = 64 * 1024), s"$base/chunks")
+    val persisted = readChunkTable(spark, s"$base/chunks")
     graft.spark.TokenIndex.build(persisted, s"$base/index")
     graft.spark.TokenIndex.lookup(spark, s"$base/index", persisted, 7)
       .toDF("doc_id").orderBy("doc_id")
@@ -1235,35 +1084,18 @@ object RoundTrips {
     * q_token_index, different maintenance path. */
   def tokenIndexIncremental(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val rows = table(spark, dir, "lineitem")
-      .groupBy("l_orderkey")
-      .agg(sort_array(collect_list(col("l_linenumber"))).as("tokens"))
-      .select(
-        format_string("%015d", col("l_orderkey")).as("doc_id"),
-        col("tokens"),
-        size(col("tokens")).as("n_tok"),
-        lit("tpch").as("source"))
-    val a = rows.filter(col("doc_id").substr(15, 1) =!= "0").as[TokenRow]
-    val b = rows.filter(col("doc_id").substr(15, 1) === "0").as[TokenRow]
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-tokidxinc-q-" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+    val rows = orderRows(spark, dir)
+    val a = rows.filter(col("doc_id").substr(15, 1) =!= "0")
+    val b = rows.filter(col("doc_id").substr(15, 1) === "0")
+    val base = scratch(dir, "tokidxinc")
     val aParts = 4
-    EncodePipeline.encode(a, aParts, tokensPerChunk = 64 * 1024)
-      .write.mode("overwrite")
-      .option("compression", EncodePipeline.ChunkTableCompression)
-      .parquet(s"$base/chunks")
-    graft.spark.TokenIndex.build(
-      spark.read.parquet(s"$base/chunks").as[graft.spark.EncodedChunk],
-      s"$base/index")
-    EncodePipeline.encode(b, 2, tokensPerChunk = 64 * 1024)
+    writeChunks(EncodePipeline.encode(a, aParts, tokensPerChunk = 64 * 1024), s"$base/chunks")
+    graft.spark.TokenIndex.build(readChunkTable(spark, s"$base/chunks"), s"$base/index")
+    writeChunks(EncodePipeline.encode(b, 2, tokensPerChunk = 64 * 1024)
       .map(c => c.copy(part_id = c.part_id + aParts,
-        chunk_id = ((c.part_id + aParts).toLong << 32) | (c.chunk_id & 0xFFFFFFFFL)))
-      .write.mode("append")
-      .option("compression", EncodePipeline.ChunkTableCompression)
-      .parquet(s"$base/chunks")
-    val persisted = spark.read.parquet(s"$base/chunks")
-      .as[graft.spark.EncodedChunk]
+        chunk_id = ((c.part_id + aParts).toLong << 32) | (c.chunk_id & 0xFFFFFFFFL))),
+      s"$base/chunks", "append")
+    val persisted = readChunkTable(spark, s"$base/chunks")
     graft.spark.TokenIndex.buildIncremental(persisted, s"$base/index")
     graft.spark.TokenIndex.buildIncremental(persisted, s"$base/index") // no-op
     graft.spark.TokenIndex.lookup(spark, s"$base/index", persisted, 3)
@@ -1306,15 +1138,10 @@ object RoundTrips {
       .withColumn("n_tok", size(col("tokens")))
       .select("doc_id", "tokens", "n_tok", "source")
       .as[TokenRow]
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-phrase-q-" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    EncodePipeline.encode(rows, numParts = 8, tokensPerChunk = 64 * 1024)
-      .write.mode("overwrite")
-      .option("compression", EncodePipeline.ChunkTableCompression)
-      .parquet(s"$base/chunks")
-    val persisted = spark.read.parquet(s"$base/chunks")
-      .as[graft.spark.EncodedChunk]
+    val base = scratch(dir, "phrase")
+    writeChunks(EncodePipeline.encode(rows, numParts = 8, tokensPerChunk = 64 * 1024),
+      s"$base/chunks")
+    val persisted = readChunkTable(spark, s"$base/chunks")
     graft.spark.TokenIndex.build(persisted, s"$base/index")
     val phrase = Seq("table", "scan").map(tokenIdOf(_, Mod))
     graft.spark.TokenIndex.lookupPhrase(spark, s"$base/index", persisted, phrase)
@@ -1331,40 +1158,12 @@ object RoundTrips {
     * snapshot log would shift version numbers). */
   def snapshotTravel(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.spark.SnapshotLog
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-snap-q-" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val basePath = new org.apache.hadoop.fs.Path(base)
-    basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(basePath, true)
-    def slice(pred: org.apache.spark.sql.Column) =
-      table(spark, dir, "documents").filter(pred)
-        .select(
-          lpad(col("doc_id").cast("string"), 8, "0").as("doc_id"),
-          array(col("n_chars").cast("int")).as("tokens"),
-          lit(1).as("n_tok"),
-          col("lang").as("source"))
-        .as[TokenRow]
-    // ONE bounds pass shared by every append: the slices share the full
-    // table's key distribution, so per-slice re-sampling bought nothing
-    // but an extra scan+collect per encode (layout-only; rows unchanged)
-    val bounds = EncodePipeline.massBalancedBounds(slice(lit(true)), 4)
-    def append(rows: org.apache.spark.sql.Dataset[TokenRow]): Unit =
-      EncodePipeline.encode(rows, numParts = 4, tokensPerChunk = 2048,
-          boundsOverride = Some(bounds))
-        .write.mode("append")
-        .option("compression", EncodePipeline.ChunkTableCompression)
-        .parquet(s"$base/chunks")
-    append(slice(col("doc_id") % 2 === 0))
-    val v1 = SnapshotLog.commit(spark, base, "append")
-    append(slice(col("doc_id") % 2 === 1))
-    SnapshotLog.commit(spark, base, "append")
+    val t = new SnapshotTable(spark, dir, "snap")
+    val v1 = t.append(col("doc_id") % 2 === 0)
+    t.append(col("doc_id") % 2 === 1)
     def decodeAt(v: Option[Int], tag: Int) =
-      EncodePipeline.decodeDF(
-          SnapshotLog.readChunks(spark, base, v).as[graft.spark.EncodedChunk])
-        .select(lit(tag).as("snap"), col("doc_id"), col("source"),
-          col("n_tok").cast("long").as("n_tok"))
+      snapView(EncodePipeline.decodeDF(
+        SnapshotLog.readChunks(spark, t.base, v).as[EncodedChunk]), tag)
     decodeAt(Some(v1), 1).unionAll(decodeAt(None, 2))
       .orderBy("snap", "doc_id")
   }
@@ -1380,41 +1179,13 @@ object RoundTrips {
     * (post-compaction — same rows from a rewritten file set). The
     * oracle restates all three relationally. */
   def snapshotDelete(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import graft.spark.SnapshotLog
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-snapdel-q-" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val basePath = new org.apache.hadoop.fs.Path(base)
-    basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(basePath, true)
-    def slice(pred: org.apache.spark.sql.Column) =
-      table(spark, dir, "documents").filter(pred)
-        .select(
-          lpad(col("doc_id").cast("string"), 8, "0").as("doc_id"),
-          array(col("n_chars").cast("int")).as("tokens"),
-          lit(1).as("n_tok"),
-          col("lang").as("source"))
-        .as[TokenRow]
-    // ONE bounds pass shared by every append (see snapshotTravel)
-    val bounds = EncodePipeline.massBalancedBounds(slice(lit(true)), 4)
-    def append(rows: org.apache.spark.sql.Dataset[TokenRow]): Unit =
-      EncodePipeline.encode(rows, numParts = 4, tokensPerChunk = 2048,
-          boundsOverride = Some(bounds))
-        .write.mode("append")
-        .option("compression", EncodePipeline.ChunkTableCompression)
-        .parquet(s"$base/chunks")
-    append(slice(col("doc_id") % 2 === 0))
-    SnapshotLog.commit(spark, base, "append")
-    append(slice(col("doc_id") % 2 === 1))
-    val v2 = SnapshotLog.commit(spark, base, "append")
-    val v3 = SnapshotLog.deleteWhere(spark, base, col("source") === "de")
-    val v4 = SnapshotLog.compactTable(spark, base, tokensPerChunk = 2048)
-    def at(v: Int, tag: Int) =
-      SnapshotLog.readRows(spark, base, Some(v))
-        .select(lit(tag).as("snap"), col("doc_id"), col("source"),
-          col("n_tok").cast("long").as("n_tok"))
-    at(v2, 1).unionAll(at(v3, 2)).unionAll(at(v4, 3))
+    val t = new SnapshotTable(spark, dir, "snapdel")
+    t.append(col("doc_id") % 2 === 0)
+    val v2 = t.append(col("doc_id") % 2 === 1)
+    val v3 = SnapshotLog.deleteWhere(spark, t.base, col("source") === "de")
+    val v4 = SnapshotLog.compactTable(spark, t.base, tokensPerChunk = 2048)
+    rowsAt(spark, t.base, v2, 1).unionAll(rowsAt(spark, t.base, v3, 2))
+      .unionAll(rowsAt(spark, t.base, v4, 3))
       .orderBy("snap", "doc_id")
   }
 
@@ -1429,9 +1200,8 @@ object RoundTrips {
     * trailing per-customer aggregate shuffles (different key) — only
     * the JOIN rides the buckets. */
   def bucketedJoin(spark: SparkSession, dir: String): DataFrame = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-bktjoin-q-$tag"
+    val tag = dirKey(dir)
+    val base = scratch(dir, "bktjoin")
     val (liTbl, ordTbl) = (s"graft_bkt_li_$tag", s"graft_bkt_ord_$tag")
     spark.sql(s"DROP TABLE IF EXISTS $liTbl")
     spark.sql(s"DROP TABLE IF EXISTS $ordTbl")
@@ -1469,40 +1239,13 @@ object RoundTrips {
     * delete. Output tags: 2 = feed v1→v2, 3 = feed v2→v3,
     * 4 = feed v1→v4 (across the delete). */
   def snapshotIncremental(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import graft.spark.SnapshotLog
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-snapinc-q-" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val basePath = new org.apache.hadoop.fs.Path(base)
-    basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(basePath, true)
-    def slice(pred: org.apache.spark.sql.Column) =
-      table(spark, dir, "documents").filter(pred)
-        .select(
-          lpad(col("doc_id").cast("string"), 8, "0").as("doc_id"),
-          array(col("n_chars").cast("int")).as("tokens"),
-          lit(1).as("n_tok"),
-          col("lang").as("source"))
-        .as[TokenRow]
-    // ONE bounds pass shared by every append (see snapshotTravel)
-    val bounds = EncodePipeline.massBalancedBounds(slice(lit(true)), 4)
-    def append(rows: org.apache.spark.sql.Dataset[TokenRow]): Int = {
-      EncodePipeline.encode(rows, numParts = 4, tokensPerChunk = 2048,
-          boundsOverride = Some(bounds))
-        .write.mode("append")
-        .option("compression", EncodePipeline.ChunkTableCompression)
-        .parquet(s"$base/chunks")
-      SnapshotLog.commit(spark, base, "append")
-    }
-    val v1 = append(slice(col("doc_id") % 3 === 0))
-    val v2 = append(slice(col("doc_id") % 3 === 1))
-    val v3 = append(slice(col("doc_id") % 3 === 2))
-    val v4 = SnapshotLog.deleteWhere(spark, base, col("source") === "de")
+    val t = new SnapshotTable(spark, dir, "snapinc")
+    val v1 = t.append(col("doc_id") % 3 === 0)
+    val v2 = t.append(col("doc_id") % 3 === 1)
+    val v3 = t.append(col("doc_id") % 3 === 2)
+    val v4 = SnapshotLog.deleteWhere(spark, t.base, col("source") === "de")
     def feed(from: Int, to: Int, tag: Int) =
-      SnapshotLog.readIncremental(spark, base, from, to)
-        .select(lit(tag).as("snap"), col("doc_id"), col("source"),
-          col("n_tok").cast("long").as("n_tok"))
+      snapView(SnapshotLog.readIncremental(spark, t.base, from, to), tag)
     feed(v1, v2, 2).unionAll(feed(v2, v3, 3)).unionAll(feed(v1, v4, 4))
       .orderBy("snap", "doc_id")
   }
@@ -1519,33 +1262,9 @@ object RoundTrips {
     * Oracle: full recompute over the final state — incremental
     * maintenance must be indistinguishable from it. */
   def incrementalMv(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import graft.spark.SnapshotLog
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-incmv-q-" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val basePath = new org.apache.hadoop.fs.Path(base)
-    basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(basePath, true)
-    def slice(pred: org.apache.spark.sql.Column) =
-      table(spark, dir, "documents").filter(pred)
-        .select(
-          lpad(col("doc_id").cast("string"), 8, "0").as("doc_id"),
-          array(col("n_chars").cast("int")).as("tokens"),
-          lit(1).as("n_tok"),
-          col("lang").as("source"))
-        .as[TokenRow]
-    // ONE bounds pass shared by every append (see snapshotTravel)
-    val bounds = EncodePipeline.massBalancedBounds(slice(lit(true)), 4)
-    def append(rows: org.apache.spark.sql.Dataset[TokenRow]): Int = {
-      EncodePipeline.encode(rows, numParts = 4, tokensPerChunk = 2048,
-          boundsOverride = Some(bounds))
-        .write.mode("append")
-        .option("compression", EncodePipeline.ChunkTableCompression)
-        .parquet(s"$base/chunks")
-      SnapshotLog.commit(spark, base, "append")
-    }
-    def aggOf(rows: org.apache.spark.sql.Dataset[TokenRow]): DataFrame =
+    val t = new SnapshotTable(spark, dir, "incmv")
+    val base = t.base
+    def aggOf(rows: Dataset[TokenRow]): DataFrame =
       rows.groupBy("source").agg(
         count(lit(1)).as("n_docs"),
         sum(element_at(col("tokens"), 1).cast("long")).as("sum_chars"))
@@ -1556,11 +1275,11 @@ object RoundTrips {
         .agg(sum("n_docs").as("n_docs"), sum("sum_chars").as("sum_chars"))
         .filter(col("n_docs") > 0)
         .write.mode("overwrite").parquet(mvPath(v))
-    val v1 = append(slice(col("doc_id") % 3 === 0))
+    val v1 = t.append(col("doc_id") % 3 === 0)
     aggOf(SnapshotLog.readRows(spark, base)).write.parquet(mvPath(v1))
-    val v2 = append(slice(col("doc_id") % 3 === 1))
+    val v2 = t.append(col("doc_id") % 3 === 1)
     fold(v1, v2, aggOf(SnapshotLog.readIncremental(spark, base, v1, v2)))
-    val v3 = append(slice(col("doc_id") % 3 === 2))
+    val v3 = t.append(col("doc_id") % 3 === 2)
     fold(v2, v3, aggOf(SnapshotLog.readIncremental(spark, base, v2, v3)))
     // retraction: the delete's victim rows, aggregated and negated —
     // read at the PRE-delete version so the subtraction is exact
@@ -1583,44 +1302,24 @@ object RoundTrips {
     * (merge-on-read upsert), v3 (post-compaction fold — must equal v2
     * from a rewritten file set). Oracle restates all three. */
   def snapshotUpsert(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import graft.spark.SnapshotLog
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-snapups-q-" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val basePath = new org.apache.hadoop.fs.Path(base)
-    basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(basePath, true)
-    def rowsOf(df: DataFrame) = df
-      .select(
-        lpad(col("id").cast("string"), 8, "0").as("doc_id"),
-        array(col("n_chars").cast("int")).as("tokens"),
-        lit(1).as("n_tok"),
-        col("src").as("source"))
-      .as[TokenRow]
+    val base = freshScratch(spark, dir, "snapups")
+    def rowsOf(df: DataFrame) = docRows(df, Seq(col("n_chars").cast("int")), col("src"))
     val docs = table(spark, dir, "documents")
-    EncodePipeline.encode(
-        rowsOf(docs.select(col("doc_id").as("id"), col("n_chars"),
-          col("lang").as("src"))),
-        numParts = 4, tokensPerChunk = 2048)
-      .write.mode("append")
-      .option("compression", EncodePipeline.ChunkTableCompression)
-      .parquet(s"$base/chunks")
+    writeChunks(EncodePipeline.encode(
+        rowsOf(docs.select(col("doc_id"), col("n_chars"), col("lang").as("src"))),
+        numParts = 4, tokensPerChunk = 2048), s"$base/chunks", "append")
     val v1 = SnapshotLog.commit(spark, base, "append")
     val incoming = rowsOf(
       docs.filter(col("lang") === "fr")
-        .select(col("doc_id").as("id"), col("n_chars"), lit("fr2").as("src"))
-        .unionByName(docs.select((col("doc_id") + 50000000L).as("id"),
+        .select(col("doc_id"), col("n_chars"), lit("fr2").as("src"))
+        .unionByName(docs.select((col("doc_id") + 50000000L).as("doc_id"),
           col("n_chars"), lit("new").as("src"))
-          .orderBy("id").limit(40))) // sort-then-limit: deterministic 40
+          .orderBy("doc_id").limit(40))) // sort-then-limit: deterministic 40
     val v2 = SnapshotLog.upsert(spark, base, incoming, numParts = 4,
       tokensPerChunk = 2048)
     val v3 = SnapshotLog.compactTable(spark, base, tokensPerChunk = 2048)
-    def at(v: Int, tag: Int) =
-      SnapshotLog.readRows(spark, base, Some(v))
-        .select(lit(tag).as("snap"), col("doc_id"), col("source"),
-          col("n_tok").cast("long").as("n_tok"))
-    at(v1, 1).unionAll(at(v2, 2)).unionAll(at(v3, 3))
+    rowsAt(spark, base, v1, 1).unionAll(rowsAt(spark, base, v2, 2))
+      .unionAll(rowsAt(spark, base, v3, 3))
       .orderBy("snap", "doc_id")
   }
 
@@ -1634,13 +1333,7 @@ object RoundTrips {
   def chunkJoin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val docs = table(spark, dir, "documents")
-    val rows = docs
-      .select(
-        lpad(col("doc_id").cast("string"), 8, "0").as("doc_id"),
-        array(col("n_chars").cast("int")).as("tokens"),
-        lit(1).as("n_tok"),
-        col("lang").as("source"))
-      .as[TokenRow]
+    val rows = charRows(docs)
     val bounds = EncodePipeline.massBalancedBounds(rows, 4)
     val chunks = EncodePipeline.encode(rows, numParts = 4,
       tokensPerChunk = 2048, boundsOverride = Some(bounds))

@@ -81,7 +81,7 @@ object EncodePipeline {
     * already compressed by the engine's own codecs (high-entropy bytes),
     * so parquet-level snappy re-compression saved a measured 1.6% of
     * bytes while costing ~5× the binary-scan CPU at 32 threads
-    * (DecodeScaleProbe, round 4: 1.66 s vs 0.30 s for the same scan).
+    * (round 4 decode-scan probe: 1.66 s vs 0.30 s for the same scan).
     * At 100 TB that trade is strictly worse — decode is the hot path,
     * and the bytes are incompressible by construction. */
   final val ChunkTableCompression = "uncompressed"
@@ -275,6 +275,18 @@ object EncodePipeline {
       }
       val streamCrcs = Seq(crcOf(tokensBin), crcOf(lensBin), crcOf(docBin),
         crcOf(srcBin), crcOf(bloomBin))
+      // key range in unsigned-byte order (UTF8String.compareTo, the
+      // order pruning and compaction compare in): arrival order is only
+      // the key order for sorted input, not for an aligned micro-batch
+      var lo = docArr(0)
+      var hi = lo
+      i = 1
+      while (i < nRows) {
+        val d = docArr(i)
+        if (java.util.Arrays.compareUnsigned(d, lo) < 0) lo = d
+        if (java.util.Arrays.compareUnsigned(d, hi) > 0) hi = d
+        i += 1
+      }
       val rawBytes = 4L * nTokens + 4L * lensArr.length +
         docArr.map(_.length.toLong).sum +
         srcArr.map(s => if (s == null) 0L else s.length.toLong).sum
@@ -285,8 +297,8 @@ object EncodePipeline {
         num_tokens = nTokens.toLong,
         tokens_nulls = tokensNulls,
         source_nulls = srcNulls,
-        first_doc_id = new String(docArr(0), UTF_8),
-        last_doc_id = new String(docArr(nRows - 1), UTF_8),
+        first_doc_id = new String(lo, UTF_8),
+        last_doc_id = new String(hi, UTF_8),
         tokens_codec = tokensCodec,
         lens_codec = lensCodec,
         docid_codec = docCodec,

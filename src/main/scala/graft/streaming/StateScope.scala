@@ -14,12 +14,11 @@ import org.apache.spark.sql.SparkSession
   * state partitions vs 3.6 s at the data-derived count — ~0.5 s of pure
   * store machinery per state task, none of it data.
   *
-  * The default derives the partition count from the (already known)
-  * input row count at ~32k rows per state partition and CAPS at the
+  * The scope derives the partition count from the (already known)
+  * input row count at ~32k rows per state partition and CAPS it at the
   * session's own `spark.sql.shuffle.partitions` — so at production
   * volume the formula saturates to exactly the cluster-sized fan-out
-  * and this scope becomes the identity. A deployment can pin the value
-  * explicitly with `spark.graft.streaming.statePartitions`. (Measured
+  * and this scope becomes the identity. (Measured
   * on the stream-stream join, which keeps ~4 stores per side per
   * partition: 8 parts = 5.6-6.8 s, 4 = 3.9-4.2 s, 2 = 3.6 s, 1 = 3.5 s
   * for the same result — the store count, not the data, is the cost.)
@@ -32,9 +31,7 @@ import org.apache.spark.sql.SparkSession
 object StateScope {
   def withStateParts[T](spark: SparkSession, nRows: Long)(body: => T): T = {
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val parts = spark.conf.getOption("spark.graft.streaming.statePartitions")
-      .map(_.toInt)
-      .getOrElse(math.max(1L, math.min(prev.toLong, (nRows + 32767) / 32768)).toInt)
+    val parts = math.max(1L, math.min(prev.toLong, (nRows + 32767) / 32768))
     spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
     try body
     finally spark.conf.set("spark.sql.shuffle.partitions", prev)

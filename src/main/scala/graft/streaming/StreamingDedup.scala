@@ -59,7 +59,7 @@ object StreamingDedup {
     val ms = MemoryStream[(Long, String)](spark)
     val out = dedupByContent(ms.toDF().toDF("doc_id", "text"))
     // state fan-out sized to the data, not the session constant — see
-    // [[StateScope]] (result-invariant; conf-overridable)
+    // [[StateScope]] (result-invariant)
     StateScope.withStateParts(spark, batches.map(_.size.toLong).sum) {
       val q = out.writeStream.outputMode("append")
         .format("memory").queryName(queryName).start()

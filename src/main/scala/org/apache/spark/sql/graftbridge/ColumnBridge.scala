@@ -12,7 +12,8 @@ import org.apache.spark.sql.types.StructType
   * `SparkSession.internalCreateDataFrame` are `private[sql]`. This shim
   * lives in a subpackage of org.apache.spark.sql solely to bridge
   * graft's custom Catalyst expressions and InternalRow-producing decode
-  * kernels into DataFrame code — no Spark internals are modified.
+  * kernels into DataFrame code (plus one listener-bus drain for
+  * `graft.Probe`) — no Spark internals are modified.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -42,4 +43,10 @@ object ColumnBridge {
     * rules (the public extension point for custom operators). */
   def experimental(spark: SparkSession): ExperimentalMethods =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
+
+  /** Blocks until every posted listener event has been delivered, so a
+    * listener's counters are complete once an action returns (the
+    * listener bus is `private[spark]`). */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

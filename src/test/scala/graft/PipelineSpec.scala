@@ -132,6 +132,36 @@ class PipelineSpec extends AnyFunSuite with TempDirs {
     assert(EncodePipeline.verifyRoundTrip(rows, decoded) == 0L)
   }
 
+  test("micro-batch chunks stamp their doc_id key range, not arrival order") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val dir = tmpDir("stream-bounds")
+    // every input partition arrives in REVERSE doc_id order
+    val rows = (0 until 600).map(i => TokenTableGen.genRow(i.toLong)).sortBy(_.doc_id).reverse
+    graft.streaming.StreamingEncode.writeBatch(spark.createDataset(rows), 0L,
+      s"$dir/chunks", 4096, graft.codec.BlockCompression.None)
+    val persisted = spark.read.parquet(s"$dir/chunks").as[EncodedChunk]
+    val chunks = persisted.collect()
+    assert(chunks.length > 4, "small chunks: several per partition")
+    chunks.foreach { c =>
+      val ids = EncodePipeline.decodeChunkRows(c, 0, c.num_rows).map(_.doc_id).toSeq
+      assert(c.first_doc_id == ids.min && c.last_doc_id == ids.max,
+        s"chunk ${c.chunk_id} stamped [${c.first_doc_id}, ${c.last_doc_id}]")
+    }
+    // the doc_id pushdown prunes on those ranges: a middle key must survive
+    val x = rows(rows.length / 2).doc_id
+    assert(EncodePipeline.decodeDF(persisted).filter(col("doc_id") === x)
+      .select("doc_id").as[String].collect().toSeq == Seq(x))
+    // compaction finds the chunks a delete dirtied by the same ranges
+    SnapshotLog.commit(spark, dir, "append")
+    val victims = rows.map(_.doc_id).filter(_.hashCode % 7 == 0)
+    assert(victims.nonEmpty)
+    SnapshotLog.deleteWhere(spark, dir, col("doc_id").isin(victims: _*))
+    SnapshotLog.compactTable(spark, dir, tokensPerChunk = 4096)
+    val live = rows.map(_.doc_id).filterNot(victims.toSet).sorted
+    assert(SnapshotLog.readRows(spark, dir).map(_.doc_id).collect().sorted.toSeq == live)
+  }
+
   test("aligned encode round-trips without an exchange") {
     import spark.implicits._
     val src = TokenTableGen.generate(spark, 3000, 5)
