@@ -657,9 +657,9 @@ object RoundTrips {
 
   /** AUTOMATIC chunk pruning: a plain `.filter` over the default
     * persisted generic table — no manual pruneRange/pruneBloom call
-    * anywhere — must prune chunks via the GenericChunkFilterPushdown
-    * optimizer rule (min/max interval + null-count + bloom checks grown
-    * below the decode node). GenericStatsSpec proves the pruning is
+    * anywhere — must prune chunks via the ChunkFilterPushdown optimizer
+    * rule (min/max interval + null-count + bloom checks grown below the
+    * decode node). GenericStatsSpec proves the pruning is
     * real with corrupted out-of-range chunks; this query proves the
     * end-to-end values against the SQL restatement. */
   def autoPrune(spark: SparkSession, dir: String): DataFrame = {
@@ -705,9 +705,9 @@ object RoundTrips {
 
   /** AUTOMATIC token search: the same membership query as
     * [[searchToken]] but written as a plain `.filter(array_contains)`
-    * over a PERSISTED chunk table — the TokenChunkFilterPushdown rule
-    * grows the min/max + bloom chunk pruning that searchToken applies
-    * by hand (PipelineSpec proves the pruning with corrupted
+    * over a PERSISTED chunk table — the ChunkFilterPushdown rule grows
+    * the min/max + bloom chunk pruning that searchToken applies by
+    * hand (PipelineSpec proves the pruning with corrupted
     * out-of-range chunks). Same oracle as q_search_token. */
   def autoSearch(spark: SparkSession, dir: String): DataFrame = {
     val base = scratch(dir, "autosearch")

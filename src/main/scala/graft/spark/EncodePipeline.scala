@@ -336,16 +336,22 @@ object EncodePipeline {
              tokensPerChunk: Int = DefaultTokensPerChunk,
              boundsOverride: Option[Array[String]] = None,
              blockCodec: Int = BlockCompression.None): Dataset[EncodedChunk] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
     val bounds = boundsOverride.getOrElse(massBalancedBounds(ds, numParts))
-    val laid = withPartId(ds, bounds)
+    encodeAssigned(withPartId(ds, bounds), numParts, tokensPerChunk, blockCodec)
+  }
+
+  /** Hash-exchange rows that already carry their part_id on that column,
+    * sort each partition by (part_id, doc_id) and encode it to chunks. */
+  private def encodeAssigned(assigned: DataFrame, numParts: Int, tokensPerChunk: Int,
+                             blockCodec: Int): Dataset[EncodedChunk] = {
+    val spark = assigned.sparkSession
+    import spark.implicits._
+    val laid = assigned
       .repartition(math.max(numParts, 1), col("part_id"))
       .sortWithinPartitions(col("part_id"), col("doc_id"))
     // schema: doc_id(0), tokens(1), n_tok(2), source(3), part_id(4)
-    val chunkRdd = laid.queryExecution.toRdd
-      .mapPartitions(encodePartition(_, tokensPerChunk, blockCodec))
-    spark.createDataset(chunkRdd)
+    spark.createDataset(laid.queryExecution.toRdd
+      .mapPartitions(encodePartition(_, tokensPerChunk, blockCodec)))
   }
 
   /** Layout-aligned encode: when the input table is ALREADY range-laid-out
@@ -362,33 +368,27 @@ object EncodePipeline {
     import spark.implicits._
     val rdd = ds.toDF().queryExecution.toRdd.mapPartitions { iter =>
       val pid = partIdOffset + TaskContext.getPartitionId()
-      val out = new scala.collection.mutable.ArrayBuffer[EncodedChunk]()
-      val enc = new PartitionEncoder(pid, tokensPerChunk, blockCodec)
-      iter.foreach { row =>
-        enc.add(
-          row.getUTF8String(0).getBytes,
-          if (row.isNullAt(1)) null else row.getArray(1).toIntArray(),
-          if (row.isNullAt(3)) null else row.getUTF8String(3).getBytes,
-          out += _)
-      }
-      if (enc.nonEmpty) out += enc.flush()
-      out.iterator
+      encodePartition(iter, tokensPerChunk, blockCodec, _ => pid)
     }
     spark.createDataset(rdd)
   }
 
   /** Hash-partitioning on part_id can co-locate several logical partitions
     * in one Spark partition; the sort keeps them contiguous, so cut a new
-    * encoder whenever part_id changes. InternalRows are reused by the
-    * scan — every retained byte is copied out (getBytes / toIntArray). */
+    * encoder whenever part_id changes. `partId` reads a row's part_id
+    * (by default the ordinal-4 column of the exchanged layout).
+    * InternalRows are reused by the scan — every retained byte is copied
+    * out (getBytes / toIntArray). */
   private def encodePartition(iter: Iterator[org.apache.spark.sql.catalyst.InternalRow],
                               tokensPerChunk: Int,
-                              blockCodec: Int = BlockCompression.None): Iterator[EncodedChunk] = {
+                              blockCodec: Int = BlockCompression.None,
+                              partId: org.apache.spark.sql.catalyst.InternalRow => Int =
+                                _.getInt(4)): Iterator[EncodedChunk] = {
     val out = new scala.collection.mutable.ArrayBuffer[EncodedChunk]()
     var enc: PartitionEncoder = null
     var curPid = Int.MinValue
     iter.foreach { row =>
-      val p = row.getInt(4)
+      val p = partId(row)
       if (p != curPid) {
         if (enc != null && enc.nonEmpty) out += enc.flush()
         enc = new PartitionEncoder(p, tokensPerChunk, blockCodec)
@@ -519,6 +519,22 @@ object EncodePipeline {
       .select("chunk_id", "row_start", "num_rows")
   }
 
+  /** chunk_id → the in-chunk row range [from, to) of every chunk of a row
+    * index (`rowIndexOf`'s columns) that covers global rows
+    * [start, start + count). Only the covering chunks reach the driver. */
+  private[spark] def coveringRanges(index: DataFrame, start: Long,
+                                    count: Long): Map[Long, (Int, Int)] =
+    index
+      .filter(col("row_start") < start + count &&
+        col("row_start") + col("num_rows") > start)
+      .collect() // O(covering chunks)
+      .map { r =>
+        val rowStart = r.getLong(1)
+        val lo = math.max(start, rowStart)
+        val hi = math.min(start + count, rowStart + r.getInt(2))
+        r.getLong(0) -> ((lo - rowStart).toInt, (hi - rowStart).toInt)
+      }.toMap
+
   /** Seek by global row offset in the chunk table's canonical order
     * (part_id, chunk_id, row-in-chunk): the distributed row index picks
     * the covering chunks (only THOSE reach the driver — O(count/chunk),
@@ -531,18 +547,7 @@ object EncodePipeline {
                  index: Option[DataFrame] = None): Dataset[TokenRow] = {
     val spark = chunks.sparkSession
     import spark.implicits._
-    val covering = index.getOrElse(rowIndex(chunks))
-      .filter(col("row_start") < start + count &&
-        col("row_start") + col("num_rows") > start)
-      .collect() // O(covering chunks)
-    val ranges: Map[Long, (Int, Int)] = covering.map { r =>
-      val id = r.getLong(0)
-      val rowStart = r.getLong(1)
-      val n = r.getInt(2)
-      val lo = math.max(start, rowStart)
-      val hi = math.min(start + count, rowStart + n)
-      id -> ((lo - rowStart).toInt, (hi - rowStart).toInt)
-    }.toMap
+    val ranges = coveringRanges(index.getOrElse(rowIndex(chunks)), start, count)
     val bc = spark.sparkContext.broadcast(ranges)
     chunks
       // Column-level filter (not a typed closure): the candidate id set is
@@ -624,7 +629,6 @@ object EncodePipeline {
   def encodeCheckpointed(spark: SparkSession, ds: Dataset[TokenRow], numParts: Int,
                          dir: String,
                          tokensPerChunk: Int = DefaultTokensPerChunk): DataFrame = {
-    import spark.implicits._
     // All checkpoint metadata I/O goes through the Hadoop FileSystem API,
     // so `dir` can be any URI (file:, hdfs:, s3a:). Round 1 used
     // java.io.File for bounds + existence checks — on an object store the
@@ -679,11 +683,7 @@ object EncodePipeline {
         // using-joins move the key column first; the encode kernel below
         // reads InternalRow ordinals, so restore the original layout
         .select(assigned.columns.map(col).toSeq: _*)
-    val laid = todo
-      .repartition(math.max(numParts, 1), col("part_id"))
-      .sortWithinPartitions(col("part_id"), col("doc_id"))
-    val chunks = spark.createDataset(
-      laid.queryExecution.toRdd.mapPartitions(encodePartition(_, tokensPerChunk)))
+    val chunks = encodeAssigned(todo, numParts, tokensPerChunk, BlockCompression.None)
     // dynamic partition overwrite: a re-encoded part_id atomically replaces
     // its directory, so a partition that crashed mid-write last attempt
     // can never leave duplicate chunks behind
@@ -759,14 +759,13 @@ object EncodePipeline {
     // chunk scan, then the projected columnar decode touches ONLY the
     // tokens and doc_id streams — the source stream of a matching chunk
     // is never fetched, CRC'd, or decoded (round 2 paid the full 4-stream
-    // decode per surviving chunk).
-    val pruned = chunks.toDF()
-      .filter(col("tokens_min") <= tokenId && col("tokens_max") >= tokenId)
-      .filter(org.apache.spark.sql.graftbridge.ColumnBridge.column(
-        graft.functions.BloomMightContain(
-          org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute("tokens_bloom"),
-          org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute("stream_crcs"),
-          org.apache.spark.sql.catalyst.expressions.Literal(tokenId))))
+    // decode per surviving chunk). The stats filter is explicit (the
+    // checks ChunkFilterPushdown grows for array_contains) because
+    // in-memory chunk Datasets carry no stats columns for the rule to see.
+    val pruned = chunks.toDF().filter(org.apache.spark.sql.graftbridge.ColumnBridge.column(
+      graft.plans.TokenLayout.containsToken(
+        org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(_), tokenId)
+        .reduce(org.apache.spark.sql.catalyst.expressions.And)))
     graft.plans.GraftPlans.decodeDF(pruned, Seq("doc_id", "tokens"))
       .where(array_contains(col("tokens"), tokenId))
       .select(col("doc_id")).as[String]

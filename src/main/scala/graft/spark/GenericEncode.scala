@@ -909,7 +909,7 @@ object GenericEncode {
       case None if tpe == "float" =>
         // float space on BOTH sides (stat strings round-trip via
         // Float.parseFloat; widening only one side to double mis-prunes
-        // bounds like 0.7 — see GenericChunkFilterPushdown)
+        // bounds like 0.7 — see plans.GenericLayout)
         val mn = mn0.cast("float")
         val mx = mx0.cast("float")
         hi.foreach(h => cond = cond && (mn.isNull || mn <= flit(h.trim.toFloat)))
@@ -946,28 +946,16 @@ object GenericEncode {
                cols: Seq[String] = Seq.empty): DataFrame = {
     val meta = metaHead(chunks)
     if (meta.isEmpty) return spark.emptyDataFrame
-    val covering = EncodePipeline.rowIndexOf(chunks.toDF())
-      .filter(fcol("row_start") < start + count &&
-        fcol("row_start") + fcol("num_rows") > start)
-      .collect() // O(covering chunks)
-    val ranges: Map[Long, (Int, Int)] = covering.map { r =>
-      val id = r.getLong(0)
-      val rowStart = r.getLong(1)
-      val n = r.getInt(2)
-      id -> ((math.max(start, rowStart) - rowStart).toInt,
-        (math.min(start + count, rowStart + n) - rowStart).toInt)
-    }.toMap
+    val ranges = EncodePipeline.coveringRanges(
+      EncodePipeline.rowIndexOf(chunks.toDF()), start, count)
     val bc = spark.sparkContext.broadcast(ranges)
     val (allNames, allTypes) = meta.get
-    val selected = selectedCols(allNames, cols)
-    val attrs = attrsOf(allNames, allTypes, selected)
+    val (attrs, layout) = decodeLayout(allNames, allTypes, cols)
     val payload = binFrame(chunks, allNames.length)
       .filter(fcol("chunk_id").isin(ranges.keys.toSeq.map(Long.box): _*))
-      .select(payloadCols(selected).map(fcol): _*)
+      .select(layout.chunkCols(attrs).map(fcol): _*)
     val payloadNames = payload.columns.toSeq
     val iChunkId = payloadNames.indexOf("chunk_id")
-    val types = selected.map(allTypes(_)).toArray
-    val sel = selected.toArray
     val rowRdd = payload.queryExecution.toRdd.mapPartitions { it =>
       import scala.jdk.CollectionConverters._
       // the batch iterator pulls exactly one chunk row per batch, so the
@@ -975,7 +963,7 @@ object GenericEncode {
       var chunkId = 0L
       val tagged = it.map { r => chunkId = r.getLong(iChunkId); r }
       val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(attrs, attrs)
-      new graft.plans.GenericChunkBatchIterator(tagged, payloadNames, attrs, sel, types)
+      layout.batches(tagged, payloadNames, attrs)
         .flatMap { batch =>
           val (from, to) = bc.value(chunkId)
           batch.rowIterator().asScala.slice(from, to).map(r => proj(r).copy(): InternalRow)
@@ -1036,7 +1024,7 @@ object GenericEncode {
           "GenericEncode.encodeWrite (per-column bin_<i> layout)")
     val head = df.select("col_names", "col_types").limit(1).collect()
     if (head.isEmpty) spark.emptyDataFrame
-    else decodeBins(spark, df, head(0).getSeq[String](0), head(0).getSeq[String](1), cols)
+    else decodeBins(df, head(0).getSeq[String](0), head(0).getSeq[String](1), cols)
   }
 
   /** Least common type of two column types under the engine's widening
@@ -1123,46 +1111,38 @@ object GenericEncode {
     metaHead(chunks) match {
       case None => spark.emptyDataFrame
       case Some((names, types)) =>
-        decodeBins(spark, binFrame(chunks, names.length), names, types, cols)
+        decodeBins(binFrame(chunks, names.length), names, types, cols)
     }
 
-  /** The one generic decode: a columnar Catalyst plan
-    * (plans.DecodeGenericChunksExec) over a `bin_<i>` frame decodes each
-    * chunk column straight into reused OnHeapColumnVectors — no boxed
-    * value per row — and a parent Project narrows the decode (and the
-    * scan's payload columns) automatically, the same optimizer rule
-    * family as the token pipeline's decodeDF. Every read column's CRC is
+  /** The one generic decode: the columnar Catalyst decode plan
+    * (plans.DecodeChunksExec with a GenericLayout) over a `bin_<i>` frame
+    * decodes each chunk column straight into reused OnHeapColumnVectors —
+    * no boxed value per row — and a parent Project narrows the decode
+    * (and the scan's payload columns) automatically, the same optimizer
+    * rules as the token pipeline's decodeDF. Every read column's CRC is
     * verified per chunk. */
-  private def decodeBins(spark: SparkSession, bins: DataFrame, names: Seq[String],
-                         types: Seq[String], cols: Seq[String]): DataFrame = {
-    val selected = selectedCols(names, cols)
-    val attrs = attrsOf(names, types, selected)
-    graft.plans.GraftPlans.install(spark)
-    val bridge = org.apache.spark.sql.graftbridge.ColumnBridge
-    val projected = bins.select(payloadCols(selected).map(fcol): _*)
-    val flat = bridge.ofRows(spark, graft.plans.DecodeGenericChunks(
-      attrs, selected, selected.map(types(_)), bridge.analyzedPlan(projected)))
+  private def decodeBins(bins: DataFrame, names: Seq[String], types: Seq[String],
+                         cols: Seq[String]): DataFrame = {
+    val (attrs, layout) = decodeLayout(names, types, cols)
+    val flat = graft.plans.GraftPlans.decode(bins, attrs, layout)
     if (attrs.exists(_.name.contains(Sep))) unflatten(flat) else flat
   }
 
-  /** Engine-column indices for the requested TOP-LEVEL columns (all when
-    * empty); a misspelled column fails loudly instead of decoding to
-    * zero-column rows. */
-  private def selectedCols(names: Seq[String], cols: Seq[String]): Seq[Int] =
-    if (cols.isEmpty) names.indices
-    else {
-      val keep = names.indices.filter(i => cols.contains(names(i).split(Sep, 2)(0)))
-      require(keep.nonEmpty, s"no requested column among $cols in table schema")
-      keep
-    }
-
-  private def attrsOf(names: Seq[String], types: Seq[String], selected: Seq[Int]) =
-    selected.map(i => org.apache.spark.sql.catalyst.expressions.AttributeReference(
-      names(i), parseType(types(i)), nullable = true)())
-
-  /** The chunk columns a decode of `selected` reads. */
-  private def payloadCols(selected: Seq[Int]): Seq[String] =
-    Seq("num_rows", "chunk_id", "col_crcs") ++ selected.map(i => s"bin_$i")
+  /** Output attributes and decode layout for the requested TOP-LEVEL
+    * columns (all when empty); a misspelled column fails loudly instead
+    * of decoding to zero-column rows. */
+  private def decodeLayout(names: Seq[String], types: Seq[String], cols: Seq[String]) = {
+    val selected =
+      if (cols.isEmpty) names.indices
+      else {
+        val keep = names.indices.filter(i => cols.contains(names(i).split(Sep, 2)(0)))
+        require(keep.nonEmpty, s"no requested column among $cols in table schema")
+        keep
+      }
+    (selected.map(i => org.apache.spark.sql.catalyst.expressions.AttributeReference(
+      names(i), parseType(types(i)), nullable = true)()),
+      graft.plans.GenericLayout(selected, selected.map(types)))
+  }
 
   private def parseType(s: String): DataType = s match {
     case "int" => IntegerType

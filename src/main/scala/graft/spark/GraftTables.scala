@@ -20,9 +20,9 @@ object GraftTables {
       .createOrReplaceTempView(name)
   }
 
-  /** Register a persisted GENERIC chunk table (either layout — columnar
-    * bin_<i> or legacy cols_bin) as SQL view `name` over its decoded
-    * rows in the original schema. */
+  /** Register a persisted GENERIC chunk table (`bin_<i>` layout; see
+    * `GenericEncode.readTable`) as SQL view `name` over its decoded rows
+    * in the original schema. */
   def registerGenericTable(spark: SparkSession, name: String, path: String): Unit =
     GenericEncode.readTable(spark, path).createOrReplaceTempView(name)
 }

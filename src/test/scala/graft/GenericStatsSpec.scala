@@ -166,6 +166,10 @@ class GenericStatsSpec extends AnyFunSuite with TempDirs {
     assert(out.count() == 301)
     assert(out.queryExecution.optimizedPlan.toString.contains("col_mins"),
       out.queryExecution.optimizedPlan.toString.take(2000))
+    // the same range with the upper bound's literal on the left
+    val flipped = GenericEncode.readTable(spark, s"$dir/t")
+      .filter(col("k") >= 3000 && lit(3300) >= col("k"))
+    assert(flipped.count() == 301)
     // equality additionally probes the per-column split-block bloom
     val eq = GenericEncode.readTable(spark, s"$dir/t")
       .filter(col("name") === "key-03100")

@@ -683,7 +683,7 @@ class PipelineSpec extends AnyFunSuite with TempDirs {
 
   test("token filters push down to chunk ranges and blooms automatically") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{array_contains, col}
+    import org.apache.spark.sql.functions.{array_contains, col, lit}
     // docs sorted by id; tokens(i) = [i/100] so per-chunk token ranges are
     // tight intervals aligned with the doc ranges
     val rows = spark.createDataset((0 until 2000).map(i =>
@@ -705,6 +705,10 @@ class PipelineSpec extends AnyFunSuite with TempDirs {
       .filter(col("doc_id") < "doc/000500")
     assert(byDoc.selectExpr("sum(size(tokens))").collect()(0).getLong(0) == 500L)
     assert(byDoc.queryExecution.optimizedPlan.toString.contains("first_doc_id"))
+    // the same bound with the literal on the left
+    val flipped = EncodePipeline.decodeDF(tbl)
+      .filter(lit("doc/000500") > col("doc_id"))
+    assert(flipped.selectExpr("sum(size(tokens))").collect()(0).getLong(0) == 500L)
     // array_contains → tokens_min/max + CRC-verified bloom probe
     val byTok = EncodePipeline.decodeDF(tbl)
       .filter(array_contains(col("tokens"), 3))
