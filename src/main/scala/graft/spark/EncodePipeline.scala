@@ -340,14 +340,17 @@ object EncodePipeline {
     encodeAssigned(withPartId(ds, bounds), numParts, tokensPerChunk, blockCodec)
   }
 
-  /** Hash-exchange rows that already carry their part_id on that column,
-    * sort each partition by (part_id, doc_id) and encode it to chunks. */
+  /** Route each row to the task whose index is its part_id (a pass-through
+    * exchange: part_id modulo the partition count, no hashing), sort each
+    * partition by (part_id, doc_id) and encode it to chunks. A hash
+    * exchange would leave some of the n tasks empty and stack several of
+    * the dense ids 0..n-1 on one task. */
   private def encodeAssigned(assigned: DataFrame, numParts: Int, tokensPerChunk: Int,
                              blockCodec: Int): Dataset[EncodedChunk] = {
     val spark = assigned.sparkSession
     import spark.implicits._
     val laid = assigned
-      .repartition(math.max(numParts, 1), col("part_id"))
+      .repartitionById(math.max(numParts, 1), col("part_id"))
       .sortWithinPartitions(col("part_id"), col("doc_id"))
     // schema: doc_id(0), tokens(1), n_tok(2), source(3), part_id(4)
     spark.createDataset(laid.queryExecution.toRdd
@@ -373,8 +376,8 @@ object EncodePipeline {
     spark.createDataset(rdd)
   }
 
-  /** Hash-partitioning on part_id can co-locate several logical partitions
-    * in one Spark partition; the sort keeps them contiguous, so cut a new
+  /** A task can hold several logical partitions (more bounds than tasks,
+    * or compaction groups); the sort keeps them contiguous, so cut a new
     * encoder whenever part_id changes. `partId` reads a row's part_id
     * (by default the ordinal-4 column of the exchanged layout).
     * InternalRows are reused by the scan — every retained byte is copied
@@ -861,7 +864,7 @@ object EncodePipeline {
 
   /** Core of [[compactSorted]] over pre-built inputs — `all` pairs each
     * chunk with a RUN id (chunk_ids are only unique within one encode
-    * run, so the pair is the global key), `meta` is the pruned
+    * run, so the pair is the global key), `metaPlan` is the pruned
     * (run, chunk_id, first_doc_id, last_doc_id) projection. `deletes`,
     * when present, is a (doc_id, del_seq) DataFrame of equality deletes
     * (Iceberg v2 style), SEQUENCE-SCOPED: a delete applies only to runs
@@ -877,7 +880,7 @@ object EncodePipeline {
     * the sweep itself is unchanged. */
   private[graft] def compactRuns(spark: SparkSession,
                                  all: Dataset[(Int, EncodedChunk)],
-                                 meta: DataFrame, outDir: String,
+                                 metaPlan: DataFrame, outDir: String,
                                  tokensPerChunk: Int,
                                  dropDuplicates: Boolean,
                                  deletes: Option[DataFrame],
@@ -891,6 +894,10 @@ object EncodePipeline {
     // real-sized while a toy table sweeps in ONE partition instead of
     // paying a 32-way range sample + 3 passes over 31 empty partitions.
     // Capped at the session's parallelism like every other derived count.
+    // The metadata plan (a scan of every input file, plus the run join for
+    // snapshot tables) runs once: the sweep and the dirty-chunk probe both
+    // read this cache.
+    val meta = metaPlan.cache()
     val metaCount = meta.count()
     val sweepParts = math.max(1L, math.min(
       spark.sessionState.conf.numShufflePartitions.toLong,
@@ -929,6 +936,7 @@ object EncodePipeline {
     val groupBase = new Array[Int](counts.length)
     var gAcc = 0
     counts.foreach { case (pid, c) => groupBase(pid) = gAcc; gAcc += c }
+    val numGroups = gAcc
     val bcBase = spark.sparkContext.broadcast(groupBase)
     // pass 3: the assignment TABLE (run, chunk_id, grp) — distributed, and
     // joined to the payloads instead of broadcast from the driver
@@ -1037,8 +1045,12 @@ object EncodePipeline {
             col("__del_seq") > decoded("__added"), "left_anti")
       case None => decoded
     }).select("doc_id", "tokens", "n_tok", "source", "part_id")
+    // group ids are dense (0..numGroups-1; bins are fewer), so routing by
+    // id spreads them round-robin and no task is left empty while there
+    // are groups for it
     val rows = surviving
-      .repartition(col("part_id"))
+      .repartitionById(math.max(1, math.min(
+        spark.sessionState.conf.numShufflePartitions, numGroups)), col("part_id"))
       .sortWithinPartitions("part_id", "doc_id")
     // after the per-partition sort duplicates are adjacent (groups are
     // disjoint doc_id intervals, so equal doc_ids share a group and a
@@ -1067,7 +1079,32 @@ object EncodePipeline {
       .option("compression", ChunkTableCompression)
       .parquet(outDir)
     sortedMeta.unpersist()
+    meta.unpersist()
+    dropEmptyParquet(spark, outDir)
     spark.read.parquet(outDir)
+  }
+
+  /** Delete the zero-row parquet files of an unpartitioned table: Spark's
+    * first write task leaves a schema-only file even when its partition
+    * is empty, and every later scan would open it. One file is kept when
+    * none holds rows, so the table still carries its schema. */
+  private def dropEmptyParquet(spark: SparkSession, dir: String): Unit = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sparkContext.hadoopConfiguration
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val hfs = path.getFileSystem(conf)
+    val files = hfs.listStatus(path).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+    val empty = files.filter { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      try r.getRecordCount == 0L finally r.close()
+    }
+    val drop = if (empty.length == files.length) empty.drop(1) else empty
+    drop.foreach { f =>
+      if (!hfs.delete(f, false) && hfs.exists(f))
+        throw new java.io.IOException(s"could not remove empty output file $f")
+    }
   }
 
   /** Round-trip validation: decoded rows must match the source exactly

@@ -681,6 +681,79 @@ class PipelineSpec extends AnyFunSuite with TempDirs {
     assert(EncodePipeline.verifyRoundTrip(rows(0 until 100), decoded) == 0L)
   }
 
+  test("encode gives part_id i its own task i") {
+    val src = TokenTableGen.generate(spark, 4000, 8)
+    Seq(2, 4, 8).foreach { n =>
+      val placed = EncodePipeline.encode(src, numParts = n, tokensPerChunk = 16 * 1024)
+        .rdd.mapPartitionsWithIndex((task, it) => it.map(c => (task, c.part_id)))
+        .collect().distinct.sorted.toSeq
+      assert(placed == (0 until n).map(i => (i, i)), s"numParts=$n: (task, part_id) $placed")
+    }
+  }
+
+  test("encode with more bounds than tasks still round-trips exactly") {
+    import spark.implicits._
+    val src = TokenTableGen.generate(spark, 3000, 8)
+    val bounds = EncodePipeline.massBalancedBounds(src, 8)
+    val chunks = EncodePipeline.encode(src, numParts = 3, tokensPerChunk = 16 * 1024,
+      boundsOverride = Some(bounds)).cache()
+    // 8 logical parts over 3 tasks: part p lands on task p mod 3
+    val placed = chunks.rdd.mapPartitionsWithIndex((task, it) => it.map(c => (task, c.part_id)))
+      .collect().distinct
+    assert(placed.map(_._2).toSet == (0 until 8).toSet)
+    assert(placed.forall { case (task, p) => p % 3 == task }, placed.sorted.mkString(","))
+    val decoded = EncodePipeline.decodeDF(chunks).as[TokenRow]
+    assert(EncodePipeline.verifyRoundTrip(src, decoded) == 0L)
+    chunks.unpersist()
+  }
+
+  test("compaction gives every re-encode task rows when groups outnumber tasks") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    val base = tmpDir("compact-route")
+    // 8 key ranges of 100 ids; run A holds the even ids, run B the odd
+    // ones, one chunk per range each: A's and B's chunks overlap inside a
+    // range and never across, so every range is one 2-chunk group
+    val groups = 8
+    def rows(parity: Int) = spark.createDataset((0 until groups * 100)
+      .filter(_ % 2 == parity)
+      .map(i => TokenRow(f"doc/$i%012d", Array.tabulate(30)(k => i + k), 30, "web")))
+    val bounds = (0 until groups - 1).map(g => f"doc/${g * 100 + 99}%012d").toArray
+    Seq(0, 1).foreach { parity =>
+      EncodePipeline.encode(rows(parity), groups, tokensPerChunk = 8 * 1024,
+        boundsOverride = Some(bounds)).write.parquet(s"$base/run$parity")
+    }
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Long)]()
+    val listener = new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (t.taskMetrics != null)
+          tasks.add((t.stageId, t.taskInfo.index, t.taskMetrics.shuffleReadMetrics.recordsRead))
+    }
+    ColumnBridge.drainListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    val out =
+      try EncodePipeline.compactSorted(spark, Seq(s"$base/run0", s"$base/run1"),
+        s"$base/merged", tokensPerChunk = 8 * 1024)
+      finally {
+        ColumnBridge.drainListeners(spark)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    // the write stage is the last one with a task per exchange partition
+    // (later ones only read the written footers); the union puts the
+    // re-encode side's tasks after the pass-through side's
+    val parallelism = spark.sessionState.conf.numShufflePartitions
+    assert(groups >= parallelism)
+    val all = tasks.toArray(Array.empty[(Int, Int, Long)])
+    val writeStage = all.groupBy(_._1).filter(_._2.length >= parallelism).keys.max
+    val reencode = all.filter(_._1 == writeStage).sortBy(_._2).takeRight(parallelism)
+    assert(reencode.length == parallelism)
+    assert(reencode.forall(_._3 > 0), reencode.mkString(","))
+    assert(reencode.map(_._3).sum == groups * 100L, reencode.mkString(","))
+    val decoded = EncodePipeline.decodeDF(out.as[EncodedChunk]).as[TokenRow]
+    assert(EncodePipeline.verifyRoundTrip(rows(0).union(rows(1)), decoded) == 0L)
+  }
+
   test("token filters push down to chunk ranges and blooms automatically") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{array_contains, col, lit}

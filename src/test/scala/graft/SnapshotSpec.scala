@@ -191,6 +191,33 @@ class SnapshotSpec extends AnyFunSuite with TempDirs {
     }
   }
 
+  test("every data file of a compacted snapshot holds at least one chunk") {
+    import spark.implicits._
+    val dir = freshDir("nonempty")
+    val rows = TokenTableGen.generate(spark, 900, 5).cache()
+    // the shape of a maintained table: a base, four appends, a delete and
+    // an upsert, then one compaction
+    (0 until 5).foreach { k =>
+      writeSlice(dir, rows.filter(r => math.floorMod(r.doc_id.hashCode, 5) == k))
+      SnapshotLog.commit(spark, dir, "append")
+    }
+    val victim = rows.map(_.source).collect().head
+    SnapshotLog.deleteWhere(spark, dir, col("source") === victim)
+    val updated = rows.filter(r => r.source != victim && r.doc_id.hashCode % 9 == 0)
+      .map(r => r.copy(source = "UPD"))
+    SnapshotLog.upsert(spark, dir, updated)
+    val want = SnapshotLog.readRows(spark, dir, None)
+      .map(r => (r.doc_id, r.source)).collect().sorted.toSeq
+    val v = SnapshotLog.compactTable(spark, dir, tokensPerChunk = 4096)
+    val files = SnapshotLog.snapshot(spark, dir, v).files
+    assert(files.nonEmpty)
+    files.foreach { f =>
+      assert(spark.read.parquet(s"$dir/$f").count() >= 1, s"$f holds no chunk")
+    }
+    assert(SnapshotLog.readRows(spark, dir, Some(v))
+      .map(r => (r.doc_id, r.source)).collect().sorted.toSeq == want)
+  }
+
   test("upsert: sequence-scoped delete spares its own rows; compaction folds") {
     import spark.implicits._
     val dir = freshDir("ups")
