@@ -2,7 +2,8 @@ package graft.spark
 
 import graft.codec._
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -85,6 +86,12 @@ object EncodePipeline {
     * At 100 TB that trade is strictly worse — decode is the hot path,
     * and the bytes are incompressible by construction. */
   final val ChunkTableCompression = "uncompressed"
+
+  /** The parquet schema of a chunk table (a written `Dataset[EncodedChunk]`).
+    * A reader that knows it reads chunk files passes it to
+    * `spark.read.schema`, which skips the schema-inference job a bare
+    * `spark.read.parquet` runs. */
+  val ChunkSchema: StructType = Encoders.product[EncodedChunk].schema
 
   /** Partition-count sizing for a target partition payload (default
     * 256 MB of raw tokens — shuffle blocks stay large, task count stays
@@ -1016,6 +1023,10 @@ object EncodePipeline {
           coalesce(col("dirty"), lit(false)).as("dirty")))
       .getOrElse(sizedDf.withColumn("dirty", lit(false)))
       .as[(Int, Int, Long, Long, Boolean)]
+      // one row per chunk; both write branches read it, so the assignment,
+      // group-size and dirty-chunk plans run once (payloads are not cached:
+      // that would hold the whole table)
+      .cache()
     val joined = all.joinWith(sized,
       all("_1") === sized("a_run") && all("_2.chunk_id") === sized("a_chunk_id"))
 
@@ -1078,10 +1089,11 @@ object EncodePipeline {
       .write.mode("overwrite")
       .option("compression", ChunkTableCompression)
       .parquet(outDir)
+    sized.unpersist()
     sortedMeta.unpersist()
     meta.unpersist()
     dropEmptyParquet(spark, outDir)
-    spark.read.parquet(outDir)
+    spark.read.schema(ChunkSchema).parquet(outDir)
   }
 
   /** Delete the zero-row parquet files of an unpartitioned table: Spark's

@@ -334,6 +334,130 @@ class SnapshotSpec extends AnyFunSuite with TempDirs {
     assert(messages(ex).exists(_.contains("CRC mismatch")), ex.toString)
   }
 
+  /** (count, Σ n_tok, xor of doc_id hashes) of a row set. */
+  private def digest(rows: Iterable[(String, Int)]): (Long, Long, Int) =
+    (rows.size.toLong, rows.map(_._2.toLong).sum, rows.map(_._1.hashCode).foldLeft(0)(_ ^ _))
+
+  private def digestOf(rows: org.apache.spark.sql.Dataset[TokenRow]): (Long, Long, Int) = {
+    import spark.implicits._
+    digest(rows.select("doc_id", "n_tok").as[(String, Int)].collect().toSeq)
+  }
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ColumnBridge.drainListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try body
+    finally {
+      ColumnBridge.drainListeners(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    jobs.get()
+  }
+
+  test("merge-on-read runs the same number of jobs whatever the version count") {
+    import spark.implicits._
+    val rows = TokenTableGen.generate(spark, 600, 4).cache()
+    def readJobs(appends: Int): Int = {
+      val dir = freshDir(s"jobs$appends")
+      (0 until appends).foreach { k =>
+        writeSlice(dir, rows.filter(r => math.floorMod(r.doc_id.hashCode, appends) == k))
+        SnapshotLog.commit(spark, dir, "append")
+      }
+      val victim = rows.map(_.source).collect().head
+      val v = SnapshotLog.deleteWhere(spark, dir, col("source") === victim)
+      val want = rows.filter(_.source != victim).count()
+      assert(SnapshotLog.snapshot(spark, dir, v).deletes.nonEmpty)
+      var n = -1L
+      val jobs = jobsOf { n = SnapshotLog.readRows(spark, dir).count() }
+      assert(n == want)
+      jobs
+    }
+    val (few, many) = (readJobs(2), readJobs(6))
+    assert(few == many, s"2 appends: $few jobs, 6 appends: $many jobs")
+  }
+
+  test("deletes apply by sequence across several delete classes") {
+    import spark.implicits._
+    val dir = freshDir("classes")
+    def gen(lo: Int, hi: Int) = (lo until hi).map(i => TokenTableGen.genRow(i.toLong))
+    // the model: doc_id -> (row, added-version) of every live row, per version
+    var live = Map.empty[String, (TokenRow, Int)]
+    val at = scala.collection.mutable.Map.empty[Int, Map[String, (TokenRow, Int)]]
+    def append(rs: Seq[TokenRow]): Unit = {
+      writeSlice(dir, spark.createDataset(rs))
+      val v = SnapshotLog.commit(spark, dir, "append")
+      live ++= rs.map(r => r.doc_id -> (r, v)); at(v) = live
+    }
+    def deleteEvery(k: Int): Unit = {
+      val ids = live.keys.toSeq.sorted.zipWithIndex.collect { case (d, i) if i % k == 0 => d }
+      val v = SnapshotLog.deleteWhere(spark, dir, col("doc_id").isin(ids: _*))
+      live --= ids; at(v) = live
+    }
+    append(gen(0, 400))
+    append(gen(400, 600))
+    deleteEvery(7)
+    append(gen(600, 800))
+    // upsert: every 5th live row gets a one-token version, plus 50 new rows
+    val replaced = live.keys.toSeq.sorted.zipWithIndex.collect { case (d, i) if i % 5 == 0 =>
+      val r = live(d)._1; r.copy(tokens = r.tokens.take(1), n_tok = 1, source = "UPD")
+    }
+    val incoming = replaced ++ gen(800, 850)
+    val vu = SnapshotLog.upsert(spark, dir, spark.createDataset(incoming), numParts = 2,
+      tokensPerChunk = 4096)
+    live ++= incoming.map(r => r.doc_id -> (r, vu)); at(vu) = live
+    deleteEvery(6)
+    append(gen(850, 1000))
+    val last = SnapshotLog.currentVersion(spark, dir).get
+    assert(last == 7 && at.keySet == (1 to 7).toSet)
+    // files added at 1-2, 4, 5 and 7: three delete classes and one class with none
+    val snap = SnapshotLog.snapshot(spark, dir, last)
+    assert(snap.deleteSeqs.distinct.sorted == Seq(3, 5, 6))
+    assert(snap.fileAdded.distinct.sorted == Seq(1, 2, 4, 5, 7))
+    def truth(v: Int, from: Int = 0) =
+      digest(at(v).values.collect { case (r, a) if a > from => (r.doc_id, r.n_tok) })
+    (1 to last).foreach { v =>
+      assert(digestOf(SnapshotLog.readRows(spark, dir, Some(v))) == truth(v), s"readRows v$v")
+    }
+    for (from <- 1 until last; to <- from + 1 to last)
+      assert(digestOf(SnapshotLog.readIncremental(spark, dir, from, to)) == truth(to, from),
+        s"readIncremental $from->$to")
+    assert(truth(last) != digest(gen(0, 1000).map(r => (r.doc_id, r.n_tok)))) // non-vacuous
+    val vc = SnapshotLog.compactTable(spark, dir, tokensPerChunk = 4096)
+    assert(SnapshotLog.snapshot(spark, dir, vc).deletes.isEmpty)
+    assert(digestOf(SnapshotLog.readRows(spark, dir, Some(vc))) == truth(last))
+  }
+
+  test("a commit refuses a parquet file that is not a chunk file") {
+    import spark.implicits._
+    val dir = freshDir("foreign")
+    writeSlice(dir, TokenTableGen.generate(spark, 200, 4))
+    val v1 = SnapshotLog.commit(spark, dir, "append")
+    writeSlice(dir, TokenTableGen.generate(spark, 100, 4).map(r => r.copy(doc_id = r.doc_id + "-b")))
+    spark.range(5).toDF("doc_id").write.parquet(s"$dir/chunks/foreign")
+    val ex = intercept[IllegalArgumentException](SnapshotLog.commit(spark, dir, "append"))
+    assert(ex.getMessage.contains("chunks/foreign/part-") &&
+      ex.getMessage.contains("not a chunk file"), ex.getMessage)
+    assert(SnapshotLog.versions(spark, dir) == Seq(v1))
+    val hfs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val foreign = hfs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/chunks/foreign"))
+      .map(_.getPath.getName).filter(_.endsWith(".parquet")).map(n => s"chunks/foreign/$n")
+    assert(foreign.nonEmpty)
+    intercept[IllegalArgumentException](SnapshotLog.commitRewrite(spark, dir, "append",
+      removed = Set.empty, added = foreign.toSeq))
+    assert(SnapshotLog.versions(spark, dir) == Seq(v1))
+    SnapshotLog.versions(spark, dir).foreach { v =>
+      assert(SnapshotLog.snapshot(spark, dir, v).files.intersect(foreign.toSeq).isEmpty)
+    }
+    assert(SnapshotLog.readRows(spark, dir, Some(v1)).count() == 200L)
+  }
+
   test("rewrite commit validates removed files against the parent") {
     import spark.implicits._
     val dir = freshDir("rwv")
