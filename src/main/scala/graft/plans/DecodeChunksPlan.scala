@@ -128,7 +128,7 @@ case object TokenLayout extends ChunkLayout {
     def hi(l: Literal): Seq[Expression] = Seq(LessThanOrEqual(stat("first_doc_id"), l))
     def lo(l: Literal): Seq[Expression] = Seq(GreaterThanOrEqual(stat("last_doc_id"), l))
     (name, c) match {
-      case ("tokens", HasElement(_, l)) => containsToken(stat, l.value.asInstanceOf[Int])
+      case ("tokens", HasElement(_, l)) => containsToken(stat, l)
       case ("doc_id", Equal(_, l)) => hi(l) ++ lo(l)
       case ("doc_id", AtMost(_, l)) => hi(l)
       case ("doc_id", AtLeast(_, l)) => lo(l)
@@ -143,12 +143,12 @@ case object TokenLayout extends ChunkLayout {
 
   /** The chunk checks of `array_contains(tokens, t)`: the chunk's
     * [tokens_min, tokens_max] interval holds `t` and its CRC-verified
-    * bloom may contain it. `stat` resolves a chunk column. */
-  def containsToken(stat: String => Expression, t: Int): Seq[Expression] = {
-    val v = Literal(t)
-    Seq(LessThanOrEqual(stat("tokens_min"), v), GreaterThanOrEqual(stat("tokens_max"), v),
-      graft.functions.BloomMightContain(stat("tokens_bloom"), stat("stream_crcs"), v))
-  }
+    * bloom may contain it. `stat` resolves a chunk column; `t` is an int
+    * expression (a `Literal`, or `EncodePipeline.searchToken`'s
+    * `QueryParam`). */
+  def containsToken(stat: String => Expression, t: Expression): Seq[Expression] =
+    Seq(LessThanOrEqual(stat("tokens_min"), t), GreaterThanOrEqual(stat("tokens_max"), t),
+      graft.functions.BloomMightContain(stat("tokens_bloom"), stat("stream_crcs"), t))
 
   def attrFor(name: String): AttributeReference = {
     val f = schema(name)

@@ -2,8 +2,11 @@ package graft.spark
 
 import graft.codec._
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{And, InSet}
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
 import org.apache.spark.sql.functions._
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -92,6 +95,10 @@ object EncodePipeline {
     * `spark.read.schema`, which skips the schema-inference job a bare
     * `spark.read.parquet` runs. */
   val ChunkSchema: StructType = Encoders.product[EncodedChunk].schema
+
+  /** The parquet schema of a checkpoint's `metrics` table, pinned on every
+    * read of it for the same reason. */
+  val MetricsSchema: StructType = Encoders.product[PartitionMetrics].schema
 
   /** Partition-count sizing for a target partition payload (default
     * 256 MB of raw tokens — shuffle blocks stay large, task count stays
@@ -507,20 +514,20 @@ object EncodePipeline {
   /** Format-agnostic variant: any chunk metadata with (part_id, chunk_id,
     * num_rows) columns — shared by the token pipeline and GenericEncode. */
   def rowIndexOf(chunkMeta: DataFrame): DataFrame = {
+    val partRows = chunkMeta.groupBy("part_id").agg(sum("num_rows"))
+      .collect() // O(#parts) — the only driver-side piece
+      .map(r => r.getInt(0) -> r.getLong(1))
+    withRowStarts(chunkMeta, partRows)
+  }
+
+  /** `rowIndexOf` given each part's row count (in any order). */
+  private def withRowStarts(chunkMeta: DataFrame, partRows: Seq[(Int, Long)]): DataFrame = {
     val spark = chunkMeta.sparkSession
     import org.apache.spark.sql.expressions.Window
     val meta = chunkMeta.select(col("part_id"), col("chunk_id"), col("num_rows"))
-    val partTotals = meta.groupBy("part_id")
-      .agg(sum("num_rows").as("part_rows"))
-      .orderBy("part_id")
-      .collect() // O(#parts) — the only driver-side piece
-    var acc = 0L
-    val bases = partTotals.map { r =>
-      val b = (r.getInt(0), acc)
-      acc += r.getLong(1)
-      b
-    }
-    val basesDF = spark.createDataFrame(bases.toSeq).toDF("part_id", "part_base")
+    val sorted = partRows.sortBy(_._1)
+    val bases = sorted.map(_._1).zip(sorted.scanLeft(0L)(_ + _._2))
+    val basesDF = spark.createDataFrame(bases).toDF("part_id", "part_base")
     val w = Window.partitionBy("part_id").orderBy("chunk_id")
       .rowsBetween(Window.unboundedPreceding, -1)
     meta.join(broadcast(basesDF), "part_id")
@@ -529,14 +536,19 @@ object EncodePipeline {
       .select("chunk_id", "row_start", "num_rows")
   }
 
+  /** A per-call value as a plan parameter (see [[graft.functions.QueryParam]]):
+    * lookups that differ only in it reuse one compiled class. */
+  private def param(value: Any, t: DataType): Column =
+    ColumnBridge.column(graft.functions.QueryParam(value, t))
+
   /** chunk_id → the in-chunk row range [from, to) of every chunk of a row
     * index (`rowIndexOf`'s columns) that covers global rows
     * [start, start + count). Only the covering chunks reach the driver. */
   private[spark] def coveringRanges(index: DataFrame, start: Long,
                                     count: Long): Map[Long, (Int, Int)] =
     index
-      .filter(col("row_start") < start + count &&
-        col("row_start") + col("num_rows") > start)
+      .filter(col("row_start") < param(start + count, LongType) &&
+        col("row_start") + col("num_rows") > param(start, LongType))
       .collect() // O(covering chunks)
       .map { r =>
         val rowStart = r.getLong(1)
@@ -544,6 +556,15 @@ object EncodePipeline {
         val hi = math.min(start + count, rowStart + r.getInt(2))
         r.getLong(0) -> ((lo - rowStart).toInt, (hi - rowStart).toInt)
       }.toMap
+
+  /** The chunk filter of a seek over `coveringRanges`' result: a
+    * column-level `chunk_id` set test (not a typed closure), so it pushes
+    * into the parquet scan as an `In` filter and never deserializes the
+    * payloads of non-covering chunks. It is an `InSet`, not an `In` of
+    * literals: InSet's generated code reads the set from the plan's
+    * references, so seeks at new offsets reuse one compiled class. */
+  private[spark] def coveringChunks(ranges: Map[Long, (Int, Int)]): Column =
+    ColumnBridge.column(InSet(UnresolvedAttribute("chunk_id"), ranges.keySet.map(k => k: Any)))
 
   /** Seek by global row offset in the chunk table's canonical order
     * (part_id, chunk_id, row-in-chunk): the distributed row index picks
@@ -560,10 +581,7 @@ object EncodePipeline {
     val ranges = coveringRanges(index.getOrElse(rowIndex(chunks)), start, count)
     val bc = spark.sparkContext.broadcast(ranges)
     chunks
-      // Column-level filter (not a typed closure): the candidate id set is
-      // tiny, pushes into the parquet scan, and never deserializes the
-      // chunk payloads of non-covering chunks
-      .filter(col("chunk_id").isin(ranges.keys.toSeq.map(Long.box): _*))
+      .filter(coveringChunks(ranges))
       .flatMap { c =>
         val (from, to) = bc.value(c.chunk_id)
         decodeChunkRows(c, from, to)
@@ -673,23 +691,21 @@ object EncodePipeline {
           new org.apache.hadoop.fs.Path(metricsPath))
       }
     }
-    val liveMetrics = liveMetricsPath(hfs, metricsPath)
-    // Completed partitions as a TABLE, not a driver-side Set: the resume
-    // filters below are broadcast semi/anti joins against it. Rounds 1-3
-    // collected the part_ids and built `isin(done: _*)` filters — at 10^5
-    // completed partitions that serializes a 10^5-element expression tree
+    import spark.implicits._
+    // The previous attempt's metrics rows, under their pinned schema: one
+    // per part, so O(#parts) on the driver. Completed partitions reach the
+    // input filter below as a broadcast anti join against a local table
+    // of their ids — rounds 1-3 built an `isin(done: _*)` filter, which at
+    // 10^5 completed partitions serializes a 10^5-element expression tree
     // into every task; a broadcast hash join ships one compact hash set.
-    val doneDf = liveMetrics.map { p =>
-      spark.read.parquet(p)
-        .filter(col("status") === "ok")
-        .select("part_id").distinct().cache()
-    }
-    val doneCount: Long = doneDf.map(_.count()).getOrElse(0L)
+    val prevMetrics: Seq[PartitionMetrics] = liveMetricsPath(hfs, metricsPath).toSeq
+      .flatMap(p => spark.read.schema(MetricsSchema).parquet(p).as[PartitionMetrics].collect())
+    val done: Set[Int] = prevMetrics.filter(_.status == "ok").map(_.part_id).toSet
     val assigned = withPartId(ds, bounds)
     val todo =
-      if (doneCount == 0) assigned
+      if (done.isEmpty) assigned
       else assigned
-        .join(broadcast(doneDf.get), Seq("part_id"), "left_anti")
+        .join(broadcast(done.toSeq.toDF("part_id")), Seq("part_id"), "left_anti")
         // using-joins move the key column first; the encode kernel below
         // reads InternalRow ordinals, so restore the original layout
         .select(assigned.columns.map(col).toSeq: _*)
@@ -701,33 +717,28 @@ object EncodePipeline {
       .option("partitionOverwriteMode", "dynamic")
       .option("compression", ChunkTableCompression)
       .partitionBy("part_id").parquet(s"$dir/chunks")
-    // lineage/metrics from what was just written (idempotent aggregation)
-    val written = spark.read.parquet(s"$dir/chunks")
-    val prevAttempt: Int =
-      if (doneCount > 0)
-        spark.read.parquet(liveMetrics.get).agg(max("attempt")).head().getInt(0)
-      else 0
-    val freshMetrics = (if (doneCount == 0) written
-       else written.join(broadcast(doneDf.get), Seq("part_id"), "left_anti"))
-      .groupBy(col("part_id"))
+    // One per-part aggregate over the whole chunk table, read under its
+    // pinned schema (no inference job), feeds both the metrics rows of the
+    // parts encoded now and the row index's part bases below: O(#parts)
+    // rows on the driver, the bound rowIndexOf already accepts.
+    val chunkMeta = spark.read.schema(ChunkSchema).parquet(s"$dir/chunks")
+    val attempt = if (done.isEmpty) 1 else prevMetrics.map(_.attempt).max + 1
+    val parts = chunkMeta.groupBy(col("part_id"))
       .agg(
-        count(lit(1)).cast("int").as("num_chunks"),
-        sum("num_rows").as("num_rows"),
-        sum("num_tokens").as("num_tokens"),
-        sum("raw_bytes").as("raw_bytes"),
-        sum("enc_bytes").as("enc_bytes"),
-        sum("encode_ms").as("wall_ms"),
-        min("first_doc_id").as("first_doc_id"),
-        max("last_doc_id").as("last_doc_id"),
-        lit(prevAttempt + 1).as("attempt"),
-        lit("ok").as("status"))
+        count(lit(1)).cast("int"),
+        sum("num_rows"),
+        sum("num_tokens"),
+        sum("raw_bytes"),
+        sum("enc_bytes"),
+        sum("encode_ms"),
+        min("first_doc_id"),
+        max("last_doc_id"))
+      .collect()
+      .map(r => PartitionMetrics(r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3),
+        r.getLong(4), r.getLong(5), r.getLong(6), r.getString(7), r.getString(8), attempt, "ok"))
     // completed partitions keep their original metrics rows (attempt
     // history is lineage); only re-encoded parts get a new row
-    val metrics =
-      if (doneCount == 0) freshMetrics
-      else spark.read.parquet(liveMetrics.get)
-        .join(broadcast(doneDf.get), Seq("part_id"), "left_semi")
-        .unionByName(freshMetrics)
+    val metrics = prevMetrics.filter(m => done(m.part_id)) ++ parts.filterNot(p => done(p.part_id))
     // Swap with no unprotected window: write staging, move the current
     // table aside, promote staging, then drop the old copy. A crash at
     // any point leaves at least one complete table that liveMetricsPath
@@ -738,7 +749,7 @@ object EncodePipeline {
     val sPath = new org.apache.hadoop.fs.Path(staging)
     val oPath = new org.apache.hadoop.fs.Path(metricsPath + ".old")
     hfs.delete(sPath, true)
-    metrics.write.mode("overwrite").parquet(staging)
+    metrics.toDS().coalesce(1).write.mode("overwrite").parquet(staging)
     hfs.delete(oPath, true)
     if (hfs.exists(mPath)) hfs.rename(mPath, oPath)
     hfs.rename(sPath, mPath)
@@ -746,21 +757,25 @@ object EncodePipeline {
     // persisted row-offset index: seekToRows over this checkpoint needs
     // no metadata job at all (recomputed over the FULL table each run so
     // resumes stay consistent; a metadata-only job, O(#chunks) rows)
-    import spark.implicits._
-    rowIndex(spark.read.parquet(s"$dir/chunks").as[EncodedChunk])
+    withRowStarts(chunkMeta, parts.map(p => p.part_id -> p.num_rows))
       .write.mode("overwrite").parquet(s"$dir/row_index")
-    doneDf.foreach(_.unpersist())
-    spark.read.parquet(metricsPath)
+    spark.read.schema(MetricsSchema).parquet(metricsPath)
   }
 
   /** Stats- and bloom-pruned search over the chunk table: chunks are
-    * skipped first by the persisted [tokens_min, tokens_max] interval (a
-    * plain Catalyst filter — parquet row-group stats prune the file scan
-    * itself), then by the per-chunk split-block bloom, so only chunks
-    * that very probably contain `tokenId` are decoded. The engine-side
-    * analog of the reference's column-index pruning (search.go:31-101)
-    * plus bloom probe (bloom.go:16-70). Returns doc_ids containing the
-    * token.
+    * skipped first by the persisted [tokens_min, tokens_max] interval,
+    * then by the per-chunk split-block bloom, so only chunks that very
+    * probably contain `tokenId` are decoded. The engine-side analog of the
+    * reference's column-index pruning (search.go:31-101) plus bloom probe
+    * (bloom.go:16-70). Returns doc_ids containing the token.
+    *
+    * `tokenId` enters the plan as a [[graft.functions.QueryParam]], not a
+    * literal, so every search reuses the classes the first one compiled.
+    * The trade: the min/max check no longer reaches parquet as a pushed
+    * row-group filter. It still prunes every chunk row in the Filter over
+    * the scan, before the bloom probe and the decode, so the chunks
+    * decoded are the same; only row groups whose chunks all fail the
+    * check are read where they used to be skipped.
     */
   def searchToken(chunks: Dataset[EncodedChunk], tokenId: Int): Dataset[String] = {
     val spark = chunks.sparkSession
@@ -772,12 +787,11 @@ object EncodePipeline {
     // decode per surviving chunk). The stats filter is explicit (the
     // checks ChunkFilterPushdown grows for array_contains) because
     // in-memory chunk Datasets carry no stats columns for the rule to see.
-    val pruned = chunks.toDF().filter(org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      graft.plans.TokenLayout.containsToken(
-        org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(_), tokenId)
-        .reduce(org.apache.spark.sql.catalyst.expressions.And)))
+    val token = graft.functions.QueryParam(tokenId, IntegerType)
+    val pruned = chunks.toDF().filter(ColumnBridge.column(
+      graft.plans.TokenLayout.containsToken(UnresolvedAttribute(_), token).reduce(And)))
     graft.plans.GraftPlans.decodeDF(pruned, Seq("doc_id", "tokens"))
-      .where(array_contains(col("tokens"), tokenId))
+      .where(array_contains(col("tokens"), ColumnBridge.column(token)))
       .select(col("doc_id")).as[String]
   }
 

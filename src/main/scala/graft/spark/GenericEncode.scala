@@ -952,7 +952,7 @@ object GenericEncode {
     val (allNames, allTypes) = meta.get
     val (attrs, layout) = decodeLayout(allNames, allTypes, cols)
     val payload = binFrame(chunks, allNames.length)
-      .filter(fcol("chunk_id").isin(ranges.keys.toSeq.map(Long.box): _*))
+      .filter(EncodePipeline.coveringChunks(ranges))
       .select(layout.chunkCols(attrs).map(fcol): _*)
     val payloadNames = payload.columns.toSeq
     val iChunkId = payloadNames.indexOf("chunk_id")

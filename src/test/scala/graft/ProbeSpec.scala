@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The dev tool `graft.Probe` (query timing and plan dumps), the
   * `SparkEntry.entry` smoke check, and the codegen audit of the encode
-  * layout and the SQL codec expressions. */
+  * layout, the SQL codec expressions and the token search. */
 class ProbeSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = SparkTestSession.spark
 
@@ -48,10 +48,21 @@ class ProbeSpec extends AnyFunSuite with TempDirs {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  private def exprsOf(df: DataFrame): Seq[Expression] =
+    df.queryExecution.sparkPlan.collect { case p => p.expressions }
+      .flatten.flatMap(_.collect { case e => e })
+
+  /** `df`'s physical plan holds a `marker` and no expression that leaves
+    * whole-stage codegen. */
+  private def assertCodegen(name: String, df: DataFrame, marker: Class[_]): Unit = {
+    val es = exprsOf(df)
+    assert(es.exists(marker.isInstance), s"$name plan lacks ${marker.getSimpleName}")
+    assert(!es.exists(_.isInstanceOf[ScalaUDF]), s"$name plan has a ScalaUDF")
+    val fallback = es.filter(_.isInstanceOf[CodegenFallback])
+    assert(fallback.isEmpty, s"$name plan falls back: ${fallback.map(_.prettyName)}")
+  }
+
   test("encode layout and SQL codec expressions have no ScalaUDF or CodegenFallback") {
-    def exprsOf(df: DataFrame): Seq[Expression] =
-      df.queryExecution.sparkPlan.collect { case p => p.expressions }
-        .flatten.flatMap(_.collect { case e => e })
     val src = TokenTableGen.generate(spark, 1000, 4)
     val laid = EncodePipeline.withPartId(src, EncodePipeline.massBalancedBounds(src, 4))
       .repartition(4, col("part_id"))
@@ -59,14 +70,14 @@ class ProbeSpec extends AnyFunSuite with TempDirs {
     graft.functions.GraftFunctions.register(spark)
     val sql = spark.range(0, 1000).selectExpr("CAST(id % 7 AS INT) AS l_linenumber")
       .selectExpr("decode_chunk(encode_chunk(array(l_linenumber)))")
-    for ((name, df, marker) <- Seq(
-        ("encode layout", laid, classOf[graft.functions.PartIdForBounds]),
-        ("SQL codec", sql, classOf[graft.functions.DecodeChunk]))) {
-      val es = exprsOf(df)
-      assert(es.exists(marker.isInstance), s"$name plan lacks ${marker.getSimpleName}")
-      assert(!es.exists(_.isInstanceOf[ScalaUDF]), s"$name plan has a ScalaUDF")
-      val fallback = es.filter(_.isInstanceOf[CodegenFallback])
-      assert(fallback.isEmpty, s"$name plan falls back: ${fallback.map(_.prettyName)}")
-    }
+    assertCodegen("encode layout", laid, classOf[graft.functions.PartIdForBounds])
+    assertCodegen("SQL codec", sql, classOf[graft.functions.DecodeChunk])
+  }
+
+  test("token search plan has no ScalaUDF or CodegenFallback") {
+    val chunks = EncodePipeline.encode(TokenTableGen.generate(spark, 1000, 4), 4)
+    val search = EncodePipeline.searchToken(chunks, 42).toDF()
+    assertCodegen("token search", search, classOf[graft.functions.QueryParam])
+    assertCodegen("token search", search, classOf[graft.functions.BloomMightContain])
   }
 }
