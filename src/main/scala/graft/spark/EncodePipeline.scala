@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{And, InSet}
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.sql.functions._
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -795,21 +795,6 @@ object EncodePipeline {
       .select(col("doc_id")).as[String]
   }
 
-  /** Compaction: merge several chunk tables (e.g. incremental/streaming
-    * runs) into one freshly mass-balanced layout — the table-level analog
-    * of the reference's MergeRowGroups + SortingWriter flush
-    * (merge.go:20-72, sorting.go:99-133). Decode → union → re-encode;
-    * Spark's external sort replaces the reference's hand-rolled k-way
-    * heap merge of spilled runs. */
-  def compact(spark: SparkSession, chunkDirs: Seq[String], numParts: Int, outDir: String,
-              tokensPerChunk: Int = DefaultTokensPerChunk): DataFrame = {
-    import spark.implicits._
-    val all = chunkDirs
-      .map(d => spark.read.parquet(d).as[EncodedChunk])
-      .reduce(_ unionByName _)
-    encodeCheckpointed(spark, decodeDF(all).as[TokenRow], numParts, outDir, tokensPerChunk)
-  }
-
   /** Sorted-run-aware compaction: merge several chunk tables while
     * re-encoding ONLY chunks whose doc_id ranges overlap a chunk from
     * another (or the same) run. Non-overlapping chunks pass through with
@@ -818,18 +803,15 @@ object EncodePipeline {
     * rewrite (reference merges sorted runs with a k-way heap instead of
     * re-sorting, merge.go:177-273).
     *
-    * Grouping is a DISTRIBUTED sweep over chunk [first,last] doc_id
-    * intervals (transitively-overlapping chunks form a group; a group
-    * boundary falls wherever an interval starts past the running max of
-    * every preceding interval's end): the metadata is range-partitioned
-    * on first_doc_id and the running max crosses partitions via the same
-    * two-phase prefix pattern as `rowIndex` — the driver holds only
-    * O(#partitions) carry values, never the chunk list (rounds 1-2 swept
-    * all chunk metadata on the driver). Group ids are globally
-    * consecutive ordinals, so the compacted table's partition ranges are
-    * disjoint and globally ordered. Singleton groups pass through
-    * byte-identical; multi-chunk groups decode + merge + re-encode. Use
-    * `compact` instead when a fresh mass-balanced layout is wanted.
+    * Grouping is an interval sweep over chunk [first,last] doc_id
+    * intervals, written as two Spark window expressions over one row per
+    * chunk (see [[compactRuns]]): transitively-overlapping chunks form a
+    * group, and a group boundary falls wherever an interval starts past
+    * the running max of every preceding interval's end. Group ids are
+    * consecutive ordinals in doc_id order, so the compacted table's
+    * partition ranges are disjoint and globally ordered. Singleton groups
+    * pass through byte-identical; multi-chunk groups decode + merge +
+    * re-encode.
     *
     * `dropDuplicates = true` drops rows sharing a doc_id while merging
     * overlapping groups, keeping one row per doc_id (the reference's
@@ -846,20 +828,10 @@ object EncodePipeline {
                     tokensPerChunk: Int = DefaultTokensPerChunk,
                     dropDuplicates: Boolean = false,
                     packTokens: Option[Long] = None): DataFrame = {
-    import spark.implicits._
-    val all: Dataset[(Int, EncodedChunk)] = chunkDirs.zipWithIndex.map { case (d, i) =>
-      spark.read.parquet(d).as[EncodedChunk].map(c => (i, c))
-    }.reduce(_ union _)
-    // Metadata-only, genuinely: a column-level select straight off the
-    // parquet dirs (column pruning skips every payload stream), sorted by
-    // Spark's own UTF8-binary string order — the SAME order the per-row
-    // UTF8String comparisons below use.
-    val meta = chunkDirs.zipWithIndex.map { case (d, i) =>
-      spark.read.parquet(d).select(
-        lit(i).as("run"), col("chunk_id"), col("first_doc_id"), col("last_doc_id"),
-        col("num_tokens"))
-    }.reduce(_ unionByName _)
-    compactRuns(spark, all, meta, outDir, tokensPerChunk, dropDuplicates, None,
+    val chunks = chunkDirs.zipWithIndex
+      .map { case (d, i) => spark.read.parquet(d).withColumn("run", lit(i)) }
+      .reduce(_ unionByName _)
+    compactRuns(spark, chunks, outDir, tokensPerChunk, dropDuplicates, None,
       packTokens = packTokens)
   }
 
@@ -868,9 +840,10 @@ object EncodePipeline {
     * [[compactSorted]]'s pure interval sweep passes through untouched
     * (they form singleton overlap groups). This variant coarsens
     * consecutive sweep groups into ≈`tokensPerChunk`-token bins by token
-    * waterline — `bin = floor(tokens-before-group / target)` over a
-    * distributed prefix sum, the same mass-balancing idea as the encode
-    * exchange — then re-encodes only multi-chunk bins; a chunk alone in
+    * waterline — `bin = floor(tokens-before-group / target)`, the
+    * tokens before a group being a window sum over every earlier
+    * group's chunks (the same mass-balancing idea as the encode
+    * exchange) — then re-encodes only multi-chunk bins; a chunk alone in
     * its bin (already well-sized) still passes through byte-identical.
     * Output bins stay disjoint, globally ordered doc_id intervals (bins
     * are unions of CONSECUTIVE disjoint groups). The reference has no
@@ -883,10 +856,10 @@ object EncodePipeline {
     compactSorted(spark, chunkDirs, outDir, tokensPerChunk, dropDuplicates,
       packTokens = Some(tokensPerChunk.toLong))
 
-  /** Core of [[compactSorted]] over pre-built inputs — `all` pairs each
-    * chunk with a RUN id (chunk_ids are only unique within one encode
-    * run, so the pair is the global key), `metaPlan` is the pruned
-    * (run, chunk_id, first_doc_id, last_doc_id) projection. `deletes`,
+  /** Core of [[compactSorted]] over one chunk frame: the chunk columns plus
+    * a `run` id (chunk_ids are only unique within one encode run, so
+    * (run, chunk_id) is the global key). The grouping reads a projection
+    * of it, which column pruning keeps metadata-only. `deletes`,
     * when present, is a (doc_id, del_seq) DataFrame of equality deletes
     * (Iceberg v2 style), SEQUENCE-SCOPED: a delete applies only to runs
     * whose `runAdded` version is strictly below its del_seq, so an
@@ -898,116 +871,48 @@ object EncodePipeline {
     * deleted rows through), and decoded rows anti-join the applicable
     * delete set. Both delete passes broadcast the delete table — at a
     * 10^9-id delete set, flip the range check to a shuffle range-join;
-    * the sweep itself is unchanged. */
-  private[graft] def compactRuns(spark: SparkSession,
-                                 all: Dataset[(Int, EncodedChunk)],
-                                 metaPlan: DataFrame, outDir: String,
+    * the sweep itself is unchanged.
+    *
+    * Scale: the sweep windows have no partition key, so Spark sorts the
+    * one-row-per-chunk metadata in a single task (with spill) on an
+    * executor; the driver holds one number, the group count. A 100-TB
+    * table has ~10^7 chunks, about 1 GB of metadata rows for that
+    * task. */
+  private[graft] def compactRuns(spark: SparkSession, chunks: DataFrame, outDir: String,
                                  tokensPerChunk: Int,
                                  dropDuplicates: Boolean,
                                  deletes: Option[DataFrame],
                                  runAdded: Map[Int, Int] = Map.empty,
                                  packTokens: Option[Long] = None): DataFrame = {
     import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.unsafe.types.UTF8String
-    // Sweep parallelism derives from the METADATA size (guide §2: no
-    // constant partition counts): one row per chunk, so even a 100-TB
-    // table has ~10^7 sweep rows — 64k rows per partition keeps partitions
-    // real-sized while a toy table sweeps in ONE partition instead of
-    // paying a 32-way range sample + 3 passes over 31 empty partitions.
-    // Capped at the session's parallelism like every other derived count.
-    // The metadata plan (a scan of every input file, plus the run join for
-    // snapshot tables) runs once: the sweep and the dirty-chunk probe both
-    // read this cache.
-    val meta = metaPlan.cache()
-    val metaCount = meta.count()
-    val sweepParts = math.max(1L, math.min(
-      spark.sessionState.conf.numShufflePartitions.toLong,
-      (metaCount + 65535) / 65536)).toInt
-    val sortedMeta = meta
-      .repartitionByRange(sweepParts, col("first_doc_id"), col("chunk_id"))
-      .sortWithinPartitions("first_doc_id", "chunk_id")
-      .as[(Int, Long, String, String, Long)]
-      .cache()
-    sortedMeta.count() // pin the partition layout for the three passes
-    @inline def max(a: UTF8String, b: UTF8String): UTF8String =
-      if (a == null || (b != null && b.compareTo(a) > 0)) b else a
-    // pass 1: per-partition max(last) → driver-side prefix = carry-in
-    val partMax = sortedMeta.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var mx: UTF8String = null
-      it.foreach { case (_, _, _, l, _) => mx = max(mx, UTF8String.fromString(l)) }
-      Iterator.single((pid, Option(mx).map(_.toString)))
-    }.collect().sortBy(_._1)
-    val carryIn = new Array[String](partMax.length) // null = no preceding interval
-    var acc: UTF8String = null
-    partMax.foreach { case (pid, mx) =>
-      carryIn(pid) = if (acc == null) null else acc.toString
-      mx.foreach(m => acc = max(acc, UTF8String.fromString(m)))
-    }
-    val bcCarry = spark.sparkContext.broadcast(carryIn)
-    // pass 2: per-partition boundary counts → driver-side prefix = group base
-    val counts = sortedMeta.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var mx = Option(bcCarry.value(pid)).map(UTF8String.fromString).orNull
-      var c = 0
-      it.foreach { case (_, _, f, l, _) =>
-        if (mx == null || UTF8String.fromString(f).compareTo(mx) > 0) c += 1
-        mx = max(mx, UTF8String.fromString(l))
-      }
-      Iterator.single((pid, c))
-    }.collect().sortBy(_._1)
-    val groupBase = new Array[Int](counts.length)
-    var gAcc = 0
-    counts.foreach { case (pid, c) => groupBase(pid) = gAcc; gAcc += c }
-    val numGroups = gAcc
-    val bcBase = spark.sparkContext.broadcast(groupBase)
-    // pass 3: the assignment TABLE (run, chunk_id, grp) — distributed, and
-    // joined to the payloads instead of broadcast from the driver
-    val assignment0 = spark.createDataset(
-      sortedMeta.rdd.mapPartitionsWithIndex { (pid, it) =>
-        var mx = Option(bcCarry.value(pid)).map(UTF8String.fromString).orNull
-        var g = bcBase.value(pid) - 1
-        it.map { case (runId, id, f, l, ntok) =>
-          if (mx == null || UTF8String.fromString(f).compareTo(mx) > 0) g += 1
-          mx = max(mx, UTF8String.fromString(l))
-          (runId, id, g, ntok)
-        }
-      }).toDF("a_run", "a_chunk_id", "grp", "ntok")
-    // Optional bin packing (compactBinPack): coarsen consecutive sweep
-    // groups into ≈target-token bins. Groups are disjoint ordered
-    // intervals numbered 0..G-1, so `bin = floor(tokens-before / target)`
-    // over the per-group token totals — a metadata-scale distributed
-    // prefix sum, same 2-pass shape as the carries above — combines only
-    // CONSECUTIVE groups and preserves the disjoint-interval invariant.
-    val assignment = packTokens match {
-      case None => assignment0.select("a_run", "a_chunk_id", "grp")
+    // The sweep, in Spark's UTF8-binary string order: a chunk opens a new
+    // group when it starts past the reach, the largest last_doc_id of
+    // EVERY chunk before it (a wide chunk may cover several later ones,
+    // so the previous row's end is not enough).
+    val meta = chunks.select("run", "chunk_id", "first_doc_id", "last_doc_id", "num_tokens")
+    val byStart = Window.orderBy("first_doc_id", "run", "chunk_id")
+    val swept = meta
+      .withColumn("reach",
+        max("last_doc_id").over(byStart.rowsBetween(Window.unboundedPreceding, -1)))
+      .withColumn("sweep", (sum((col("reach").isNull || col("first_doc_id") > col("reach"))
+        .cast("int")).over(byStart.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        - 1).cast("int"))
+    // Optional bin packing (compactBinPack): coarsen consecutive groups
+    // into ≈target-token bins. Groups are disjoint ordered intervals, so
+    // `bin = tokens-before-group div target` combines only CONSECUTIVE
+    // groups and preserves the disjoint-interval invariant.
+    val grouped = packTokens match {
+      case None => swept.withColumn("grp", col("sweep"))
       case Some(target) =>
         require(target > 0, s"packTokens must be positive: $target")
-        val grpTok = assignment0.groupBy("grp").agg(sum("ntok").as("gtok"))
-          .repartitionByRange(sweepParts, col("grp"))
-          .sortWithinPartitions("grp")
-          .as[(Int, Long)]
-          .cache()
-        grpTok.count() // pin the layout for the two passes
-        val tokSums = grpTok.rdd.mapPartitionsWithIndex { (pid, it) =>
-          var s = 0L
-          it.foreach(s += _._2)
-          Iterator.single((pid, s))
-        }.collect().sortBy(_._1)
-        val tokCarry = new Array[Long](tokSums.length)
-        var tAcc = 0L
-        tokSums.foreach { case (pid, s) => tokCarry(pid) = tAcc; tAcc += s }
-        val bcTokCarry = spark.sparkContext.broadcast(tokCarry)
-        val binOf = spark.createDataset(
-          grpTok.rdd.mapPartitionsWithIndex { (pid, it) =>
-            var cum = bcTokCarry.value(pid)
-            it.map { case (g, t) =>
-              val b = (cum / target).toInt
-              cum += t
-              (g, b)
-            }
-          }).toDF("grp", "bin")
-        assignment0.join(binOf, "grp")
-          .select(col("a_run"), col("a_chunk_id"), col("bin").as("grp"))
+        swept
+          .withColumn("tokens_before", coalesce(sum("num_tokens").over(
+            Window.orderBy("sweep").rangeBetween(Window.unboundedPreceding, -1)), lit(0L)))
+          .withColumn("grp", expr(s"cast(tokens_before div $target as int)"))
     }
+    val counted = grouped.withColumn("gsz", count(lit(1)).over(Window.partitionBy("grp")))
     // "dirty" chunks — interval MAY hold a deleted doc_id — cannot pass
     // through byte-identical even as singletons; a broadcast range probe
     // against the delete ids marks them for the decode path
@@ -1016,60 +921,53 @@ object EncodePipeline {
     val addedExpr =
       if (runAdded.isEmpty) lit(0)
       else coalesce(element_at(typedLit(runAdded), col("run")), lit(0))
-    val dirtyKeys = deletes.map { del =>
-      val ids = del.select(col(del.columns.head).as("__del_id"),
-        col("del_seq").as("__del_seq"))
-      meta.withColumn("__added", addedExpr)
+    val delIds = deletes.map(del =>
+      del.select(col(del.columns.head).as("__del_id"), col("del_seq").as("__del_seq")))
+    val sized = delIds.fold(counted.withColumn("dirty", lit(false))) { ids =>
+      val dirty = meta.withColumn("__added", addedExpr)
         .join(broadcast(ids),
           col("__del_id") >= col("first_doc_id") &&
             col("__del_id") <= col("last_doc_id") &&
             col("__del_seq") > col("__added"))
-        .select(col("run").as("a_run"), col("chunk_id").as("a_chunk_id"))
-        .distinct()
+        .select("run", "chunk_id").distinct()
         .withColumn("dirty", lit(true))
+      counted.join(dirty, Seq("run", "chunk_id"), "left")
+        .withColumn("dirty", coalesce(col("dirty"), lit(false)))
     }
-    // column order after the joins: (grp, a_run, a_chunk_id, gsz, dirty)
-    val sizedDf = assignment.join(
-      assignment.groupBy("grp").agg(count(lit(1)).as("gsz")), "grp")
-    val sized = dirtyKeys
-      .map(d => sizedDf.join(d, Seq("a_run", "a_chunk_id"), "left")
-        .select(col("grp"), col("a_run"), col("a_chunk_id"), col("gsz"),
-          coalesce(col("dirty"), lit(false)).as("dirty")))
-      .getOrElse(sizedDf.withColumn("dirty", lit(false)))
-      .as[(Int, Int, Long, Long, Boolean)]
-      // one row per chunk; both write branches read it, so the assignment,
-      // group-size and dirty-chunk plans run once (payloads are not cached:
-      // that would hold the whole table)
+      .select("run", "chunk_id", "sweep", "grp", "gsz", "dirty")
+      // one row per chunk; both write branches read it, so the sweep,
+      // group-size and dirty-chunk plans run once (payloads are not
+      // cached: that would hold the whole table)
       .cache()
-    val joined = all.joinWith(sized,
-      all("_1") === sized("a_run") && all("_2.chunk_id") === sized("a_chunk_id"))
+    val numGroups = sized.agg(coalesce(max("sweep") + 1, lit(0))).as[Int].head()
+    val joined = chunks.join(sized, Seq("run", "chunk_id"))
 
     // clean singleton groups: payload bytes untouched; only the keys move
+    val rekeyed = Map(
+      "part_id" -> col("grp"),
+      "chunk_id" -> shiftleft(col("grp").cast("long"), 32)
+        .bitwiseOR(col("chunk_id").bitwiseAND(0xFFFFFFFFL)))
     val pass = joined
-      .filter(t => t._2._4 == 1L && !t._2._5)
-      .map { case ((_, c), (g, _, _, _, _)) =>
-        c.copy(part_id = g, chunk_id = (g.toLong << 32) | (c.chunk_id & 0xFFFFFFFFL))
-      }
+      .where(col("gsz") === 1L && !col("dirty"))
+      .select(ChunkSchema.fields.toIndexedSeq.map(f =>
+        declared(rekeyed.getOrElse(f.name, col(f.name)), f).as(f.name)): _*)
     // overlapping or dirty groups: decode, drop applicable deleted rows,
     // co-partition by group, merge-sort, re-encode
     val addedOf = runAdded.withDefaultValue(0)
     val decoded = joined
-      .filter(t => t._2._4 > 1L || t._2._5)
-      .flatMap { case ((run, c), (g, _, _, _, _)) =>
+      .where(col("gsz") > 1L || col("dirty"))
+      .select(col("run"), col("grp"), struct(ChunkSchema.fieldNames.toIndexedSeq.map(col): _*))
+      .as[(Int, Int, EncodedChunk)]
+      .flatMap { case (run, g, c) =>
         decodeChunkRows(c, 0, c.num_rows).map(r =>
           (r.doc_id, r.tokens, r.n_tok, r.source, g, addedOf(run)))
       }
       .toDF("doc_id", "tokens", "n_tok", "source", "part_id", "__added")
-    val surviving = (deletes match {
-      case Some(del) =>
-        val ids = broadcast(del.select(
-          col(del.columns.head).as("__del_id"),
-          col("del_seq").as("__del_seq")))
-        decoded.join(ids,
-          decoded("doc_id") === col("__del_id") &&
-            col("__del_seq") > decoded("__added"), "left_anti")
-      case None => decoded
-    }).select("doc_id", "tokens", "n_tok", "source", "part_id")
+    val surviving = delIds.fold(decoded)(ids =>
+      decoded.join(broadcast(ids),
+        decoded("doc_id") === col("__del_id") &&
+          col("__del_seq") > decoded("__added"), "left_anti"))
+      .select("doc_id", "tokens", "n_tok", "source", "part_id")
     // group ids are dense (0..numGroups-1; bins are fewer), so routing by
     // id spreads them round-robin and no task is left empty while there
     // are groups for it
@@ -1099,36 +997,47 @@ object EncodePipeline {
       }
     val reencoded = spark.createDataset(
       mergedRdd.mapPartitions(encodePartition(_, tokensPerChunk)))
-    pass.toDF().unionByName(reencoded.toDF())
+    pass.unionByName(reencoded.toDF())
       .write.mode("overwrite")
       .option("compression", ChunkTableCompression)
       .parquet(outDir)
     sized.unpersist()
-    sortedMeta.unpersist()
-    meta.unpersist()
     dropEmptyParquet(spark, outDir)
     spark.read.schema(ChunkSchema).parquet(outDir)
   }
 
-  /** Delete the zero-row parquet files of an unpartitioned table: Spark's
-    * first write task leaves a schema-only file even when its partition
-    * is empty, and every later scan would open it. One file is kept when
-    * none holds rows, so the table still carries its schema. */
+  /** `c` with the nullability of chunk field `f`. A frame read from files
+    * is all nullable; declaring the never-null numbers and stream CRCs
+    * non-null again keeps a written chunk table's parquet schema that of
+    * a written Dataset[EncodedChunk]. A null where `f` forbids one fails
+    * the task. */
+  private def declared(c: Column, f: StructField): Column = {
+    import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
+    def notNull(x: Column) = ColumnBridge.column(AssertNotNull(ColumnBridge.expr(x)))
+    val v = f.dataType match {
+      case ArrayType(_, false) => transform(c, notNull(_))
+      case _ => c
+    }
+    if (f.nullable) v else notNull(v)
+  }
+
+  /** Delete the row-less first file of an unpartitioned table when other
+    * files hold the rows. Spark's write gives every empty task except
+    * partition 0 a writer that creates no file, so task 0's
+    * `part-00000-*` is the only file that can hold no rows, and one
+    * footer decides. A table whose only file is empty keeps it, so it
+    * still carries its schema. */
   private def dropEmptyParquet(spark: SparkSession, dir: String): Unit = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     val conf = spark.sparkContext.hadoopConfiguration
     val path = new org.apache.hadoop.fs.Path(dir)
     val hfs = path.getFileSystem(conf)
-    val files = hfs.listStatus(path).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    val empty = files.filter { f =>
+    val files = hfs.listStatus(path).map(_.getPath).filter(_.getName.endsWith(".parquet"))
+    files.find(_.getName.startsWith("part-00000-")).filter(_ => files.length > 1).foreach { f =>
       val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-      try r.getRecordCount == 0L finally r.close()
-    }
-    val drop = if (empty.length == files.length) empty.drop(1) else empty
-    drop.foreach { f =>
-      if (!hfs.delete(f, false) && hfs.exists(f))
+      val empty = try r.getRecordCount == 0L finally r.close()
+      if (empty && !hfs.delete(f, false) && hfs.exists(f))
         throw new java.io.IOException(s"could not remove empty output file $f")
     }
   }

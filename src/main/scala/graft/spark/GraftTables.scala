@@ -13,16 +13,12 @@ import org.apache.spark.sql.SparkSession
 object GraftTables {
 
   /** Register a persisted TOKEN chunk table (EncodedChunk schema) as SQL
-    * view `name` over its decoded (doc_id, tokens, n_tok, source) rows. */
+    * view `name` over its decoded (doc_id, tokens, n_tok, source) rows.
+    * The table is read under the pinned chunk schema: no inference job. */
   def registerTokenTable(spark: SparkSession, name: String, path: String): Unit = {
     import spark.implicits._
-    EncodePipeline.decodeDF(spark.read.parquet(path).as[EncodedChunk])
+    EncodePipeline.decodeDF(
+        spark.read.schema(EncodePipeline.ChunkSchema).parquet(path).as[EncodedChunk])
       .createOrReplaceTempView(name)
   }
-
-  /** Register a persisted GENERIC chunk table (`bin_<i>` layout; see
-    * `GenericEncode.readTable`) as SQL view `name` over its decoded rows
-    * in the original schema. */
-  def registerGenericTable(spark: SparkSession, name: String, path: String): Unit =
-    GenericEncode.readTable(spark, path).createOrReplaceTempView(name)
 }

@@ -23,6 +23,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * checkpoints keep their own resume protocol in [[EncodePipeline]]:
   * {{{
   *   <dir>/chunks/...                    data files (appends land here)
+  *   <dir>/chunks/u-vNNNNN/...           an upsert's new rows
   *   <dir>/chunks/compact-vNNNNN/...     compaction generations
   *   <dir>/_deletes/...                  equality-delete files (doc_id)
   *   <dir>/_snapshots/v00001.json        manifest: parent, operation,
@@ -410,30 +411,28 @@ object SnapshotLog {
     * is committed alongside. The delete's sequence number equals the
     * new files' added-version, so (strict ordering) it hides only the
     * PREVIOUS versions of those keys — the classic Iceberg v2 upsert.
-    * Cost is O(incoming), no existing file is read or rewritten; the
-    * next [[compactTable]] folds everything flat. */
+    * The new files are staged under `chunks/u-vNNNNN` and the commit
+    * adds exactly those, so a stray file elsewhere under `chunks` is
+    * never adopted (nor shielded from the delete). Cost is O(incoming),
+    * no existing file or manifest is read or rewritten; the next
+    * [[compactTable]] folds everything flat. */
   def upsert(spark: SparkSession, dir: String, rows: Dataset[TokenRow],
              numParts: Int = 4,
              tokensPerChunk: Int = EncodePipeline.DefaultTokensPerChunk): Int = {
     val cur = currentVersion(spark, dir).getOrElse(
       sys.error(s"no snapshots committed at $dir"))
     val (hfs, root) = fs(spark, dir)
+    // the upsert's own staging dirs: its manifest adds exactly these files
+    // (an overwrite re-stages after a crashed attempt)
+    val sub = f"u-v$cur%05d"
     EncodePipeline.encode(rows, numParts, tokensPerChunk)
-      .write.mode("append")
+      .write.mode("overwrite")
       .option("compression", EncodePipeline.ChunkTableCompression)
-      .parquet(s"$dir/chunks")
-    // same discovery rule as commit(): anything on disk no manifest
-    // references or tombstones is ours (shares commit()'s caveat about
-    // racing out-of-band writers)
-    val known = versions(spark, dir).flatMap { pv =>
-      val s = snapshot(spark, dir, pv); s.files ++ s.removed
-    }.toSet
-    val added =
-      (listParquet(hfs, root, "chunks").keySet -- known).toSeq.sorted
-    val sub = f"$DeleteDirName/u-v$cur%05d"
+      .parquet(s"$dir/chunks/$sub")
+    val added = listParquet(hfs, root, s"chunks/$sub").keys.toSeq.sorted
     rows.select(col("doc_id")).distinct()
-      .write.mode("overwrite").parquet(s"$dir/$sub")
-    val delFiles = listParquet(hfs, root, sub).keys.toSeq.sorted
+      .write.mode("overwrite").parquet(s"$dir/$DeleteDirName/$sub")
+    val delFiles = listParquet(hfs, root, s"$DeleteDirName/$sub").keys.toSeq.sorted
     commitRewrite(spark, dir, "upsert",
       removed = Set.empty, added = added, newDeletes = delFiles)
   }
@@ -495,23 +494,17 @@ object SnapshotLog {
     val sub = f"chunks/compact-v$cur%05d"
     val (hfs, root) = fs(spark, dir)
     hfs.delete(new Path(root, sub), true) // crashed attempt: re-stage
-    val raw = chunkFiles(spark, dir, snap.files)
-    val fileRuns = broadcast(
+    val runs = broadcast(
       snap.files.zipWithIndex
         .map { case (f, i) => (f.split('/').last, i) }
-        .toDF("__fname", "__run"))
-    val withRun = raw
+        .toDF("__fname", "run"))
+    val chunks = chunkFiles(spark, dir, snap.files)
       .withColumn("__fname", regexp_extract(input_file_name(), "[^/]+$", 0))
-      .join(fileRuns, "__fname")
-    val all = withRun
-      .select(col("__run").as("_1"),
-        struct(raw.columns.map(col).toIndexedSeq: _*).as("_2"))
-      .as[(Int, EncodedChunk)]
-    val meta = withRun.select(col("__run").as("run"), col("chunk_id"),
-      col("first_doc_id"), col("last_doc_id"), col("num_tokens"))
+      .join(runs, "__fname")
+      .drop("__fname")
     val runAdded = snap.fileAdded.zipWithIndex
       .map { case (a, i) => i -> a }.toMap
-    EncodePipeline.compactRuns(spark, all, meta, s"$dir/$sub",
+    EncodePipeline.compactRuns(spark, chunks, s"$dir/$sub",
       tokensPerChunk, dropDuplicates, deletesOf(spark, dir, snap),
       runAdded)
     val added = listParquet(hfs, root, sub).keys.toSeq.sorted

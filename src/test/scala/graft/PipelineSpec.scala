@@ -232,33 +232,6 @@ class PipelineSpec extends AnyFunSuite with TempDirs {
     assert(ex.getMessage.contains("CRC"), ex.getMessage)
   }
 
-  test("compaction merges incremental chunk tables into one layout") {
-    import spark.implicits._
-    val base = tmpDir("compact")
-    // two disjoint incremental runs
-    val srcA = TokenTableGen.generate(spark, 1500, 3)
-    val srcB = spark.range(1500, 3000, 1, 3).as[Long].map(TokenTableGen.genRow)
-    EncodePipeline.encode(srcA, 3, tokensPerChunk = 64 * 1024)
-      .write.parquet(s"$base/runA")
-    EncodePipeline.encode(srcB, 3, tokensPerChunk = 64 * 1024)
-      .write.parquet(s"$base/runB")
-    EncodePipeline.compact(spark, Seq(s"$base/runA", s"$base/runB"), 4, s"$base/merged",
-      tokensPerChunk = 64 * 1024)
-    val merged = spark.read.parquet(s"$base/merged/chunks").as[EncodedChunk]
-    val full = TokenTableGen.generate(spark, 3000, 4)
-    assert(EncodePipeline.verifyRoundTrip(full,
-      EncodePipeline.decodeDF(merged).as[TokenRow]) == 0L)
-    // merged layout is globally range-ordered: partition doc_id ranges
-    // must not overlap
-    val ranges = spark.read.parquet(s"$base/merged/metrics")
-      .select("part_id", "first_doc_id", "last_doc_id")
-      .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2))).sortBy(_._1)
-    ranges.sliding(2).foreach {
-      case Array((_, _, aLast), (_, bFirst, _)) => assert(aLast <= bFirst, s"$aLast > $bFirst")
-      case _ =>
-    }
-  }
-
   test("decodeDF (InternalRow path) matches the source rows exactly, nulls included") {
     import spark.implicits._
     val rows = spark.range(0, 2000, 1, 4).as[Long].map { i =>
@@ -663,6 +636,71 @@ class PipelineSpec extends AnyFunSuite with TempDirs {
     }
   }
 
+  test("compaction groups chunks as a brute-force transitive-overlap grouping does") {
+    import spark.implicits._
+    val base = tmpDir("compact-brute")
+    def rows(ids: Seq[Int]) = spark.createDataset(ids.map(i =>
+      TokenRow(f"doc/$i%06d", Array.tabulate(20)(k => i + k), 20, "web")))
+    // 20 tokens a row, 200 a chunk: runs of 10 docs become one chunk each
+    val runs = Seq(
+      Seq(0, 100), // one wide chunk [0, 100] ...
+      10 until 40, // ... holding three narrow chunks of another run,
+      50 until 60, // then one starting inside it after they all end
+      200 until 210, // equal first_doc_id across runs: [200, 209] and
+      Seq(200), // [200, 200]; and a wide [300, 350] beside [300, 309]
+      Seq(300, 350), // with [340, 349] starting past the narrower one
+      300 until 310,
+      340 until 350,
+      500 until 600) // ten disjoint chunks
+    val dirs = runs.zipWithIndex.map { case (ids, r) =>
+      EncodePipeline.encode(rows(ids), 1, tokensPerChunk = 200).write.parquet(s"$base/run$r")
+      s"$base/run$r"
+    }
+    val input = dirs.flatMap(d => spark.read.parquet(d).as[EncodedChunk].collect())
+    // plain Scala: chunks whose [first, last] intervals overlap,
+    // transitively, form a group; groups are numbered in doc_id order
+    val label = Array.tabulate(input.length)(identity)
+    def find(i: Int): Int = if (label(i) == i) i else find(label(i))
+    for (i <- input.indices; j <- input.indices
+         if input(i).first_doc_id <= input(j).last_doc_id &&
+           input(j).first_doc_id <= input(i).last_doc_id)
+      label(find(i)) = find(j)
+    val groups = input.indices.groupBy(find).values.toSeq
+      .sortBy(g => g.map(i => input(i).first_doc_id).min)
+    assert(groups.count(_.length > 1) == 3, groups) // the nested and tie cases
+    def docs(cs: Seq[EncodedChunk]): Seq[String] =
+      cs.flatMap(c => EncodePipeline.decodeChunkRows(c, 0, c.num_rows).map(_.doc_id)).sorted
+    def payload(c: EncodedChunk): Seq[Byte] =
+      (c.tokens_bin ++ c.lens_bin ++ c.docid_bin ++ c.source_bin ++ c.tokens_bloom).toSeq
+    def check(name: String, out: org.apache.spark.sql.DataFrame,
+              bins: Seq[(Long, Seq[Int])]): Unit = {
+      val got = out.as[EncodedChunk].collect().groupBy(_.part_id.toLong)
+      // the same chunks share an output part_id, numbered the same way
+      assert(got.keySet == bins.map(_._1).toSet, s"$name: part_ids ${got.keys.toSeq.sorted}")
+      bins.foreach { case (p, bin) =>
+        assert(docs(got(p).toSeq) == docs(bin.map(input)), s"$name: part $p")
+      }
+      // a chunk alone in its bin passes through byte-identical, keys aside
+      bins.filter(_._2.length == 1).foreach { case (p, Seq(i)) =>
+        val (in, o) = (input(i), got(p))
+        assert(o.length == 1 && payload(o(0)) == payload(in) && o(0).crc32 == in.crc32 &&
+          o(0).chunk_id == ((p << 32) | (in.chunk_id & 0xFFFFFFFFL)), s"$name: part $p")
+      }
+    }
+    check("sorted", EncodePipeline.compactSorted(spark, dirs, s"$base/sorted",
+      tokensPerChunk = 1 << 20), groups.indices.map(_.toLong).zip(groups))
+    // a bin is the groups whose tokens before them give the same quotient
+    // by the target
+    Seq(250L, 700L, 2000L).foreach { target =>
+      val before = groups.scanLeft(0L)(_ + _.map(i => input(i).num_tokens).sum)
+      val bins = groups.zip(before).groupBy(_._2 / target).toSeq.sortBy(_._1)
+        .map { case (b, gs) => (b, gs.flatMap(_._1)) }
+      assert(bins.length < groups.length, s"$target: $bins") // some groups share a bin
+      check(s"binpack $target", EncodePipeline.compactBinPack(spark, dirs,
+        s"$base/packed$target", tokensPerChunk = target.toInt), bins)
+    }
+  }
+
   test("bin-pack dedupes and keeps overlap semantics when runs overlap") {
     import spark.implicits._
     val base = tmpDir("binpack-dd")
@@ -849,6 +887,15 @@ class PipelineSpec extends AnyFunSuite with TempDirs {
     val m1 = EncodePipeline.encodeCheckpointed(spark, src, 4, dir, tokensPerChunk = 64 * 1024)
     val rows1 = m1.selectExpr("sum(num_rows)").head().getLong(0)
     assert(rows1 == 3000L)
+    // the layout is globally range-ordered: partition doc_id ranges in
+    // the metrics table must not overlap
+    val ranges = m1.select("part_id", "first_doc_id", "last_doc_id")
+      .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2))).sortBy(_._1)
+    assert(ranges.length > 1)
+    ranges.sliding(2).foreach {
+      case Array((_, _, aLast), (_, bFirst, _)) => assert(aLast <= bFirst, s"$aLast > $bFirst")
+      case _ =>
+    }
     // resume: everything done → no new work, metrics unchanged
     val m2 = EncodePipeline.encodeCheckpointed(spark, src, 4, dir, tokensPerChunk = 64 * 1024)
     val rows2 = m2.selectExpr("sum(num_rows)").head().getLong(0)

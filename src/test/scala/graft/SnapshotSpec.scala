@@ -254,6 +254,32 @@ class SnapshotSpec extends AnyFunSuite with TempDirs {
       .collect().forall(_.source != "UPD"))
   }
 
+  test("upsert commits only its own files, never a stray file under chunks") {
+    import spark.implicits._
+    val dir = freshDir("ups-stray")
+    val rows = TokenTableGen.generate(spark, 300, 5).cache()
+    writeSlice(dir, rows)
+    val v1 = SnapshotLog.commit(spark, dir, "append")
+    val updated = rows.filter(r => r.doc_id.hashCode % 3 == 0).map(r => r.copy(source = "UPD"))
+    // a chunk file no commit names (a crashed writer's leftover), holding
+    // the keys the upsert replaces
+    writeSlice(dir, updated.map(r => r.copy(source = "STRAY")))
+    val v1Files = SnapshotLog.snapshot(spark, dir, v1).files.toSet
+    val stray = new java.io.File(s"$dir/chunks").listFiles().map(_.getName)
+      .filter(_.endsWith(".parquet")).map(n => s"chunks/$n").toSet -- v1Files
+    assert(stray.nonEmpty)
+    val v2 = SnapshotLog.upsert(spark, dir, updated)
+    val files2 = SnapshotLog.snapshot(spark, dir, v2).files
+    assert(files2.toSet.intersect(stray).isEmpty, files2)
+    assert(files2.filterNot(v1Files).forall(_.startsWith(f"chunks/u-v$v1%05d/")), files2)
+    val updKeys = updated.map(_.doc_id).collect().toSet
+    assert(updKeys.nonEmpty)
+    val want = rows.map(r => (r.doc_id, r.source)).collect()
+      .map { case (d, src) => (d, if (updKeys(d)) "UPD" else src) }.sorted.toSeq
+    assert(SnapshotLog.readRows(spark, dir, Some(v2))
+      .map(r => (r.doc_id, r.source)).collect().sorted.toSeq == want)
+  }
+
   test("incremental read returns exactly the appended slice") {
     import spark.implicits._
     val dir = freshDir("incr")
