@@ -70,9 +70,12 @@ sealed trait ChunkLayout extends Serializable {
   /** This layout for the output narrowed to positions `keep`. */
   def narrow(keep: Seq[Int]): ChunkLayout
 
-  /** One batch per chunk row of `rows` (named `chunkCols`). */
-  def batches(rows: Iterator[InternalRow], chunkCols: Seq[String],
-              output: Seq[Attribute]): Iterator[ColumnarBatch]
+  /** One batch per chunk row of `rows` (named `chunkCols`). `ranges`,
+    * when not null, maps each chunk_id to the in-chunk rows [from, to) to
+    * decode (see [[ChunkBatches]]). */
+  private[plans] def batches(rows: Iterator[InternalRow], chunkCols: Seq[String],
+                             output: Seq[Attribute],
+                             ranges: Map[Long, (Int, Int)]): ChunkBatches
 
   /** The chunk stats columns filter pushdown reads. */
   def statCols: Seq[String]
@@ -115,9 +118,10 @@ case object TokenLayout extends ChunkLayout {
 
   override def narrow(keep: Seq[Int]): ChunkLayout = this
 
-  override def batches(rows: Iterator[InternalRow], chunkCols: Seq[String],
-                       output: Seq[Attribute]): Iterator[ColumnarBatch] =
-    new ChunkBatchIterator(rows, chunkCols, output)
+  override private[plans] def batches(rows: Iterator[InternalRow], chunkCols: Seq[String],
+                                      output: Seq[Attribute],
+                                      ranges: Map[Long, (Int, Int)]): ChunkBatches =
+    new ChunkBatchIterator(rows, chunkCols, output, ranges)
 
   override val statCols: Seq[String] = Seq("first_doc_id", "last_doc_id",
     "tokens_min", "tokens_max", "tokens_bloom", "stream_crcs")
@@ -175,9 +179,11 @@ final case class GenericLayout(colIndices: Seq[Int], colTypes: Seq[String])
   override def narrow(keep: Seq[Int]): ChunkLayout =
     GenericLayout(keep.map(colIndices), keep.map(colTypes))
 
-  override def batches(rows: Iterator[InternalRow], chunkCols: Seq[String],
-                       output: Seq[Attribute]): Iterator[ColumnarBatch] =
-    new GenericChunkBatchIterator(rows, chunkCols, output, colIndices.toArray, colTypes.toArray)
+  override private[plans] def batches(rows: Iterator[InternalRow], chunkCols: Seq[String],
+                                      output: Seq[Attribute],
+                                      ranges: Map[Long, (Int, Int)]): ChunkBatches =
+    new GenericChunkBatchIterator(rows, chunkCols, output, ranges,
+      colIndices.toArray, colTypes.toArray)
 
   override def statCols: Seq[String] =
     Seq("col_mins", "col_maxs", "col_nulls", "col_blooms", "num_rows")
@@ -445,7 +451,7 @@ case class DecodeChunksExec(output: Seq[Attribute], layout: ChunkLayout, child: 
     val l = layout
     val chunkCols = child.output.map(_.name)
     val out = output
-    child.execute().mapPartitions(l.batches(_, chunkCols, out))
+    child.execute().mapPartitions(l.batches(_, chunkCols, out, null))
   }
 
   /** Row fallback for consumers that call execute() directly: same
@@ -495,16 +501,65 @@ object GraftPlans {
       layout.chunkCols(output).map(org.apache.spark.sql.functions.col): _*)
     bridge.ofRows(spark, DecodeChunks(output, layout, bridge.analyzedPlan(projected)))
   }
+
+  /** The rows of the chunk frame `chunks`, decoded into `output` through
+    * `layout`'s batch kernel, each followed by the chunk-level columns
+    * `carry` of its chunk. `ranges` maps each chunk_id to the in-chunk
+    * rows [from, to) to decode (a seek); without it every row decodes.
+    * Only the chunk columns the decode needs, plus `carry`, are read. */
+  private[graft] def chunkRows(chunks: DataFrame, output: Seq[Attribute], layout: ChunkLayout,
+                               carry: Seq[String] = Nil,
+                               ranges: Option[Map[Long, (Int, Int)]] = None): DataFrame = {
+    val frame = chunks.select(
+      (layout.chunkCols(output) ++ carry).distinct.map(org.apache.spark.sql.functions.col): _*)
+    val names = frame.columns.toSeq
+    val carried = carry.map(frame.schema(_))
+    val ords = carried.map(f => (names.indexOf(f.name), f.dataType))
+    val r = ranges.orNull
+    val rows = frame.queryExecution.toRdd.mapPartitions(decodeRows(_, names, output, layout, ords, r))
+    val schema = StructType(output.map(a => StructField(a.name, a.dataType, a.nullable)) ++
+      carried)
+    org.apache.spark.sql.graftbridge.ColumnBridge.internalCreateDataFrame(
+      chunks.sparkSession, rows, schema)
+  }
+
+  /** [[chunkRows]] over one partition's chunk rows `rows` (named `names`):
+    * `carry` holds the (ordinal, type) of each carried chunk column. The
+    * rows are one reused UnsafeRow, valid until the next one is read, as
+    * a scan's are. */
+  private[graft] def decodeRows(rows: Iterator[InternalRow], names: Seq[String],
+                                output: Seq[Attribute], layout: ChunkLayout,
+                                carry: Seq[(Int, DataType)] = Nil,
+                                ranges: Map[Long, (Int, Int)] = null): Iterator[InternalRow] = {
+    // the kernel pulls exactly one chunk row per batch, so the row seen
+    // last is the current batch's chunk
+    var chunk: InternalRow = null
+    val kernel = layout.batches(rows.map { r => chunk = r; r }, names, output, ranges)
+    // batch rows leave as UnsafeRows: an RDD scan over the batch rows
+    // themselves made compaction's decode stage several times slower
+    val proj = UnsafeProjection.create((output.map(_.dataType) ++ carry.map(_._2)).zipWithIndex
+      .map { case (t, i) => BoundReference(i, t, true) })
+    val carryProj = UnsafeProjection.create(carry.map { case (i, t) => BoundReference(i, t, true) })
+    val joined = new JoinedRow
+    kernel.flatMap { batch =>
+      val chunkCols = carryProj(chunk).copy()
+      batch.rowIterator().asScala.drop(kernel.skip).map(r => proj(joined(r, chunkCols)))
+    }
+  }
 }
 
 /** One ColumnarBatch per chunk row of `rows` (named `chunkCols`), with
   * one vector per `output` attribute. Vectors are allocated once and
   * reset per chunk (the consumer copies what it keeps — the same reuse
   * contract as Spark's vectorized parquet reader). `crcCol` names the
-  * chunk's stream/column CRC array. */
+  * chunk's stream/column CRC array.
+  *
+  * `ranges`, when not null, maps every chunk_id to the in-chunk rows
+  * [from, to) wanted: the batch then holds the chunk's first `to` rows,
+  * and the rows before [[skip]] (= `from`) are not part of the range. */
 private[plans] abstract class ChunkBatches(
     rows: Iterator[InternalRow], chunkCols: Seq[String], output: Seq[Attribute],
-    crcCol: String) extends Iterator[ColumnarBatch] {
+    crcCol: String, ranges: Map[Long, (Int, Int)]) extends Iterator[ColumnarBatch] {
 
   protected val idx: Map[String, Int] = chunkCols.zipWithIndex.toMap
   private val iNumRows = idx("num_rows")
@@ -514,9 +569,13 @@ private[plans] abstract class ChunkBatches(
     StructField(a.name, a.dataType, a.nullable)).toArray)
   private var vectors: Array[OnHeapColumnVector] = _
 
-  /** Decode chunk `chunkId` (`row`, `n` rows) into `vectors`. */
-  protected def decode(row: InternalRow, n: Int, chunkId: Long, crcs: ArrayData,
-                       vectors: Array[OnHeapColumnVector]): Unit
+  /** The leading rows of the last batch that lie outside its chunk's range. */
+  var skip: Int = 0
+
+  /** Decode at least rows [from, to) of chunk `chunkId` (`row`, `n` rows)
+    * into `vectors`, each at its own row number. */
+  protected def decode(row: InternalRow, n: Int, from: Int, to: Int, chunkId: Long,
+                       crcs: ArrayData, vectors: Array[OnHeapColumnVector]): Unit
 
   protected def checkCrc(bin: Array[Byte], want: Long, mismatch: => String): Unit = {
     val c = new java.util.zip.CRC32()
@@ -524,11 +583,13 @@ private[plans] abstract class ChunkBatches(
     require(c.getValue == want, mismatch)
   }
 
-  /** Array offsets from per-row lengths, null rows interleaved. */
+  /** Array offsets of rows [from, n) from per-row lengths starting at
+    * `lens(k0)`, null rows interleaved; rows before `from` are null. */
   protected def putArrays(v: OnHeapColumnVector, flags: Array[Boolean],
-                          lens: Array[Int], n: Int): Unit = {
+                          lens: Array[Int], n: Int, from: Int = 0, k0: Int = 0): Unit = {
     var r = 0
-    var k = 0
+    while (r < from) { v.putNull(r); r += 1 }
+    var k = k0
     var off = 0
     while (r < n) {
       if (flags != null && flags(r)) v.putNull(r)
@@ -548,8 +609,12 @@ private[plans] abstract class ChunkBatches(
       var i = 0
       while (i < vectors.length) { vectors(i).reset(); vectors(i).reserve(n); i += 1 }
     }
-    decode(row, n, row.getLong(iChunkId), row.getArray(iCrcs), vectors)
-    new ColumnarBatch(vectors.asInstanceOf[Array[ColumnVector]], n)
+    val chunkId = row.getLong(iChunkId)
+    val (from, to) = if (ranges == null) (0, n) else ranges(chunkId)
+    require(from >= 0 && from <= to && to <= n, s"chunk $chunkId: rows [$from,$to) of $n")
+    decode(row, n, from, to, chunkId, row.getArray(iCrcs), vectors)
+    skip = from
+    new ColumnarBatch(vectors.asInstanceOf[Array[ColumnVector]], to)
   }
 }
 
@@ -560,13 +625,15 @@ private[plans] abstract class ChunkBatches(
   * columns as bulk child-vector fills plus offsets. */
 private[plans] final class GenericChunkBatchIterator(
     rows: Iterator[InternalRow], chunkCols: Seq[String], output: Seq[Attribute],
-    colIndices: Array[Int], colTypes: Array[String])
-  extends ChunkBatches(rows, chunkCols, output, "col_crcs") {
+    ranges: Map[Long, (Int, Int)], colIndices: Array[Int], colTypes: Array[String])
+  extends ChunkBatches(rows, chunkCols, output, "col_crcs", ranges) {
 
   private val binOrdinals: Array[Int] = colIndices.map(ci => idx(s"bin_$ci"))
 
-  override protected def decode(row: InternalRow, n: Int, chunkId: Long, crcs: ArrayData,
-                                vectors: Array[OnHeapColumnVector]): Unit = {
+  /** Generic columns carry no intra-chunk page index: a range decodes
+    * the whole chunk. */
+  override protected def decode(row: InternalRow, n: Int, from: Int, to: Int, chunkId: Long,
+                                crcs: ArrayData, vectors: Array[OnHeapColumnVector]): Unit = {
     var k = 0
     while (k < colIndices.length) {
       val bin = row.getBinary(binOrdinals(k))
@@ -698,21 +765,26 @@ private[plans] final class VectorBytesSink(
 }
 
 /** TOKEN chunk rows. Only the streams the requested columns need are
-  * CRC-checked and decoded. */
+  * CRC-checked and decoded. A range decodes only the token pages that
+  * cover its rows (`StreamedTokens.decodeRows` skips the rest by bytes,
+  * the reference's SeekToRow, file.go:684-709); the row-level streams
+  * (lens, doc_id, source — a few % of chunk bytes) decode whole. */
 private[plans] final class ChunkBatchIterator(
-    rows: Iterator[InternalRow], chunkCols: Seq[String], output: Seq[Attribute])
-  extends ChunkBatches(rows, chunkCols, output, "stream_crcs") {
+    rows: Iterator[InternalRow], chunkCols: Seq[String], output: Seq[Attribute],
+    ranges: Map[Long, (Int, Int)])
+  extends ChunkBatches(rows, chunkCols, output, "stream_crcs", ranges) {
 
   private val outCols = output.map(_.name)
   private val needTokens = outCols.contains("tokens")
   private val needNtok = outCols.contains("n_tok")
 
-  override protected def decode(row: InternalRow, n: Int, chunkId: Long, crcData: ArrayData,
-                                vectors: Array[OnHeapColumnVector]): Unit = {
+  override protected def decode(row: InternalRow, n: Int, from: Int, to: Int, chunkId: Long,
+                                crcData: ArrayData, vectors: Array[OnHeapColumnVector]): Unit = {
     val crcs = crcData.toLongArray()
     var lens: Array[Int] = null
     var tokFlags: Array[Boolean] = null
     var flat: Array[Int] = null
+    var firstLen = 0 // the lens index of row `from`
     if (needTokens || needNtok) {
       val lensBin = row.getBinary(idx("lens_bin"))
       checkCrc(lensBin, crcs(1), s"chunk $chunkId: lens stream CRC mismatch")
@@ -722,7 +794,15 @@ private[plans] final class ChunkBatchIterator(
       if (needTokens) {
         val (f, inner) = Chunks.unwrapNullable(BlockCompression.decompress(tokensBin))
         tokFlags = f
-        flat = StreamedTokens.decode(inner, lens)
+        if (from == 0 && to == n) flat = StreamedTokens.decode(inner, lens)
+        else {
+          // rows [from, to) are the non-null token rows [firstLen, end)
+          var r = 0
+          while (r < from) { if (f == null || !f(r)) firstLen += 1; r += 1 }
+          var end = firstLen
+          while (r < to) { if (f == null || !f(r)) end += 1; r += 1 }
+          flat = StreamedTokens.decodeRows(inner, lens, firstLen, end)._1
+        }
       } else if (BlockCompression.isFramed(tokensBin) ||
           (tokensBin(0) & 0xFF) == Codecs.NullableWrap) {
         // n_tok without tokens: bitmap peek only, token payload never decoded
@@ -745,7 +825,7 @@ private[plans] final class ChunkBatchIterator(
           val data = v.arrayData()
           data.reserve(flat.length)
           data.putInts(0, flat.length, flat, 0)
-          putArrays(v, tokFlags, lens, n)
+          putArrays(v, tokFlags, lens, to, from, firstLen)
         case "n_tok" =>
           var r = 0
           var k = 0

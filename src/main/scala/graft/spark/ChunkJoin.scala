@@ -1,6 +1,10 @@
 package graft.spark
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import graft.functions.PartIdKernels
+import graft.plans.{GraftPlans, TokenLayout}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.functions.col
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One joined output row: the chunk table's payload columns next to the
@@ -19,15 +23,17 @@ final case class ChunkJoinRow(doc_id: String, source: String, n_tok: Int, weight
   *
   *   1. assign each probe row its part_id with the SAME bounds kernel
   *      (graft.functions.PartIdKernels — byte-wise UTF8 order),
-  *   2. cogroup both sides on part_id — the chunk side crosses the
-  *      exchange ENCODED (~2.2x fewer bytes than its decoded rows at the
-  *      measured compression ratio) and the probe side is the small
-  *      update/delta set by assumption,
-  *   3. per partition: sort the probe group in UTF8 byte order (the order
+  *   2. route both sides by part_id, part p to task p — the chunk side
+  *      crosses the exchange ENCODED (~2.2x fewer bytes than its decoded
+  *      rows at the measured compression ratio) and the probe side is the
+  *      small update/delta set by assumption,
+  *   3. per task: sort the probe rows in UTF8 byte order (the order
   *      Spark's own string sort used at encode time), then stream-decode
   *      only the chunks whose [first_doc_id, last_doc_id] range contains
-  *      a probe key and merge — the chunk side needs NO sort because the
-  *      layout already is one.
+  *      a probe key and merge — the decoded rows need NO sort because the
+  *      layout already is one. The decode is the engine's one decode
+  *      kernel (`GraftPlans.decodeRows`), into doc_id, n_tok and source
+  *      only: the token payload is never decoded.
   *
   * Contrast with the naive `decodeDF(chunks).join(probe, "doc_id")` plan:
   * two exchanges of DECODED rows plus two full sorts (or a build-side
@@ -62,16 +68,24 @@ object ChunkJoin {
     val spark = chunks.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(bounds.map(UTF8String.fromString))
+    // n_tok reads only the tokens stream's null bitmap: the token payload
+    // is never decoded
+    val output = Seq("doc_id", "n_tok", "source").map(TokenLayout.attrFor)
+    // an Int key hashes to itself: part p lands in task p on both sides
+    val byPart = new HashPartitioner(bounds.length + 1)
+    val chunkFrame = chunks.toDF().select((Seq("part_id", "first_doc_id", "last_doc_id") ++
+      TokenLayout.chunkCols(output)).map(col): _*)
+    val names = chunkFrame.columns.toSeq
+    val iChunkId = names.indexOf("chunk_id")
+    val chunkSide = chunkFrame.queryExecution.toRdd.map(r => (r.getInt(0), r.copy()))
+      .partitionBy(byPart)
+    val probeSide = probe.rdd.map { case (doc, w) =>
+      val id = UTF8String.fromString(doc)
+      (PartIdKernels.assign(bc.value, id), (id, w))
+    }.partitionBy(byPart)
 
-    val keyedChunks = chunks.groupByKey(_.part_id)
-    val keyedProbe = probe
-      .map { case (id, w) =>
-        (graft.functions.PartIdKernels.assign(bc.value, UTF8String.fromString(id)), id, w)
-      }
-      .groupByKey(_._1)
-
-    keyedChunks.cogroup(keyedProbe) { (_, chunkIt, probeIt) =>
-      val probeArr = probeIt.map(t => (UTF8String.fromString(t._2), t._3)).toArray
+    val joined = chunkSide.zipPartitions(probeSide) { (chunkIt, probeIt) =>
+      val probeArr = probeIt.map(_._2).toArray
       if (probeArr.isEmpty) Iterator.empty
       else {
         // UTF8 byte order == the order Spark sorted doc_id by at encode time
@@ -86,29 +100,28 @@ object ChunkJoin {
           }
           lo
         }
-        val sortedChunks = chunkIt.toArray.sortBy(_.chunk_id)
+        // chunk-level prune: any probe key inside [first, last]?
+        val touched = chunkIt.map(_._2).toArray.sortBy(_.getLong(iChunkId)).iterator.filter { c =>
+          val lb = lowerBound(c.getUTF8String(1))
+          lb < probeArr.length && probeArr(lb)._1.compareTo(c.getUTF8String(2)) <= 0
+        }
         var i = 0 // probe cursor, monotone across the whole partition
         // lazy end-to-end: one decoded chunk in flight, matches stream out
-        sortedChunks.iterator.flatMap { c =>
-          // chunk-level prune: any probe key inside [first, last]?
-          val lb = lowerBound(UTF8String.fromString(c.first_doc_id))
-          if (lb >= probeArr.length ||
-              probeArr(lb)._1.compareTo(UTF8String.fromString(c.last_doc_id)) > 0)
-            Iterator.empty
-          else EncodePipeline.decodeChunkRows(c, 0, c.num_rows).flatMap { row =>
-            val key = UTF8String.fromString(row.doc_id)
-            while (i < probeArr.length && probeArr(i)._1.compareTo(key) < 0) i += 1
-            var j = i
-            var matches = List.empty[ChunkJoinRow]
-            while (j < probeArr.length && probeArr(j)._1.compareTo(key) == 0) {
-              matches = ChunkJoinRow(row.doc_id, row.source, row.n_tok,
-                probeArr(j)._2) :: matches
-              j += 1
-            }
-            matches
+        GraftPlans.decodeRows(touched, names, output, TokenLayout).flatMap { row =>
+          val key = row.getUTF8String(0)
+          while (i < probeArr.length && probeArr(i)._1.compareTo(key) < 0) i += 1
+          var j = i
+          var matches = List.empty[ChunkJoinRow]
+          while (j < probeArr.length && probeArr(j)._1.compareTo(key) == 0) {
+            matches = ChunkJoinRow(key.toString,
+              if (row.isNullAt(2)) null else row.getUTF8String(2).toString,
+              row.getInt(1), probeArr(j)._2) :: matches
+            j += 1
           }
+          matches
         }
       }
     }
+    spark.createDataset(joined)
   }
 }

@@ -1,6 +1,7 @@
 package graft.spark
 
 import graft.codec._
+import graft.plans.{GraftPlans, TokenLayout}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
@@ -38,7 +39,8 @@ final case class EncodedChunk(
     /** Per-stream CRCs (tokens, lens, docid, source, bloom): a projected
       * read that fetches only SOME streams can still fail loudly on
       * corruption without touching the streams it skipped (the reference
-      * CRCs per page, page.go; whole-chunk crc32 stays for full decodes). */
+      * CRCs per page, page.go). Every decode checks these; the
+      * whole-chunk crc32 is kept in the format but no read checks it. */
     stream_crcs: Seq[Long],
     tokens_bloom: Array[Byte],
     tokens_bin: Array[Byte],
@@ -434,71 +436,14 @@ object EncodePipeline {
     * ColumnPruning shrinks it automatically under aggregates/projects
     * (reference reads pages per requested column, file.go:439-485).
     * Rows whose tokens were NULL come back with `tokens = null,
-    * n_tok = -1`; NULL sources come back null. This is the one
-    * Dataset-level token decoder: typed callers take
-    * `decodeDF(chunks).as[TokenRow]`. */
+    * n_tok = -1`; NULL sources come back null. Typed callers take
+    * `decodeDF(chunks).as[TokenRow]`. Its batch kernel
+    * (`plans.ChunkBatchIterator`) is the engine's one token-stream
+    * decoder: seeks, compaction, `ChunkJoin` and `TokenIndex` decode
+    * through it as well (`GraftPlans.chunkRows`). */
   def decodeDF(chunks: Dataset[EncodedChunk],
                cols: Seq[String] = Seq("doc_id", "tokens", "n_tok", "source")): DataFrame =
-    graft.plans.GraftPlans.decodeDF(chunks.toDF(), cols)
-
-  /** Per-chunk typed decode of rows [fromRow, toRow) — the whole chunk is
-    * `decodeChunkRows(c, 0, c.num_rows)`. Token pages outside the range
-    * are skipped by bytes via the paged offset index (reference
-    * SeekToRow, file.go:684-709); the row-level streams (lens, doc_id,
-    * source — a few % of chunk bytes) decode fully. */
-  def decodeChunkRows(c: EncodedChunk, fromRow: Int, toRow: Int): Iterator[TokenRow] = {
-    require(fromRow >= 0 && fromRow <= toRow && toRow <= c.num_rows,
-      s"rows [$fromRow,$toRow) of ${c.num_rows}")
-    // Same corruption-fails-loudly stance as decodeDF: the partial read
-    // skips token-page DECODE, but the chunk's bytes are all in hand, so
-    // the CRC pass (proportional to bytes, not rows) is cheap relative to
-    // having fetched them.
-    val crc = new java.util.zip.CRC32()
-    crc.update(c.tokens_bin); crc.update(c.lens_bin)
-    crc.update(c.docid_bin); crc.update(c.source_bin)
-    crc.update(c.tokens_bloom)
-    require(crc.getValue == c.crc32, s"chunk ${c.chunk_id}: CRC mismatch")
-    val lens = Chunks.decodeInts(BlockCompression.decompress(c.lens_bin))
-    val (tokFlags, tokensInner) = Chunks.unwrapNullable(BlockCompression.decompress(c.tokens_bin))
-    // map chunk rows -> non-null token-row indices
-    var nnStart = 0
-    var r = 0
-    while (r < fromRow) { if (tokFlags == null || !tokFlags(r)) nnStart += 1; r += 1 }
-    var nnEnd = nnStart
-    while (r < toRow) { if (tokFlags == null || !tokFlags(r)) nnEnd += 1; r += 1 }
-    val (flat, _, _) = StreamedTokens.decodeRows(tokensInner, lens, nnStart, nnEnd)
-    val docIds = Chunks.decodeStrings(BlockCompression.decompress(c.docid_bin))
-    val (srcFlags, srcInner) = Chunks.unwrapNullable(BlockCompression.decompress(c.source_bin))
-    val srcDense = Chunks.decodeStrings(srcInner)
-    var srcCursor = 0
-    r = 0
-    while (r < fromRow) { if (srcFlags == null || !srcFlags(r)) srcCursor += 1; r += 1 }
-    var tokRow = nnStart
-    var flatOff = 0
-    var row = fromRow
-    Iterator.continually {
-      val cur = row
-      row += 1
-      val tokensOut =
-        if (tokFlags != null && tokFlags(cur)) null
-        else {
-          val n = lens(tokRow)
-          tokRow += 1
-          val a = java.util.Arrays.copyOfRange(flat, flatOff, flatOff + n)
-          flatOff += n
-          a
-        }
-      val sourceOut =
-        if (srcFlags != null && srcFlags(cur)) null
-        else {
-          val s = srcDense(srcCursor)
-          srcCursor += 1
-          new String(s, UTF_8)
-        }
-      TokenRow(new String(docIds(cur), UTF_8), tokensOut,
-        if (tokensOut == null) -1 else tokensOut.length, sourceOut)
-    }.take(toRow - fromRow)
-  }
+    GraftPlans.decodeDF(chunks.toDF(), cols)
 
   /** Distributed row-offset index over a chunk table: one row per chunk
     * with its global `row_start` in the canonical (part_id, chunk_id)
@@ -570,22 +515,18 @@ object EncodePipeline {
     * (part_id, chunk_id, row-in-chunk): the distributed row index picks
     * the covering chunks (only THOSE reach the driver — O(count/chunk),
     * not O(#chunks); rounds 1-2 collected every chunk's metadata), and
-    * each decodes only its needed row range — reading 10 rows of a
-    * 10^9-row table touches one or two chunks and within them only the
-    * covering token pages. Pass a persisted `index` (encodeCheckpointed
+    * each decodes only its needed row range through the decode kernel —
+    * reading 10 rows of a 10^9-row table touches one or two chunks and
+    * within them only the covering token pages, with every stream it
+    * reads CRC-checked. Pass a persisted `index` (encodeCheckpointed
     * writes one under <dir>/row_index) to skip the metadata job. */
   def seekToRows(chunks: Dataset[EncodedChunk], start: Long, count: Long,
                  index: Option[DataFrame] = None): Dataset[TokenRow] = {
     val spark = chunks.sparkSession
     import spark.implicits._
     val ranges = coveringRanges(index.getOrElse(rowIndex(chunks)), start, count)
-    val bc = spark.sparkContext.broadcast(ranges)
-    chunks
-      .filter(coveringChunks(ranges))
-      .flatMap { c =>
-        val (from, to) = bc.value(c.chunk_id)
-        decodeChunkRows(c, from, to)
-      }
+    GraftPlans.chunkRows(chunks.toDF().filter(coveringChunks(ranges)),
+      TokenLayout.TokenCols.map(TokenLayout.attrFor), TokenLayout, ranges = Some(ranges)).as[TokenRow]
   }
 
   // ------------------------------------------------------------- checkpoint
@@ -789,8 +730,8 @@ object EncodePipeline {
     // in-memory chunk Datasets carry no stats columns for the rule to see.
     val token = graft.functions.QueryParam(tokenId, IntegerType)
     val pruned = chunks.toDF().filter(ColumnBridge.column(
-      graft.plans.TokenLayout.containsToken(UnresolvedAttribute(_), token).reduce(And)))
-    graft.plans.GraftPlans.decodeDF(pruned, Seq("doc_id", "tokens"))
+      TokenLayout.containsToken(UnresolvedAttribute(_), token).reduce(And)))
+    GraftPlans.decodeDF(pruned, Seq("doc_id", "tokens"))
       .where(array_contains(col("tokens"), ColumnBridge.column(token)))
       .select(col("doc_id")).as[String]
   }
@@ -953,21 +894,12 @@ object EncodePipeline {
         declared(rekeyed.getOrElse(f.name, col(f.name)), f).as(f.name)): _*)
     // overlapping or dirty groups: decode, drop applicable deleted rows,
     // co-partition by group, merge-sort, re-encode
-    val addedOf = runAdded.withDefaultValue(0)
-    val decoded = joined
-      .where(col("gsz") > 1L || col("dirty"))
-      .select(col("run"), col("grp"), struct(ChunkSchema.fieldNames.toIndexedSeq.map(col): _*))
-      .as[(Int, Int, EncodedChunk)]
-      .flatMap { case (run, g, c) =>
-        decodeChunkRows(c, 0, c.num_rows).map(r =>
-          (r.doc_id, r.tokens, r.n_tok, r.source, g, addedOf(run)))
-      }
-      .toDF("doc_id", "tokens", "n_tok", "source", "part_id", "__added")
+    val decoded = GraftPlans.chunkRows(joined.where(col("gsz") > 1L || col("dirty")),
+      TokenLayout.TokenCols.map(TokenLayout.attrFor), TokenLayout, carry = Seq("grp", "run"))
     val surviving = delIds.fold(decoded)(ids =>
       decoded.join(broadcast(ids),
-        decoded("doc_id") === col("__del_id") &&
-          col("__del_seq") > decoded("__added"), "left_anti"))
-      .select("doc_id", "tokens", "n_tok", "source", "part_id")
+        col("doc_id") === col("__del_id") && col("__del_seq") > addedExpr, "left_anti"))
+      .select(col("doc_id"), col("tokens"), col("n_tok"), col("source"), col("grp").as("part_id"))
     // group ids are dense (0..numGroups-1; bins are fewer), so routing by
     // id spreads them round-robin and no task is left empty while there
     // are groups for it

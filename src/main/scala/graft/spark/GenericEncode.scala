@@ -938,41 +938,22 @@ object GenericEncode {
     * reference file.go:684-709): covering chunks come from the same
     * distributed row index the token pipeline uses, each covering chunk
     * decodes only the requested columns through the same columnar batch
-    * kernel as [[decode]], and rows [from, to) are copied out of the
-    * batch. Generic columns carry no intra-chunk page index, so
-    * partial-ness is chunk-granular (the token table additionally
-    * byte-skips pages). */
+    * kernel as [[decode]] (`GraftPlans.chunkRows`, the helper token seeks
+    * use), and only rows [from, to) leave the batch. Generic columns
+    * carry no intra-chunk page index, so partial-ness is chunk-granular
+    * (the token table additionally byte-skips pages). */
   def seekRows(spark: SparkSession, chunks: Dataset[GenericChunk], start: Long, count: Long,
                cols: Seq[String] = Seq.empty): DataFrame = {
     val meta = metaHead(chunks)
     if (meta.isEmpty) return spark.emptyDataFrame
     val ranges = EncodePipeline.coveringRanges(
       EncodePipeline.rowIndexOf(chunks.toDF()), start, count)
-    val bc = spark.sparkContext.broadcast(ranges)
     val (allNames, allTypes) = meta.get
     val (attrs, layout) = decodeLayout(allNames, allTypes, cols)
-    val payload = binFrame(chunks, allNames.length)
-      .filter(EncodePipeline.coveringChunks(ranges))
-      .select(layout.chunkCols(attrs).map(fcol): _*)
-    val payloadNames = payload.columns.toSeq
-    val iChunkId = payloadNames.indexOf("chunk_id")
-    val rowRdd = payload.queryExecution.toRdd.mapPartitions { it =>
-      import scala.jdk.CollectionConverters._
-      // the batch iterator pulls exactly one chunk row per batch, so the
-      // id seen last is the current batch's chunk
-      var chunkId = 0L
-      val tagged = it.map { r => chunkId = r.getLong(iChunkId); r }
-      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(attrs, attrs)
-      layout.batches(tagged, payloadNames, attrs)
-        .flatMap { batch =>
-          val (from, to) = bc.value(chunkId)
-          batch.rowIterator().asScala.slice(from, to).map(r => proj(r).copy(): InternalRow)
-        }
-    }
-    val schema = StructType(attrs.map(a => StructField(a.name, a.dataType, nullable = true)))
-    val flat = org.apache.spark.sql.graftbridge.ColumnBridge
-      .internalCreateDataFrame(spark, rowRdd, schema)
-    if (schema.fieldNames.exists(_.contains(Sep))) unflatten(flat) else flat
+    val flat = graft.plans.GraftPlans.chunkRows(
+      binFrame(chunks, allNames.length).filter(EncodePipeline.coveringChunks(ranges)),
+      attrs, layout, ranges = Some(ranges))
+    if (attrs.exists(_.name.contains(Sep))) unflatten(flat) else flat
   }
 
   // ------------------------------------------------- columnar table layout

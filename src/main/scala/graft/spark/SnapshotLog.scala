@@ -214,13 +214,21 @@ object SnapshotLog {
     sys.error(s"snapshot commit at $dir: lost the version race 64 times")
   }
 
+  /** An operation's own staging dirs under `chunks/` (`u-vNNNNN`,
+    * `compact-vNNNNN`): only that operation's rewrite commit adds their
+    * files. */
+  private val StagedFile = "chunks/(u|compact)-v\\d{5}/.+".r
+
   /** Commit the CURRENT contents of <dir>/chunks as the next snapshot:
     * parent's files that still exist on disk, plus any file no existing
     * manifest references or tombstones (a compaction's logically-removed
-    * files are therefore NOT re-adopted while they await GC). Delete
-    * files in effect carry over. A discovered file that is not a chunk
-    * file fails the commit before any manifest names it. Returns the
-    * committed version. */
+    * files are therefore NOT re-adopted while they await GC). Files in an
+    * upsert's or a compaction's staging dir are never discovered: a crash
+    * between that operation's write and its commit leaves rows (or a
+    * copy of rows) whose commit never happened. Delete files in effect
+    * carry over. A discovered file that is not a chunk file fails the
+    * commit before any manifest names it. Returns the committed
+    * version. */
   def commit(spark: SparkSession, dir: String, operation: String): Int = {
     val (hfs, root) = fs(spark, dir)
     commitWith(spark, dir) { (parent, v) =>
@@ -231,7 +239,7 @@ object SnapshotLog {
       val parentAdded: Map[String, Int] = parent
         .map(p => p.files.zip(p.fileAdded).toMap).getOrElse(Map.empty)
       val kept = parent.map(_.files).getOrElse(Nil).filter(listing.contains)
-      val discovered = (listing.keySet -- known).toSeq
+      val discovered = (listing.keySet -- known).toSeq.filterNot(StagedFile.matches)
       requireChunkFiles(hfs, root, discovered)
       val files = (kept ++ discovered).sorted
       val bytes = files.map(listing)
@@ -413,9 +421,11 @@ object SnapshotLog {
     * PREVIOUS versions of those keys — the classic Iceberg v2 upsert.
     * The new files are staged under `chunks/u-vNNNNN` and the commit
     * adds exactly those, so a stray file elsewhere under `chunks` is
-    * never adopted (nor shielded from the delete). Cost is O(incoming),
-    * no existing file or manifest is read or rewritten; the next
-    * [[compactTable]] folds everything flat. */
+    * never adopted (nor shielded from the delete). The deleted ids are
+    * the doc_id stream of exactly those files, so `rows` is not run a
+    * second time for them (a nondeterministic plan would give another
+    * key set). Cost is O(incoming), no existing file or manifest is read
+    * or rewritten; the next [[compactTable]] folds everything flat. */
   def upsert(spark: SparkSession, dir: String, rows: Dataset[TokenRow],
              numParts: Int = 4,
              tokensPerChunk: Int = EncodePipeline.DefaultTokensPerChunk): Int = {
@@ -430,7 +440,7 @@ object SnapshotLog {
       .option("compression", EncodePipeline.ChunkTableCompression)
       .parquet(s"$dir/chunks/$sub")
     val added = listParquet(hfs, root, s"chunks/$sub").keys.toSeq.sorted
-    rows.select(col("doc_id")).distinct()
+    graft.plans.GraftPlans.decodeDF(chunkFiles(spark, dir, added), Seq("doc_id")).distinct()
       .write.mode("overwrite").parquet(s"$dir/$DeleteDirName/$sub")
     val delFiles = listParquet(hfs, root, s"$DeleteDirName/$sub").keys.toSeq.sorted
     commitRewrite(spark, dir, "upsert",

@@ -1,6 +1,6 @@
 package graft.spark
 
-import graft.codec.{BlockCompression, Chunks, StreamedTokens}
+import graft.plans.{GraftPlans, TokenLayout}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,29 +31,15 @@ import org.apache.spark.sql.functions._
   */
 object TokenIndex {
 
-  /** Distinct tokens of one chunk, via the tokens+lens streams only.
-    * Per-stream CRCs (tokens=0, lens=1) fail loudly on corruption without
-    * touching the streams this pass skips. */
-  private def distinctTokens(c: EncodedChunk): Array[Int] = {
-    def crcOf(b: Array[Byte]): Long = {
-      val crc = new java.util.zip.CRC32(); crc.update(b); crc.getValue
-    }
-    require(crcOf(c.tokens_bin) == c.stream_crcs(0),
-      s"chunk ${c.chunk_id}: tokens stream CRC mismatch")
-    require(crcOf(c.lens_bin) == c.stream_crcs(1),
-      s"chunk ${c.chunk_id}: lens stream CRC mismatch")
-    val lens = Chunks.decodeInts(BlockCompression.decompress(c.lens_bin))
-    val (_, tokensInner) = Chunks.unwrapNullable(BlockCompression.decompress(c.tokens_bin))
-    val flat = StreamedTokens.decode(tokensInner, lens)
-    val seen = new java.util.HashSet[Int](math.min(flat.length, 1 << 16))
-    val out = Array.newBuilder[Int]
-    var i = 0
-    while (i < flat.length) {
-      if (seen.add(flat(i))) out += flat(i)
-      i += 1
-    }
-    out.result()
-  }
+  /** (token, chunk_id) once per distinct token of each chunk of `chunks`.
+    * The decode reads the tokens and lens streams only and checks their
+    * stream CRCs, so corruption fails loudly without the doc_id and
+    * source streams ever being fetched. */
+  private def chunkTokens(chunks: DataFrame): DataFrame =
+    GraftPlans.chunkRows(chunks, Seq(TokenLayout.attrFor("tokens")), TokenLayout,
+      carry = Seq("chunk_id"))
+      .select(explode(col("tokens")).as("token"), col("chunk_id"))
+      .distinct()
 
   /** Build the index: one distributed pass over the chunk table, posting
     * lists written as a generic chunk table at `indexDir` sorted by
@@ -62,11 +48,7 @@ object TokenIndex {
     * index covers, making incremental maintenance possible without
     * decoding the posting lists themselves. */
   def build(chunks: Dataset[EncodedChunk], indexDir: String): Unit = {
-    val spark = chunks.sparkSession
-    import spark.implicits._
-    val postings = chunks
-      .flatMap(c => distinctTokens(c).iterator.map(t => (t, c.chunk_id)))
-      .toDF("token", "chunk_id")
+    val postings = chunkTokens(chunks.toDF())
       .groupBy("token")
       .agg(sort_array(collect_list("chunk_id")).as("chunk_ids"))
       .orderBy("token")
@@ -90,15 +72,11 @@ object TokenIndex {
     * still invalidates chunk_ids and needs a rebuild. */
   def buildIncremental(chunks: Dataset[EncodedChunk], indexDir: String): Unit = {
     val spark = chunks.sparkSession
-    import spark.implicits._
     val indexed = spark.read.parquet(s"$indexDir/.indexed")
     val newChunks = chunks.toDF()
       .join(broadcast(indexed), Seq("chunk_id"), "left_anti")
-      .as[EncodedChunk]
     if (newChunks.isEmpty) return
-    val newPostings = newChunks
-      .flatMap(c => distinctTokens(c).iterator.map(t => (t, c.chunk_id)))
-      .toDF("token", "chunk_id")
+    val newPostings = chunkTokens(newChunks)
       .groupBy("token")
       .agg(sort_array(collect_list("chunk_id")).as("new_ids"))
     val empty = array().cast("array<bigint>")
@@ -133,7 +111,7 @@ object TokenIndex {
       .select(explode(col("chunk_ids")).as("chunk_id"))
     val pruned = chunks.toDF()
       .join(broadcast(covering), Seq("chunk_id"), "left_semi")
-    graft.plans.GraftPlans.decodeDF(pruned, Seq("doc_id", "tokens"))
+    GraftPlans.decodeDF(pruned, Seq("doc_id", "tokens"))
       .where(array_contains(col("tokens"), tokenId))
       .select(col("doc_id")).as[String]
   }
@@ -169,7 +147,7 @@ object TokenIndex {
     val positional =
       s"CASE WHEN size(tokens) >= $k THEN " +
         s"exists(sequence(0, size(tokens) - $k), i -> $conds) ELSE false END"
-    graft.plans.GraftPlans.decodeDF(pruned, Seq("doc_id", "tokens"))
+    GraftPlans.decodeDF(pruned, Seq("doc_id", "tokens"))
       .where(expr(positional))
       .select(col("doc_id")).as[String]
   }

@@ -144,7 +144,7 @@ class PipelineSpec extends AnyFunSuite with TempDirs {
     val chunks = persisted.collect()
     assert(chunks.length > 4, "small chunks: several per partition")
     chunks.foreach { c =>
-      val ids = EncodePipeline.decodeChunkRows(c, 0, c.num_rows).map(_.doc_id).toSeq
+      val ids = EncodePipeline.decodeDF(Seq(c).toDS(), Seq("doc_id")).as[String].collect().toSeq
       assert(c.first_doc_id == ids.min && c.last_doc_id == ids.max,
         s"chunk ${c.chunk_id} stamped [${c.first_doc_id}, ${c.last_doc_id}]")
     }
@@ -222,14 +222,30 @@ class PipelineSpec extends AnyFunSuite with TempDirs {
     import spark.implicits._
     val src = TokenTableGen.generate(spark, 200, 2)
     val chunk = EncodePipeline.encode(src, 2, tokensPerChunk = 1 << 20).collect()(0)
-    val corrupted = chunk.copy(tokens_bin = {
-      val b = chunk.tokens_bin.clone()
-      b(b.length / 2) = (b(b.length / 2) ^ 0x40).toByte
-      b
-    })
-    val ex = intercept[Exception](
-      EncodePipeline.decodeChunkRows(corrupted, 0, corrupted.num_rows).toArray)
-    assert(ex.getMessage.contains("CRC"), ex.getMessage)
+    def flip(b: Array[Byte]): Array[Byte] = {
+      val c = b.clone()
+      c(c.length / 2) = (c(c.length / 2) ^ 0x40).toByte
+      c
+    }
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ messages(e.getCause))
+    val corrupted = Seq(
+      "tokens" -> chunk.copy(tokens_bin = flip(chunk.tokens_bin)),
+      "lens" -> chunk.copy(lens_bin = flip(chunk.lens_bin)),
+      "docid" -> chunk.copy(docid_bin = flip(chunk.docid_bin)),
+      "source" -> chunk.copy(source_bin = flip(chunk.source_bin)))
+    for ((stream, c) <- corrupted) {
+      val one = Seq(c).toDS()
+      val reads = Seq(
+        "decodeDF" -> (() => EncodePipeline.decodeDF(one).collect()),
+        "a whole-chunk seek" -> (() => EncodePipeline.seekToRows(one, 0, c.num_rows).collect()),
+        "a ranged seek" -> (() => EncodePipeline.seekToRows(one, 3, 5).collect()))
+      for ((how, read) <- reads) {
+        val ex = intercept[Exception](read())
+        assert(messages(ex).exists(_.contains(s"$stream stream CRC mismatch")),
+          s"$stream via $how: ${messages(ex)}")
+      }
+    }
   }
 
   test("decodeDF (InternalRow path) matches the source rows exactly, nulls included") {
@@ -498,9 +514,9 @@ class PipelineSpec extends AnyFunSuite with TempDirs {
     import spark.implicits._
     val src = TokenTableGen.generate(spark, 4000, 4)
     val chunks = EncodePipeline.encode(src, 4, tokensPerChunk = 1 << 20).cache()
-    // canonical order reference: full decode sorted by (part_id, chunk, row)
-    val metas = chunks.collect().sortBy(c => (c.part_id, c.chunk_id))
-    val fullOrdered = metas.flatMap(c => EncodePipeline.decodeChunkRows(c, 0, c.num_rows).toSeq)
+    // a range-partitioned encode's canonical (part_id, chunk, row) order
+    // is doc_id order
+    val fullOrdered = src.collect().sortBy(_.doc_id)
     for (start <- Seq(0L, 17L, 1999L, 3990L)) {
       val got = EncodePipeline.seekToRows(chunks, start, 10).collect()
         .sortBy(_.doc_id)
@@ -520,6 +536,44 @@ class PipelineSpec extends AnyFunSuite with TempDirs {
       big.num_rows / 2, big.num_rows / 2 + 10)
     assert(total >= 8, s"chunk too small to evidence skipping: $total pages")
     assert(decoded * 2 <= total, s"decoded $decoded of $total pages")
+    chunks.unpersist()
+  }
+
+  test("seekToRows: ranges over NULL tokens and sources equal the source rows") {
+    import spark.implicits._
+    val tokNull = (i: Int) => i % 4 == 0
+    val srcNull = (i: Int) => i % 3 == 0
+    // generated in doc_id order, the canonical order of a range-partitioned encode
+    val rows = (0 until 600).map { i =>
+      val tokens = if (tokNull(i)) null else Array.tabulate(i % 5 + 1)(k => i * 7 + k)
+      TokenRow(f"doc/$i%06d", tokens, if (tokens == null) -1 else tokens.length,
+        if (srcNull(i)) null else s"src${i % 2}")
+    }
+    val chunks = EncodePipeline.encode(spark.createDataset(rows), 2, tokensPerChunk = 128).cache()
+    val starts = EncodePipeline.rowIndex(chunks).collect()
+      .map(r => (r.getLong(1).toInt, r.getInt(2))).sortBy(_._1)
+    assert(starts.length > 4, s"${starts.length} chunks")
+    def first(from: Int)(p: Int => Boolean): Int = Iterator.from(from).find(p).get
+    def last(before: Int)(p: Int => Boolean): Int = Iterator.iterate(before - 1)(_ - 1).find(p).get
+    val both = (i: Int) => tokNull(i) && srcNull(i)
+    val (s1, n1) = starts(1)
+    val (s2, n2) = starts(2)
+    val (s3, n3) = starts(3)
+    // [first row, last row] pairs, each starting and ending on a NULL row
+    val nullEnded = Seq(
+      first(s1)(tokNull) -> last(s1 + n1)(srcNull), // inside one chunk
+      last(s2)(tokNull) -> first(s2)(srcNull), // across a chunk boundary
+      first(0)(both) -> last(s3 + n3)(both)) // across four chunks
+    assert(nullEnded(1)._1 < s2 && nullEnded(1)._2 >= s2)
+    nullEnded.foreach { case (from, to) =>
+      assert(from < to && (tokNull(from) || srcNull(from)) && (tokNull(to) || srcNull(to)))
+    }
+    def norm(rs: Seq[TokenRow]) =
+      rs.map(r => (r.doc_id, Option(r.tokens).map(_.toSeq), r.n_tok, Option(r.source)))
+    for ((from, to) <- nullEnded :+ (s2 -> (s2 + n2 - 1))) { // and exactly one whole chunk
+      val got = EncodePipeline.seekToRows(chunks, from, to - from + 1).collect().sortBy(_.doc_id)
+      assert(norm(got) == norm(rows.slice(from, to + 1)), s"rows [$from, $to]")
+    }
     chunks.unpersist()
   }
 
@@ -669,7 +723,7 @@ class PipelineSpec extends AnyFunSuite with TempDirs {
       .sortBy(g => g.map(i => input(i).first_doc_id).min)
     assert(groups.count(_.length > 1) == 3, groups) // the nested and tie cases
     def docs(cs: Seq[EncodedChunk]): Seq[String] =
-      cs.flatMap(c => EncodePipeline.decodeChunkRows(c, 0, c.num_rows).map(_.doc_id)).sorted
+      EncodePipeline.decodeDF(cs.toDS(), Seq("doc_id")).as[String].collect().toSeq.sorted
     def payload(c: EncodedChunk): Seq[Byte] =
       (c.tokens_bin ++ c.lens_bin ++ c.docid_bin ++ c.source_bin ++ c.tokens_bloom).toSeq
     def check(name: String, out: org.apache.spark.sql.DataFrame,

@@ -280,6 +280,72 @@ class SnapshotSpec extends AnyFunSuite with TempDirs {
       .map(r => (r.doc_id, r.source)).collect().sorted.toSeq == want)
   }
 
+  test("an append never adopts a crashed compaction's or upsert's staged files") {
+    import spark.implicits._
+    val dir = freshDir("staged")
+    val rows = TokenTableGen.generate(spark, 900, 4).cache()
+    val base = rows.filter(r => math.floorMod(r.doc_id.hashCode, 3) != 0)
+    val more = rows.filter(r => math.floorMod(r.doc_id.hashCode, 3) == 0)
+    writeSlice(dir, base)
+    val v1 = SnapshotLog.commit(spark, dir, "append")
+    // what a compactTable and an upsert that died between their write and
+    // their commit leave on disk: a re-encoded copy of the table, and new
+    // versions of some rows whose delete was never committed
+    EncodePipeline.encode(base, 1, tokensPerChunk = 4096)
+      .write.parquet(f"$dir/chunks/compact-v$v1%05d")
+    EncodePipeline.encode(base.limit(50).map(r => r.copy(source = "LOST")), 1, tokensPerChunk = 4096)
+      .write.parquet(f"$dir/chunks/u-v$v1%05d")
+    writeSlice(dir, more)
+    val v2 = SnapshotLog.commit(spark, dir, "append")
+    def pairs(v: Int) =
+      SnapshotLog.readRows(spark, dir, Some(v)).map(r => (r.doc_id, r.source)).collect().sorted.toSeq
+    val want = rows.map(r => (r.doc_id, r.source)).collect().sorted.toSeq
+    assert(pairs(v2) == want)
+    // files an upsert and a compaction DID commit from their staging dirs
+    // stay in the snapshots appended after them
+    val upd = more.limit(40).map(r => r.copy(source = "UPD")).collect()
+    val v3 = SnapshotLog.upsert(spark, dir, spark.createDataset(upd), numParts = 2,
+      tokensPerChunk = 4096)
+    val v4 = SnapshotLog.commit(spark, dir, "append")
+    val updated = upd.map(_.doc_id).toSet
+    val wantUpd = want.map { case (d, s) => (d, if (updated(d)) "UPD" else s) }
+    assert(pairs(v4) == wantUpd)
+    assert(SnapshotLog.snapshot(spark, dir, v4).files.exists(_.startsWith(f"chunks/u-v$v2%05d/")))
+    val v5 = SnapshotLog.compactTable(spark, dir, tokensPerChunk = 4096)
+    val v6 = SnapshotLog.commit(spark, dir, "append")
+    assert(SnapshotLog.snapshot(spark, dir, v6).files ==
+      SnapshotLog.snapshot(spark, dir, v5).files)
+    assert(pairs(v6) == wantUpd && v3 == v2 + 1)
+  }
+
+  test("upsert deletes exactly the doc_ids it wrote, even when its input plan is nondeterministic") {
+    import spark.implicits._
+    val dir = freshDir("ups-nondet")
+    val base = TokenTableGen.generate(spark, 400, 4).cache()
+    writeSlice(dir, base)
+    val v1 = SnapshotLog.commit(spark, dir, "append")
+    // a different random subset on every evaluation (Spark's rand() fixes
+    // its seed when the plan is built, so it would repeat its choice)
+    val incoming = base
+      .filter(_ => java.util.concurrent.ThreadLocalRandom.current().nextBoolean())
+      .map(r => r.copy(source = "UPD"))
+    val v2 = SnapshotLog.upsert(spark, dir, incoming, numParts = 2, tokensPerChunk = 4096)
+    val snap = SnapshotLog.snapshot(spark, dir, v2)
+    val written = snap.files.filterNot(SnapshotLog.snapshot(spark, dir, v1).files.toSet)
+    val writtenIds = EncodePipeline.decodeDF(
+        spark.read.parquet(written.map(f => s"$dir/$f"): _*).as[EncodedChunk], Seq("doc_id"))
+      .as[String].collect().sorted.toSeq
+    val newDeletes = snap.deletes.zip(snap.deleteSeqs).collect { case (f, s) if s == v2 => f }
+    val deleted = spark.read.parquet(newDeletes.map(f => s"$dir/$f"): _*)
+      .as[String].collect().sorted.toSeq
+    assert(writtenIds.nonEmpty && writtenIds.size < 400)
+    assert(deleted == writtenIds)
+    val upd = writtenIds.toSet
+    assert(SnapshotLog.readRows(spark, dir, Some(v2)).map(r => (r.doc_id, r.source))
+      .collect().sorted.toSeq ==
+      base.map(r => (r.doc_id, if (upd(r.doc_id)) "UPD" else r.source)).collect().sorted.toSeq)
+  }
+
   test("incremental read returns exactly the appended slice") {
     import spark.implicits._
     val dir = freshDir("incr")
