@@ -7,7 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{And, InSet}
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.functions._
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -483,7 +483,7 @@ object EncodePipeline {
 
   /** A per-call value as a plan parameter (see [[graft.functions.QueryParam]]):
     * lookups that differ only in it reuse one compiled class. */
-  private def param(value: Any, t: DataType): Column =
+  private[spark] def param(value: Any, t: DataType): Column =
     ColumnBridge.column(graft.functions.QueryParam(value, t))
 
   /** chunk_id → the in-chunk row range [from, to) of every chunk of a row
@@ -745,14 +745,17 @@ object EncodePipeline {
     * re-sorting, merge.go:177-273).
     *
     * Grouping is an interval sweep over chunk [first,last] doc_id
-    * intervals, written as two Spark window expressions over one row per
-    * chunk (see [[compactRuns]]): transitively-overlapping chunks form a
-    * group, and a group boundary falls wherever an interval starts past
-    * the running max of every preceding interval's end. Group ids are
-    * consecutive ordinals in doc_id order, so the compacted table's
-    * partition ranges are disjoint and globally ordered. Singleton groups
-    * pass through byte-identical; multi-chunk groups decode + merge +
-    * re-encode.
+    * intervals, one pass over one row per chunk ([[CompactionSweep]]):
+    * transitively-overlapping chunks form a group, and a group boundary
+    * falls wherever an interval starts past the running max of every
+    * preceding interval's end. Singleton groups pass through
+    * byte-identical; multi-chunk groups decode + merge + re-encode. A
+    * group larger than one sub-part (about its tokens / the shuffle
+    * partition count, in whole `tokensPerChunk`s) is cut at chunk starts
+    * into sub-parts that re-encode in parallel. Part ids are consecutive
+    * ordinals in doc_id order (a group's sub-parts take consecutive ids),
+    * so the compacted table's partition ranges are disjoint and globally
+    * ordered.
     *
     * `dropDuplicates = true` drops rows sharing a doc_id while merging
     * overlapping groups, keeping one row per doc_id (the reference's
@@ -782,10 +785,11 @@ object EncodePipeline {
     * (they form singleton overlap groups). This variant coarsens
     * consecutive sweep groups into ≈`tokensPerChunk`-token bins by token
     * waterline — `bin = floor(tokens-before-group / target)`, the
-    * tokens before a group being a window sum over every earlier
-    * group's chunks (the same mass-balancing idea as the encode
-    * exchange) — then re-encodes only multi-chunk bins; a chunk alone in
-    * its bin (already well-sized) still passes through byte-identical.
+    * tokens before a group being the sweep's running sum over every
+    * earlier group's chunks (the same mass-balancing idea as the encode
+    * exchange) — then re-encodes only multi-chunk bins, never cut into
+    * sub-parts; a chunk alone in its bin (already well-sized) still
+    * passes through byte-identical.
     * Output bins stay disjoint, globally ordered doc_id intervals (bins
     * are unions of CONSECUTIVE disjoint groups). The reference has no
     * counterpart — its MergeRowGroups (merge.go:20-72) always rewrites
@@ -799,127 +803,102 @@ object EncodePipeline {
 
   /** Core of [[compactSorted]] over one chunk frame: the chunk columns plus
     * a `run` id (chunk_ids are only unique within one encode run, so
-    * (run, chunk_id) is the global key). The grouping reads a projection
-    * of it, which column pruning keeps metadata-only. `deletes`,
-    * when present, is a (doc_id, del_seq) DataFrame of equality deletes
-    * (Iceberg v2 style), SEQUENCE-SCOPED: a delete applies only to runs
-    * whose `runAdded` version is strictly below its del_seq, so an
-    * upsert's own rows survive the delete committed alongside them
-    * (absent runs default to 0 = oldest = every delete applies — the
-    * safe direction). Chunks whose key interval may contain an
-    * applicable deleted id are forced through the decode path even when
-    * they overlap nothing (a pass-through byte copy could smuggle
-    * deleted rows through), and decoded rows anti-join the applicable
-    * delete set. Both delete passes broadcast the delete table — at a
-    * 10^9-id delete set, flip the range check to a shuffle range-join;
-    * the sweep itself is unchanged.
+    * (run, chunk_id) is the global key). `deletes`, when present, is a
+    * (doc_id, del_seq) DataFrame of equality deletes (Iceberg v2 style),
+    * SEQUENCE-SCOPED: a delete applies only to runs whose `runAdded`
+    * version is strictly below its del_seq, so an upsert's own rows
+    * survive the delete committed alongside them (absent runs default to
+    * 0 = oldest = every delete applies — the safe direction). Chunks whose
+    * key interval may contain an applicable deleted id are forced through
+    * the decode path even when they overlap nothing (a pass-through byte
+    * copy could smuggle deleted rows through), and decoded rows that an
+    * applicable delete names are dropped.
     *
-    * Scale: the sweep windows have no partition key, so Spark sorts the
-    * one-row-per-chunk metadata in a single task (with spill) on an
-    * executor; the driver holds one number, the group count. A 100-TB
-    * table has ~10^7 chunks, about 1 GB of metadata rows for that
-    * task. */
+    * The plan is one [[CompactionSweep]] pass over a projection of the
+    * chunks that column pruning keeps metadata-only, sorted into one task;
+    * the deletes reach it as one broadcast of sorted id arrays, collected
+    * in one job. Its summary gives the driver the count of re-encoded
+    * parts and the sub-part cut keys; rows reach their part by the cut
+    * keys as the encode exchange routes by its bounds (`PartIdForBounds`).
+    *
+    * Scale: the sweep sorts the one-row-per-chunk metadata in a single
+    * task (with spill) on an executor and holds one overlap group's chunk
+    * keys; the driver holds the cut keys (a few per task) and, for the
+    * broadcast join of the plan to the chunks, one small row per chunk. A
+    * 100-TB table has ~10^7 chunks, about 1 GB of metadata rows for that
+    * task. At a 10^9-id delete set, the id arrays outgrow a broadcast;
+    * route chunks and rows to delete ranges by a shuffle instead. */
   private[graft] def compactRuns(spark: SparkSession, chunks: DataFrame, outDir: String,
                                  tokensPerChunk: Int,
                                  dropDuplicates: Boolean,
                                  deletes: Option[DataFrame],
                                  runAdded: Map[Int, Int] = Map.empty,
                                  packTokens: Option[Long] = None): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.storage.StorageLevel
     import org.apache.spark.unsafe.types.UTF8String
-    // The sweep, in Spark's UTF8-binary string order: a chunk opens a new
-    // group when it starts past the reach, the largest last_doc_id of
-    // EVERY chunk before it (a wide chunk may cover several later ones,
-    // so the previous row's end is not enough).
-    val meta = chunks.select("run", "chunk_id", "first_doc_id", "last_doc_id", "num_tokens")
-    val byStart = Window.orderBy("first_doc_id", "run", "chunk_id")
-    val swept = meta
-      .withColumn("reach",
-        max("last_doc_id").over(byStart.rowsBetween(Window.unboundedPreceding, -1)))
-      .withColumn("sweep", (sum((col("reach").isNull || col("first_doc_id") > col("reach"))
-        .cast("int")).over(byStart.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        - 1).cast("int"))
-    // Optional bin packing (compactBinPack): coarsen consecutive groups
-    // into ≈target-token bins. Groups are disjoint ordered intervals, so
-    // `bin = tokens-before-group div target` combines only CONSECUTIVE
-    // groups and preserves the disjoint-interval invariant.
-    val grouped = packTokens match {
-      case None => swept.withColumn("grp", col("sweep"))
-      case Some(target) =>
-        require(target > 0, s"packTokens must be positive: $target")
-        swept
-          .withColumn("tokens_before", coalesce(sum("num_tokens").over(
-            Window.orderBy("sweep").rangeBetween(Window.unboundedPreceding, -1)), lit(0L)))
-          .withColumn("grp", expr(s"cast(tokens_before div $target as int)"))
-    }
-    val counted = grouped.withColumn("gsz", count(lit(1)).over(Window.partitionBy("grp")))
-    // "dirty" chunks — interval MAY hold a deleted doc_id — cannot pass
-    // through byte-identical even as singletons; a broadcast range probe
-    // against the delete ids marks them for the decode path
-    // run → added-version as a codegen'd map literal (absent run = 0,
-    // i.e. "oldest": every delete applies — the safe direction)
-    val addedExpr =
-      if (runAdded.isEmpty) lit(0)
-      else coalesce(element_at(typedLit(runAdded), col("run")), lit(0))
-    val delIds = deletes.map(del =>
-      del.select(col(del.columns.head).as("__del_id"), col("del_seq").as("__del_seq")))
-    val sized = delIds.fold(counted.withColumn("dirty", lit(false))) { ids =>
-      val dirty = meta.withColumn("__added", addedExpr)
-        .join(broadcast(ids),
-          col("__del_id") >= col("first_doc_id") &&
-            col("__del_id") <= col("last_doc_id") &&
-            col("__del_seq") > col("__added"))
-        .select("run", "chunk_id").distinct()
-        .withColumn("dirty", lit(true))
-      counted.join(dirty, Seq("run", "chunk_id"), "left")
-        .withColumn("dirty", coalesce(col("dirty"), lit(false)))
-    }
-      .select("run", "chunk_id", "sweep", "grp", "gsz", "dirty")
-      // one row per chunk; both write branches read it, so the sweep,
-      // group-size and dirty-chunk plans run once (payloads are not
-      // cached: that would hold the whole table)
-      .cache()
-    val numGroups = sized.agg(coalesce(max("sweep") + 1, lit(0))).as[Int].head()
-    val joined = chunks.join(sized, Seq("run", "chunk_id"))
+    packTokens.foreach(t => require(t > 0, s"packTokens must be positive: $t"))
+    val sc = spark.sparkContext
+    val parallelism = spark.sessionState.conf.numShufflePartitions
+    val dels = sc.broadcast(CompactionDeletes.collect(deletes))
+    val sweep = new CompactionSweep(packTokens, tokensPerChunk, parallelism, runAdded, dels)
+    // the sweep reads the metadata in Spark's UTF8-binary string order
+    val plan = chunks.select("run", "chunk_id", "first_doc_id", "last_doc_id", "num_tokens")
+      .repartition(1).sortWithinPartitions("first_doc_id", "run", "chunk_id")
+      .queryExecution.toRdd.mapPartitions(sweep.plan)
+      // the summary action and the write's join both read it
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val (reencodedParts, cuts) = plan.filter(_.getInt(0) < 0)
+      .map(r => (r.getLong(1), r.getArray(4).toArray[UTF8String](StringType)))
+      .collect().headOption.getOrElse((0L, Array.empty[UTF8String])) // no chunks
+    val cutsBc = sc.broadcast(cuts)
+    // a chunk's or row's part: its group (or bin) plus the cuts before its key
+    def partOf(key: String): Column = col("grp") + ColumnBridge.column(
+      graft.functions.PartIdForBounds(UnresolvedAttribute(key), cutsBc))
+    val planned = ColumnBridge.internalCreateDataFrame(spark,
+      plan.filter(_.getInt(0) >= 0), CompactionSweep.Schema).drop("cuts")
+    val joined = chunks.join(broadcast(planned), Seq("run", "chunk_id"))
 
-    // clean singleton groups: payload bytes untouched; only the keys move
+    // clean singleton parts: payload bytes untouched; only the keys move
     val rekeyed = Map(
-      "part_id" -> col("grp"),
-      "chunk_id" -> shiftleft(col("grp").cast("long"), 32)
+      "part_id" -> col("part_id"),
+      "chunk_id" -> shiftleft(col("part_id").cast("long"), 32)
         .bitwiseOR(col("chunk_id").bitwiseAND(0xFFFFFFFFL)))
-    val pass = joined
-      .where(col("gsz") === 1L && !col("dirty"))
+    val pass = joined.where(!col("reencode"))
+      .withColumn("part_id", partOf("first_doc_id"))
       .select(ChunkSchema.fields.toIndexedSeq.map(f =>
         declared(rekeyed.getOrElse(f.name, col(f.name)), f).as(f.name)): _*)
-    // overlapping or dirty groups: decode, drop applicable deleted rows,
-    // co-partition by group, merge-sort, re-encode
-    val decoded = GraftPlans.chunkRows(joined.where(col("gsz") > 1L || col("dirty")),
+    // overlapping or dirty parts: decode, route to (sub-)parts,
+    // merge-sort, drop applicable deleted rows, re-encode
+    val decoded = GraftPlans.chunkRows(joined.where(col("reencode")),
       TokenLayout.TokenCols.map(TokenLayout.attrFor), TokenLayout, carry = Seq("grp", "run"))
-    val surviving = delIds.fold(decoded)(ids =>
-      decoded.join(broadcast(ids),
-        col("doc_id") === col("__del_id") && col("__del_seq") > addedExpr, "left_anti"))
-      .select(col("doc_id"), col("tokens"), col("n_tok"), col("source"), col("grp").as("part_id"))
-    // group ids are dense (0..numGroups-1; bins are fewer), so routing by
-    // id spreads them round-robin and no task is left empty while there
-    // are groups for it
-    val rows = surviving
-      .repartitionById(math.max(1, math.min(
-        spark.sessionState.conf.numShufflePartitions, numGroups)), col("part_id"))
+    // part ids of the re-encoded parts are spread (routing takes them
+    // modulo the task count), so no task is left empty while there are
+    // parts for it
+    val rows = decoded
+      .select(col("doc_id"), col("tokens"), col("n_tok"), col("source"),
+        partOf("doc_id").as("part_id"), col("run"))
+      .repartitionById(math.max(1, math.min(parallelism.toLong, reencodedParts).toInt),
+        col("part_id"))
       .sortWithinPartitions("part_id", "doc_id")
-    // after the per-partition sort duplicates are adjacent (groups are
-    // disjoint doc_id intervals, so equal doc_ids share a group and a
+    // after the per-partition sort duplicates are adjacent (parts are
+    // disjoint doc_id intervals, so equal doc_ids share a part and a
     // partition): a streaming skip-equal pass, no extra shuffle
-    val rowRdd = rows.queryExecution.toRdd
-    val mergedRdd =
-      if (!dropDuplicates) rowRdd
-      else rowRdd.mapPartitions { it =>
+    val mergedRdd = rows.queryExecution.toRdd.mapPartitions { it =>
+      val deleted = dels.value
+      val live =
+        if (deleted.isEmpty) it
+        else it.filter { r =>
+          val id = r.getUTF8String(0)
+          !deleted.any(runAdded.getOrElse(r.getInt(5), 0), id, id)
+        }
+      if (!dropDuplicates) live
+      else {
         // UTF8String comparison straight off the row buffer — no String
         // per row in the merge hot loop; only a RETAINED key is cloned
         // (the unsafe row backing `d` is reused by the iterator)
         var prevPart = Int.MinValue
         var prevDoc: UTF8String = null
-        it.filter { r =>
+        live.filter { r =>
           val p = r.getInt(4)
           val d = r.getUTF8String(0)
           val keep = p != prevPart || prevDoc == null || !d.equals(prevDoc)
@@ -927,13 +906,14 @@ object EncodePipeline {
           keep
         }
       }
+    }
     val reencoded = spark.createDataset(
-      mergedRdd.mapPartitions(encodePartition(_, tokensPerChunk)))
+      mergedRdd.mapPartitions(encodePartition(_, tokensPerChunk)))(Encoders.product[EncodedChunk])
     pass.unionByName(reencoded.toDF())
       .write.mode("overwrite")
       .option("compression", ChunkTableCompression)
       .parquet(outDir)
-    sized.unpersist()
+    plan.unpersist()
     dropEmptyParquet(spark, outDir)
     spark.read.schema(ChunkSchema).parquet(outDir)
   }

@@ -2,9 +2,11 @@ package graft.spark
 
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.{FileSystem, Path}
+import graft.functions.PartIdForBounds
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 /** Iceberg-style snapshot log over a chunk-table checkpoint directory.
   *
@@ -332,13 +334,16 @@ object SnapshotLog {
 
   /** The equality-delete set in effect at a snapshot, if any, as
     * (doc_id, del_seq) — del_seq is each delete's effect version, which
-    * scopes it to data files STRICTLY older than itself. */
+    * scopes it to data files STRICTLY older than itself. The version is a
+    * query parameter, so snapshots that differ only in their delete
+    * versions share compiled code. */
   private def deletesOf(spark: SparkSession, dir: String,
                         snap: Snapshot): Option[DataFrame] =
     if (snap.deletes.isEmpty) None
     else Some(snap.deletes.zip(snap.deleteSeqs).groupBy(_._2).toSeq.sortBy(_._1)
       .map { case (s, fs) =>
-        deleteFiles(spark, dir, fs.map(_._1)).select(col("doc_id"), lit(s).as("del_seq"))
+        deleteFiles(spark, dir, fs.map(_._1))
+          .select(col("doc_id"), EncodePipeline.param(s, IntegerType).as("del_seq"))
       }.reduce(_ unionAll _))
 
   /** Decoded token rows of `files` (each paired with its added-version)
@@ -492,28 +497,29 @@ object SnapshotLog {
     * snapshots until [[expireSnapshots]], and the delete files are
     * dropped (their effect is now in the data). Chunk_ids are only
     * unique within one encode run, so each manifest FILE becomes one
-    * run, keyed by a broadcast basename→run join on input_file_name —
-    * one scan regardless of file count. */
+    * run: the rank of its qualified path (what input_file_name gives)
+    * among the snapshot's, found per chunk row by a binary search over
+    * the broadcast sorted paths — one scan regardless of file count, and
+    * files in different directories under `chunks/` may share a name. */
   def compactTable(spark: SparkSession, dir: String,
                    tokensPerChunk: Int = EncodePipeline.DefaultTokensPerChunk,
                    dropDuplicates: Boolean = false): Int = {
-    import spark.implicits._
+    import org.apache.spark.unsafe.types.UTF8String
     val cur = currentVersion(spark, dir).getOrElse(
       sys.error(s"no snapshots committed at $dir"))
     val snap = snapshot(spark, dir, cur)
     val sub = f"chunks/compact-v$cur%05d"
     val (hfs, root) = fs(spark, dir)
     hfs.delete(new Path(root, sub), true) // crashed attempt: re-stage
-    val runs = broadcast(
-      snap.files.zipWithIndex
-        .map { case (f, i) => (f.split('/').last, i) }
-        .toDF("__fname", "run"))
-    val chunks = chunkFiles(spark, dir, snap.files)
-      .withColumn("__fname", regexp_extract(input_file_name(), "[^/]+$", 0))
-      .join(runs, "__fname")
-      .drop("__fname")
-    val runAdded = snap.fileAdded.zipWithIndex
-      .map { case (a, i) => i -> a }.toMap
+    val paths = snap.files.zip(snap.fileAdded)
+      .map { case (f, a) =>
+        (UTF8String.fromString(hfs.makeQualified(new Path(root, f)).toUri.toString), a)
+      }
+      .sortBy(_._1)(Ordering.comparatorToOrdering(java.util.Comparator.naturalOrder[UTF8String]()))
+    val sorted = spark.sparkContext.broadcast(paths.map(_._1).toArray)
+    val chunks = chunkFiles(spark, dir, snap.files).withColumn("run", ColumnBridge.column(
+      PartIdForBounds(ColumnBridge.expr(input_file_name()), sorted)))
+    val runAdded = paths.map(_._2).zipWithIndex.map { case (a, i) => i -> a }.toMap
     EncodePipeline.compactRuns(spark, chunks, s"$dir/$sub",
       tokensPerChunk, dropDuplicates, deletesOf(spark, dir, snap),
       runAdded)

@@ -280,6 +280,32 @@ class SnapshotSpec extends AnyFunSuite with TempDirs {
       .map(r => (r.doc_id, r.source)).collect().sorted.toSeq == want)
   }
 
+  test("compaction keeps apart two data files that share a name in different directories") {
+    import spark.implicits._
+    val dir = freshDir("same-name")
+    val rows = TokenTableGen.generate(spark, 600, 5).collect().sortBy(_.doc_id)
+    val (a, b) = rows.partition(_.doc_id.hashCode % 2 == 0)
+    def encodeTo(path: String, rs: Seq[TokenRow]): java.io.File = {
+      EncodePipeline.encode(rs.toDS(), numParts = 1, tokensPerChunk = 4096)
+        .coalesce(1).write.option("compression", EncodePipeline.ChunkTableCompression)
+        .parquet(path)
+      new java.io.File(path).listFiles().filter(_.getName.endsWith(".parquet")).head
+    }
+    val first = encodeTo(s"$dir/chunks", a.toSeq)
+    // the other rows under chunks/extra/, in a file of the same name
+    val other = encodeTo(s"${tmpDir("same-name-src")}/b", b.toSeq)
+    new java.io.File(s"$dir/chunks/extra").mkdirs()
+    java.nio.file.Files.copy(other.toPath, new java.io.File(s"$dir/chunks/extra/${first.getName}").toPath)
+    val v1 = SnapshotLog.commit(spark, dir, "append")
+    assert(SnapshotLog.snapshot(spark, dir, v1).files.map(_.split('/').last).distinct.length == 1)
+    val want = rows.map(r => (r.doc_id, r.source)).toSeq
+    def got(v: Int) =
+      SnapshotLog.readRows(spark, dir, Some(v)).map(r => (r.doc_id, r.source)).collect().sorted.toSeq
+    assert(got(v1) == want)
+    val v2 = SnapshotLog.compactTable(spark, dir, tokensPerChunk = 4096)
+    assert(got(v2) == want)
+  }
+
   test("an append never adopts a crashed compaction's or upsert's staged files") {
     import spark.implicits._
     val dir = freshDir("staged")
