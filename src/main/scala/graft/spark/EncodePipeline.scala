@@ -4,12 +4,14 @@ import graft.codec._
 import graft.plans.{GraftPlans, TokenLayout}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{And, InSet}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.functions._
 import java.nio.charset.StandardCharsets.UTF_8
+import scala.collection.mutable.ArrayBuffer
 
 /** One encoded column chunk — the analog of a reference row group's worth
   * of pages (reference: row_group.go:16-53, page.go:22-85). All four
@@ -73,8 +75,10 @@ final case class PartitionMetrics(
   *    requirement — mass-balancing subsumes per-key salting because
   *    doc_id is unique per row);
   *  - each partition encodes independently inside one mapPartitions stage
-  *    (no shuffle after the single range exchange); chunks are cut at a
-  *    fixed token budget so memory is bounded regardless of row skew;
+  *    (no shuffle after the single range exchange); a task hands each
+  *    chunk on as it fills ([[TokenChunkIterator]]), so it holds one
+  *    chunk's rows at a time however large its partition (the sort before
+  *    it spills; the parquet writer after it buffers one row group);
   *  - per-partition metrics rows make the job resumable: completed
   *    part_ids are skipped on restart (idempotent because the partition
   *    assignment is persisted with the checkpoint).
@@ -193,72 +197,67 @@ object EncodePipeline {
 
   // ----------------------------------------------------------------- encode
 
-  /** Encode one partition's rows into chunks. Reuses growable scratch
-    * across rows (reference keeps zero-alloc hot loops,
-    * encoding_test.go:852-856; we amortize instead). */
-  private final class PartitionEncoder(partId: Int, tokensPerChunk: Int, blockCodec: Int) {
-    private var tokenBuf = new Array[Int](math.min(tokensPerChunk + 8192, 1 << 22))
-    private var nTokens = 0
-    private val lens = new scala.collection.mutable.ArrayBuffer[Int](4096) // non-null rows only
-    private val tokNull = new scala.collection.mutable.ArrayBuffer[Boolean](4096) // per row
-    private val docIds = new scala.collection.mutable.ArrayBuffer[Array[Byte]](4096)
-    private val sources = new scala.collection.mutable.ArrayBuffer[Array[Byte]](4096) // null entries allowed
+  /** Cuts one task's rows into chunks, one chunk per `next`: it pulls rows
+    * until the chunk holds `tokensPerChunk` tokens, the part_id (read by
+    * `partId`) changes or the input ends. A task can hold several parts
+    * (more bounds than tasks, or compaction sub-parts), sorted together;
+    * each part's chunk ids start at 0. InternalRows are reused by the scan,
+    * so a taken row's bytes are copied out (getBytes / toIntArray); the
+    * row that ends a part is only peeked at, and stays valid unconsumed
+    * to open the next chunk. Scratch is reused across chunks (reference
+    * keeps zero-alloc hot loops, encoding_test.go:852-856). */
+  private[graft] final class TokenChunkIterator(
+      rows: Iterator[InternalRow], tokensPerChunk: Int, blockCodec: Int,
+      partId: InternalRow => Int) extends ChunkCutter[EncodedChunk] {
+    private val in = rows.buffered
+    private val tokens = new IntBuf(math.min(tokensPerChunk + 8192, 1 << 22))
+    private val lens = new IntBuf(4096) // non-null rows only
+    private val tokNull = new ArrayBuffer[Boolean](4096) // per row
+    private val docIds = new ArrayBuffer[Array[Byte]](4096)
+    private val sources = new ArrayBuffer[Array[Byte]](4096) // null entries allowed
+    private var part = Int.MinValue // part_id of the chunk being cut
     private var chunkSeq = 0L
 
-    /** `tokens` and `source` may be null (nullable columns; stored via a
-      * per-chunk null bitmap). `docId` is the partition/sort key and must
-      * be non-null. */
-    def add(docId: Array[Byte], tokens: Array[Int], source: Array[Byte],
-            flushTo: EncodedChunk => Unit): Unit = {
-      require(docId != null, "doc_id is the partition key and must be non-null")
-      if (tokens == null) tokNull += true
-      else {
-        if (nTokens + tokens.length > tokenBuf.length)
-          tokenBuf = java.util.Arrays.copyOf(tokenBuf,
-            math.max(tokenBuf.length * 2, nTokens + tokens.length))
-        System.arraycopy(tokens, 0, tokenBuf, nTokens, tokens.length)
-        nTokens += tokens.length
-        lens += tokens.length
-        tokNull += false
-      }
-      docIds += docId
-      sources += source
-      if (nTokens >= tokensPerChunk) flushTo(flush())
+    override protected def cut(): EncodedChunk = {
+      if (!in.hasNext) return null
+      val p = partId(in.head)
+      if (p != part) { part = p; chunkSeq = 0 }
+      do add(in.next())
+      while (tokens.n < tokensPerChunk && in.hasNext && partId(in.head) == part)
+      encodeChunk()
     }
 
-    def nonEmpty: Boolean = docIds.nonEmpty
+    /** `tokens` and `source` may be null (nullable columns, stored via a
+      * per-chunk null bitmap). */
+    private def add(row: InternalRow): Unit = {
+      if (row.isNullAt(1)) tokNull += true
+      else {
+        val toks = row.getArray(1).toIntArray()
+        tokens ++= toks
+        lens += toks.length
+        tokNull += false
+      }
+      docIds += row.getUTF8String(0).getBytes
+      sources += (if (row.isNullAt(3)) null else row.getUTF8String(3).getBytes)
+    }
 
-    def flush(): EncodedChunk = {
+    private def encodeChunk(): EncodedChunk = {
       val tFlush0 = System.nanoTime()
       val nRows = docIds.length
-      val lensArr = lens.toArray
-      val tokNullArr = tokNull.toArray
+      val nTokens = tokens.n
       val docArr = docIds.toArray
       val srcArr = sources.toArray
-      val tokensNulls = nRows - lensArr.length
-      val srcNulls = {
-        var c = 0; var i = 0
-        while (i < nRows) { if (srcArr(i) == null) c += 1; i += 1 }
-        c
-      }
-      var (tokensBin0, tokensCodec) = StreamedTokens.encode(tokenBuf, lensArr, lensArr.length, nTokens)
+      val tokensNulls = nRows - lens.n
+      val srcNulls = srcArr.count(_ == null)
+      var (tokensBin0, tokensCodec) = StreamedTokens.encode(tokens.a, lens.a, lens.n, nTokens)
       if (tokensNulls > 0)
-        tokensBin0 = Chunks.wrapNullable(tokNullArr, nRows, tokensNulls, tokensBin0)
-      val lensBin0 = Chunks.encodeInts(lensArr, 0, lensArr.length)
+        tokensBin0 = Chunks.wrapNullable(tokNull.toArray, nRows, tokensNulls, tokensBin0)
+      val lensBin0 = Chunks.encodeInts(lens.a, 0, lens.n)
       val docBin0 = Chunks.encodeStrings(docArr, 0, nRows)
       val srcBin0 =
         if (srcNulls == 0) Chunks.encodeStrings(srcArr, 0, nRows)
-        else {
-          val flags = new Array[Boolean](nRows)
-          val dense = new Array[Array[Byte]](nRows - srcNulls)
-          var d = 0; var i = 0
-          while (i < nRows) {
-            if (srcArr(i) == null) flags(i) = true
-            else { dense(d) = srcArr(i); d += 1 }
-            i += 1
-          }
-          Chunks.wrapNullable(flags, nRows, srcNulls, Chunks.encodeStrings(dense, 0, d))
-        }
+        else Chunks.wrapNullable(srcArr.map(_ == null), nRows, srcNulls,
+          Chunks.encodeStrings(srcArr.filter(_ != null), 0, nRows - srcNulls))
       val lensCodec = Chunks.codecName(lensBin0)
       val docCodec = Chunks.codecName(docBin0)
       val srcCodec = Chunks.codecName(srcBin0)
@@ -273,7 +272,7 @@ object EncodePipeline {
       val bloomWords = new Array[Int](Bloom.sizeBytes(nTokens) / 4)
       var i = 0
       while (i < nTokens) {
-        val v = tokenBuf(i)
+        val v = tokens.a(i)
         if (v < mn) mn = v
         if (v > mx) mx = v
         Bloom.insert(bloomWords, v)
@@ -303,12 +302,12 @@ object EncodePipeline {
         if (java.util.Arrays.compareUnsigned(d, hi) > 0) hi = d
         i += 1
       }
-      val rawBytes = 4L * nTokens + 4L * lensArr.length +
+      val rawBytes = 4L * nTokens + 4L * lens.n +
         docArr.map(_.length.toLong).sum +
         srcArr.map(s => if (s == null) 0L else s.length.toLong).sum
       val chunk = EncodedChunk(
-        part_id = partId,
-        chunk_id = (partId.toLong << 32) | chunkSeq,
+        part_id = part,
+        chunk_id = (part.toLong << 32) | chunkSeq,
         num_rows = nRows,
         num_tokens = nTokens.toLong,
         tokens_nulls = tokensNulls,
@@ -335,7 +334,7 @@ object EncodePipeline {
         docid_bin = docBin,
         source_bin = srcBin)
       chunkSeq += 1
-      nTokens = 0
+      tokens.clear()
       lens.clear()
       tokNull.clear()
       docIds.clear()
@@ -370,7 +369,7 @@ object EncodePipeline {
       .sortWithinPartitions(col("part_id"), col("doc_id"))
     // schema: doc_id(0), tokens(1), n_tok(2), source(3), part_id(4)
     spark.createDataset(laid.queryExecution.toRdd
-      .mapPartitions(encodePartition(_, tokensPerChunk, blockCodec)))
+      .mapPartitions(new TokenChunkIterator(_, tokensPerChunk, blockCodec, _.getInt(4))))
   }
 
   /** Layout-aligned encode: when the input table is ALREADY range-laid-out
@@ -381,46 +380,14 @@ object EncodePipeline {
     * remains the path for unordered input. */
   def encodeAligned(ds: Dataset[TokenRow],
                     tokensPerChunk: Int = DefaultTokensPerChunk,
-                    blockCodec: Int = BlockCompression.None,
-                    partIdOffset: Int = 0): Dataset[EncodedChunk] = {
+                    blockCodec: Int = BlockCompression.None): Dataset[EncodedChunk] = {
     val spark = ds.sparkSession
     import spark.implicits._
     val rdd = ds.toDF().queryExecution.toRdd.mapPartitions { iter =>
-      val pid = partIdOffset + TaskContext.getPartitionId()
-      encodePartition(iter, tokensPerChunk, blockCodec, _ => pid)
+      val pid = TaskContext.getPartitionId()
+      new TokenChunkIterator(iter, tokensPerChunk, blockCodec, _ => pid)
     }
     spark.createDataset(rdd)
-  }
-
-  /** A task can hold several logical partitions (more bounds than tasks,
-    * or compaction groups); the sort keeps them contiguous, so cut a new
-    * encoder whenever part_id changes. `partId` reads a row's part_id
-    * (by default the ordinal-4 column of the exchanged layout).
-    * InternalRows are reused by the scan — every retained byte is copied
-    * out (getBytes / toIntArray). */
-  private def encodePartition(iter: Iterator[org.apache.spark.sql.catalyst.InternalRow],
-                              tokensPerChunk: Int,
-                              blockCodec: Int = BlockCompression.None,
-                              partId: org.apache.spark.sql.catalyst.InternalRow => Int =
-                                _.getInt(4)): Iterator[EncodedChunk] = {
-    val out = new scala.collection.mutable.ArrayBuffer[EncodedChunk]()
-    var enc: PartitionEncoder = null
-    var curPid = Int.MinValue
-    iter.foreach { row =>
-      val p = partId(row)
-      if (p != curPid) {
-        if (enc != null && enc.nonEmpty) out += enc.flush()
-        enc = new PartitionEncoder(p, tokensPerChunk, blockCodec)
-        curPid = p
-      }
-      enc.add(
-        row.getUTF8String(0).getBytes,
-        if (row.isNullAt(1)) null else row.getArray(1).toIntArray(),
-        if (row.isNullAt(3)) null else row.getUTF8String(3).getBytes,
-        out += _)
-    }
-    if (enc != null && enc.nonEmpty) out += enc.flush()
-    out.iterator
   }
 
   // ----------------------------------------------------------------- decode
@@ -908,7 +875,8 @@ object EncodePipeline {
       }
     }
     val reencoded = spark.createDataset(
-      mergedRdd.mapPartitions(encodePartition(_, tokensPerChunk)))(Encoders.product[EncodedChunk])
+      mergedRdd.mapPartitions(new TokenChunkIterator(_, tokensPerChunk, BlockCompression.None,
+        _.getInt(4))))(Encoders.product[EncodedChunk])
     pass.unionByName(reencoded.toDF())
       .write.mode("overwrite")
       .option("compression", ChunkTableCompression)

@@ -290,39 +290,6 @@ object GenericEncode {
 
   // ------------------------------------------------------------- builders
 
-  private final class IntBuf(init: Int = 1024) {
-    var a = new Array[Int](init); var n = 0
-    def +=(v: Int): Unit = {
-      if (n == a.length) a = java.util.Arrays.copyOf(a, n * 2)
-      a(n) = v; n += 1
-    }
-    def clear(): Unit = n = 0
-  }
-  private final class LongBuf(init: Int = 1024) {
-    var a = new Array[Long](init); var n = 0
-    def +=(v: Long): Unit = {
-      if (n == a.length) a = java.util.Arrays.copyOf(a, n * 2)
-      a(n) = v; n += 1
-    }
-    def clear(): Unit = n = 0
-  }
-  private final class DoubleBuf(init: Int = 1024) {
-    var a = new Array[Double](init); var n = 0
-    def +=(v: Double): Unit = {
-      if (n == a.length) a = java.util.Arrays.copyOf(a, n * 2)
-      a(n) = v; n += 1
-    }
-    def clear(): Unit = n = 0
-  }
-  private final class FloatBuf(init: Int = 1024) {
-    var a = new Array[Float](init); var n = 0
-    def +=(v: Float): Unit = {
-      if (n == a.length) a = java.util.Arrays.copyOf(a, n * 2)
-      a(n) = v; n += 1
-    }
-    def clear(): Unit = n = 0
-  }
-
   /** (inner payload, min, max, bloom) — min/max null when untracked,
     * bloom empty when the type carries none. */
   private final case class ColResult(inner: Array[Byte], min: String, max: String,
@@ -500,7 +467,8 @@ object GenericEncode {
       var max: String = null
       var bloom = NoBloom
       if (isString && arr.nonEmpty) {
-        val ord = java.util.Arrays.compare(_: Array[Byte], _: Array[Byte])
+        // unsigned byte order, as Spark compares strings and pushdown tests bounds
+        val ord = java.util.Arrays.compareUnsigned(_: Array[Byte], _: Array[Byte])
         var mn = arr(0); var mx = arr(0)
         var i = 1
         while (i < arr.length) {
@@ -723,26 +691,13 @@ object GenericEncode {
     * across chunks), flushes every `rowsPerChunk` rows. */
   private final class GenericPartitionEncoder(
       pid: Int, schema: StructType, names: Seq[String], types: Seq[String],
-      rowsPerChunk: Int, iter: Iterator[InternalRow]) extends Iterator[GenericChunk] {
+      rowsPerChunk: Int, iter: Iterator[InternalRow]) extends ChunkCutter[GenericChunk] {
     private val fields = schema.fields
     private val builders = fields.map(builderFor)
     private var chunkSeq = 0L
-    private var done = false
-    private var pending: GenericChunk = _
 
-    override def hasNext: Boolean = {
-      if (pending == null && !done) pending = readChunk()
-      pending != null
-    }
-    override def next(): GenericChunk = {
-      if (!hasNext) throw new NoSuchElementException
-      val c = pending
-      pending = null
-      c
-    }
-
-    private def readChunk(): GenericChunk = {
-      if (!iter.hasNext) { done = true; return null }
+    override protected def cut(): GenericChunk = {
+      if (!iter.hasNext) return null
       val n = fields.length
       builders.foreach(_.clear())
       var rows = 0
@@ -752,7 +707,6 @@ object GenericEncode {
         while (c < n) { builders(c).addRow(row, c); c += 1 }
         rows += 1
       }
-      if (!iter.hasNext) done = true
       val bins = new Array[Array[Byte]](n)
       val codecs = new Array[String](n)
       val nulls = new Array[Int](n)

@@ -60,6 +60,21 @@ class GenericStatsSpec extends AnyFunSuite with TempDirs {
       .filter(col("s") === v).count() == 1)
   }
 
+  test("string stats order bytes unsigned, as Spark does: non-ASCII rows survive pushdown") {
+    import spark.implicits._
+    // "é" is C3 A9: above "b" unsigned, below "a" as signed bytes — signed
+    // stats recorded [min "é", max "a"] and `s >= "b"` pruned the chunk
+    val ch = GenericEncode.encode(Seq("a", "é").toDF("s").coalesce(1), rowsPerChunk = 1024)
+    val stats = ch.collect()
+    assert(stats.length == 1 && stats(0).col_mins == Seq("a") && stats(0).col_maxs == Seq("é"))
+    val dir = tmpDir("gunsigned")
+    GenericEncode.writeColumnarN(ch, s"$dir/t", 1)
+    assert(GenericEncode.readTable(spark, s"$dir/t").filter(col("s") >= "b")
+      .as[String].collect().toSeq == Seq("é"))
+    assert(GenericEncode.readTable(spark, s"$dir/t").filter(col("s") < "b")
+      .as[String].collect().toSeq == Seq("a"))
+  }
+
   test("pruneRange accepts natural timestamp/decimal bounds (typed, not double)") {
     import spark.implicits._
     val df = spark.range(1000).select(
