@@ -176,10 +176,6 @@ object Chunks {
     * resident. */
   final val DefaultPageValues: Int = 64 * 1024
 
-  def encodeIntsPaged(src: Array[Int], off: Int, n: Int,
-                      pageValues: Int = DefaultPageValues): Array[Byte] =
-    encodeIntsPagedWithStats(src, off, n, pageValues)._1
-
   /** Paged encode that also reports the distinct page codecs chosen (for
     * the chunk metrics row) without a decode pass.
     *
@@ -306,12 +302,8 @@ object Chunks {
     * BYTES via the offset index (the reference's SeekToRow mechanism,
     * file.go:684-709). Non-paged codecs fall back to full decode + copy.
     * Returns (values, pagesDecoded, pagesTotal) so callers (and specs)
-    * can see the skipping. */
-  def decodeIntsSlice(bytes: Array[Byte], from: Int, count: Int): (Array[Int], Int, Int) =
-    decodeIntsSliceFrom(new ByteReader(bytes), from, count)
-
-  /** Reader variant: consumes exactly one chunk from `r` (by bytes when
-    * pages are skipped). */
+    * can see the skipping. Consumes exactly one chunk from `r` (by bytes
+    * when pages are skipped). */
   def decodeIntsSliceFrom(r: ByteReader, from: Int, count: Int): (Array[Int], Int, Int) = {
     if ((r.buf(r.pos) & 0xFF) != PagedInt) {
       val all = decodeIntsFrom(r)

@@ -166,7 +166,8 @@ case object TokenLayout extends ChunkLayout {
   * chunk_id, col_crcs) plus one `bin_<i>` payload column per decoded
   * engine column, so projection saves parquet bytes as well as decode CPU
   * and CRC work. Filters become per-column min/max interval checks, an
-  * all-null-chunk check, and a split-block bloom probe for equalities
+  * all-null-chunk check, and a split-block bloom probe for equalities;
+  * `array_contains` over an int/bigint array checks its element bounds
   * (the reference's column-index + bloom search, column_index.go:259-272,
   * bloom.go:16-70). */
 final case class GenericLayout(colIndices: Seq[Int], colTypes: Seq[String])
@@ -209,6 +210,10 @@ final case class GenericLayout(colIndices: Seq[Int], colTypes: Seq[String])
     def bloom(l: Literal): Option[Expression] =
       bloomHash(tpe, l).map(h => graft.functions.BloomProbe(item("col_blooms"), Literal(h)))
     c match {
+      // array stats are ELEMENT bounds (the array builders' statMin/statMax):
+      // only element membership maps onto them
+      case HasElement(_, l) => hi(l) ++ lo(l)
+      case _ if tpe.startsWith("array<") => Nil
       case Equal(_, l) => hi(l) ++ lo(l) ++ bloom(l)
       case AtMost(_, l) => hi(l)
       case AtLeast(_, l) => lo(l)
@@ -239,9 +244,9 @@ final case class GenericLayout(colIndices: Seq[Int], colTypes: Seq[String])
     * CONSERVATIVELY by bound direction (the interval only widens). */
   private def statValue(tpe: String, lit: Literal, isLo: Boolean): Option[(Literal, DataType)] =
     tpe match {
-      case "int" | "date" =>
+      case "int" | "date" | "array<int>" =>
         Some((Literal(lit.value.asInstanceOf[Int].toLong), LongType))
-      case "bigint" | "timestamp" | "timestamp_ntz" =>
+      case "bigint" | "timestamp" | "timestamp_ntz" | "array<bigint>" =>
         Some((Literal(lit.value.asInstanceOf[Long]), LongType))
       case t if t.startsWith("decimal(") =>
         val scale = t.stripPrefix("decimal(").stripSuffix(")").split(",")(1).trim.toInt
@@ -384,9 +389,9 @@ object DecodeChunksPruning extends Rule[LogicalPlan] {
   * matching row are never fetched, CRC'd, or decoded. The original row
   * Filter stays on top for exactness; every chunk check is an
   * implication of the row predicate, so an unhandled shape simply prunes
-  * nothing. Users write `readTable(...).filter(...)` — no manual
-  * pruneRange/pruneBloom — the declarative analog of the reference's
-  * search (search.go:31-101). */
+  * nothing. Users write `readTable(...).filter(...)` — no manual prune
+  * call — the declarative analog of the reference's search
+  * (search.go:31-101). */
 object ChunkFilterPushdown extends Rule[LogicalPlan] with PredicateHelper {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case f @ Filter(cond, dc: DecodeChunks) =>
@@ -396,19 +401,22 @@ object ChunkFilterPushdown extends Rule[LogicalPlan] with PredicateHelper {
         case Project(projList, src)
             if !src.isInstanceOf[Filter] &&
               dc.layout.statCols.forall(n => src.output.exists(_.name == n)) =>
-          chunkCond(cond, dc, src)
+          chunkCond(cond, dc.output, dc.layout, n => src.output.find(_.name == n).get)
             .map(cc => f.copy(child = dc.copy(child = Project(projList, Filter(cc, src)))))
             .getOrElse(f)
         case _ => f
       }
   }
 
-  private def chunkCond(cond: Expression, dc: DecodeChunks,
-                        src: LogicalPlan): Option[Expression] = try {
-    val stat = (n: String) => src.output.find(_.name == n).get
+  /** The chunk filter implied by the row predicate `cond` over a decode
+    * into `output` through `layout`; `stat` resolves a chunk column. None
+    * when no conjunct yields a check. The rule and
+    * `GenericEncode.prune` both build their chunk filters here. */
+  def chunkCond(cond: Expression, output: Seq[Attribute], layout: ChunkLayout,
+                stat: String => Attribute): Option[Expression] = try {
     val checks = splitConjunctivePredicates(cond).flatMap(Conjunct.of).flatMap { c =>
-      val k = dc.output.indexWhere(_.exprId == c.attr.exprId)
-      if (k < 0) Nil else dc.layout.checks(c, k, dc.output(k).name, stat)
+      val k = output.indexWhere(_.exprId == c.attr.exprId)
+      if (k < 0) Nil else layout.checks(c, k, output(k).name, stat)
     }
     if (checks.isEmpty) None else Some(checks.distinct.reduce(And))
   } catch { case scala.util.control.NonFatal(_) => None }

@@ -638,25 +638,28 @@ object RoundTrips {
       .orderBy("doc_id", "n_tok", "source", "tok_sum")
   }
 
-  /** Stats-pruned scan over a GENERIC chunk table: orders is generically
-    * encoded range-sorted on o_orderkey, the per-chunk min/max bounds
-    * prune the scan to the covering chunks (GenericStatsSpec asserts the
-    * skip counts), and only 2 of 4 columns are decoded (per-column CRCs
-    * still verified). Oracle restates the range select exactly. */
+  /** Stats-pruned scan over an in-memory GENERIC chunk table: orders is
+    * generically encoded range-sorted on o_orderkey, and
+    * `GenericEncode.prune` turns the row predicate into per-chunk min/max
+    * checks that keep only the covering chunks (an uncached Dataset gets no
+    * pruning from the optimizer rule; GenericStatsSpec asserts the skip
+    * counts). Only 2 of 4 columns are decoded (per-column CRCs still
+    * verified). Oracle restates the range select exactly. */
   def genericPrune(spark: SparkSession, dir: String): DataFrame = {
     val src = table(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"), col("o_orderstatus"))
       .repartitionByRange(4, col("o_orderkey"))
       .sortWithinPartitions("o_orderkey")
     val chunks = GenericEncode.encode(src, rowsPerChunk = 2048)
-    val pruned = GenericEncode.pruneRange(chunks, "o_orderkey", Some("5000"), Some("7000"))
-    GenericEncode.decode(spark, pruned, Seq("o_orderkey", "o_totalprice"))
-      .filter(col("o_orderkey").between(5000L, 7000L))
+    val inRange = col("o_orderkey").between(5000L, 7000L)
+    GenericEncode.decode(spark, GenericEncode.prune(chunks, inRange),
+        Seq("o_orderkey", "o_totalprice"))
+      .filter(inRange)
       .orderBy("o_orderkey")
   }
 
   /** AUTOMATIC chunk pruning: a plain `.filter` over the default
-    * persisted generic table — no manual pruneRange/pruneBloom call
+    * persisted generic table — no manual `GenericEncode.prune` call
     * anywhere — must prune chunks via the ChunkFilterPushdown optimizer
     * rule (min/max interval + null-count + bloom checks grown below the
     * decode node). GenericStatsSpec proves the pruning is

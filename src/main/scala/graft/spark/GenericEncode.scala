@@ -1,7 +1,7 @@
 package graft.spark
 
 import graft.codec._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.{col => fcol, lit => flit}
 import org.apache.spark.sql.types._
@@ -417,7 +417,7 @@ object GenericEncode {
     * byte. A naive byte-truncate (rounds 2-3) could split a multibyte
     * char; the partial tail then decoded to U+FFFD (EF BF BD), which
     * sorts ABOVE real 2/3-byte lead bytes — an UNSOUND lower bound that
-    * let pruneRange skip chunks containing matching rows. */
+    * let range pruning skip chunks containing matching rows. */
   private[graft] def utf8BoundaryPrefix(b: Array[Byte], limit: Int): Array[Byte] = {
     if (b.length <= limit) return b
     var cut = limit
@@ -536,12 +536,9 @@ object GenericEncode {
       val ad = row.getArray(c)
       val n = ad.numElements()
       lens += n
-      if (!containsNull) {
-        // bulk copy; flags stay all-false
-        val a = ad.toIntArray()
-        var i = 0
-        while (i < n) { addElemVal(); flat += a(i); i += 1 }
-      } else {
+      // without null elements `finish` never reads the element flags
+      if (!containsNull) flat ++= ad.toIntArray()
+      else {
         var i = 0
         while (i < n) {
           if (ad.isNullAt(i)) addElemNull()
@@ -580,7 +577,7 @@ object GenericEncode {
       if (!containsNull) {
         val a = ad.toLongArray()
         var i = 0
-        while (i < n) { addElemVal(); flat += a(i); i += 1 }
+        while (i < n) { flat += a(i); i += 1 }
       } else {
         var i = 0
         while (i < n) {
@@ -615,7 +612,7 @@ object GenericEncode {
       if (!containsNull) {
         val a = ad.toFloatArray()
         var i = 0
-        while (i < n) { addElemVal(); flat += a(i); i += 1 }
+        while (i < n) { flat += a(i); i += 1 }
       } else {
         var i = 0
         while (i < n) {
@@ -638,7 +635,7 @@ object GenericEncode {
       if (!containsNull) {
         val a = ad.toDoubleArray()
         var i = 0
-        while (i < n) { addElemVal(); flat += a(i); i += 1 }
+        while (i < n) { flat += a(i); i += 1 }
       } else {
         var i = 0
         while (i < n) {
@@ -776,116 +773,35 @@ object GenericEncode {
     }
   }
 
-  /** Position of a (flattened) column in this chunk table's recorded
-    * schema — one metadata row, not a data read. */
-  def colIndexOf(chunks: Dataset[GenericChunk], colName: String): Int = {
-    val names = metaHead(chunks)
-      .getOrElse(sys.error("empty chunk table"))._1
-    val i = names.indexOf(colName)
-    require(i >= 0, s"no column '$colName' in $names")
-    i
-  }
-
-  /** Accepted natural bound spellings, converted to the internal stat
-    * representation driver-side (rounds 2-3 compared everything as
-    * double, so a "2026-01-01" timestamp bound or a "123.45" decimal
-    * bound silently mis-pruned, and bigints past 2^53 lost precision). */
-  private def dateDays(s: String): Long = {
-    val t = s.trim
-    if (t.matches("[+-]?\\d+")) t.toLong else java.time.LocalDate.parse(t).toEpochDay
-  }
-  private def tsMicros(s: String): Long = {
-    val t = s.trim
-    if (t.matches("[+-]?\\d+")) t.toLong
-    else {
-      val ldt =
-        if (t.contains(" ") || t.contains("T"))
-          java.time.LocalDateTime.parse(t.replace(' ', 'T'))
-        else java.time.LocalDate.parse(t).atStartOfDay()
-      val inst = ldt.toInstant(java.time.ZoneOffset.UTC)
-      inst.getEpochSecond * 1000000L + inst.getNano / 1000L
-    }
-  }
-  /** Decimal bound → unscaled long at the column's scale. Excess caller
-    * precision rounds CONSERVATIVELY (lo up, hi down): the filter
-    * interval only ever widens relative to representable values, so
-    * pruning still skips only provably disjoint chunks. */
-  private def decimalUnscaled(s: String, scale: Int, isLo: Boolean): Long =
-    new java.math.BigDecimal(s.trim)
-      .setScale(scale,
-        if (isLo) java.math.RoundingMode.CEILING else java.math.RoundingMode.FLOOR)
-      .unscaledValue().longValueExact()
-
-  /** Chunks whose [min,max] interval for `colName` may intersect
-    * [lo, hi] (inclusive, both optional). Bounds are NATURAL literals
-    * per type — int/bigint: integer; double/float: decimal number;
-    * date: ISO "2026-01-01" (or raw epoch-day integer); timestamp:
-    * ISO "2026-01-01[ T]HH:MM:SS[.ffffff]" interpreted as UTC (or raw
-    * epoch-micros integer); decimal: plain decimal number; string:
-    * compared lexicographically. Integer-backed types compare as LONGS
-    * (no 2^53 double precision loss). Chunks with untracked bounds are
-    * kept — pruning may only ever skip PROVABLY disjoint chunks
-    * (reference column_index.go:259-272 + search.go:31-101). */
-  def pruneRange(chunks: Dataset[GenericChunk], colName: String,
-                 lo: Option[String], hi: Option[String]): Dataset[GenericChunk] = {
+  /** The chunks of `chunks` that may hold a row matching `predicate`, a
+    * row filter over the decoded columns written with typed literals
+    * (`col("k").between(3000, 3300)`, `array_contains(col("toks"), 7)`).
+    * Its chunk filter is the one `plans.ChunkFilterPushdown` grows under a
+    * `.filter` over a persisted table ([[readTable]]), built by the same
+    * `ChunkFilterPushdown.chunkCond`: min/max interval, all-null and bloom
+    * checks per conjunct; a shape no check covers, or a cast on the column
+    * side that cannot be unwrapped, prunes nothing. This call is the only
+    * pruning an UNCACHED in-memory Dataset gets: `decode(spark,
+    * chunks).filter(p)` selects the decode's columns from the encode's
+    * object serializer, which column pruning narrows to exactly those, so
+    * the rule finds no stats columns to filter on (a cached copy keeps
+    * them, and gets the rule). */
+  def prune(chunks: Dataset[GenericChunk], predicate: Column): Dataset[GenericChunk] = {
+    import org.apache.spark.sql.catalyst.optimizer.{ConstantFolding, UnwrapCastInBinaryComparison}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
     val (names, types) = metaHead(chunks).getOrElse(sys.error("empty chunk table"))
-    val i = names.indexOf(colName)
-    require(i >= 0, s"no column '$colName' in $names")
-    val tpe = types(i)
-    val mn0 = fcol("col_mins").getItem(i)
-    val mx0 = fcol("col_maxs").getItem(i)
-    // (bound, isLo) → value in the stat's own representation
-    val longConv: Option[(String, Boolean) => Long] = tpe match {
-      // integer-array stats are ELEMENT bounds — integers, so they must
-      // compare numerically too (the string fallback would prune "9" vs
-      // "10" lexicographically, which is unsound)
-      case "int" | "bigint" | "array<int>" | "array<bigint>" =>
-        Some((s, _) => s.trim.toLong)
-      case "date" => Some((s, _) => dateDays(s))
-      case "timestamp" | "timestamp_ntz" => Some((s, _) => tsMicros(s))
-      case t if t.startsWith("decimal(") =>
-        val scale = t.stripPrefix("decimal(").stripSuffix(")").split(",")(1).trim.toInt
-        Some((s, isLo) => decimalUnscaled(s, scale, isLo))
-      case _ => None
-    }
-    var cond = flit(true)
-    longConv match {
-      case Some(conv) =>
-        val mn = mn0.cast("bigint")
-        val mx = mx0.cast("bigint")
-        hi.foreach(h => cond = cond && (mn.isNull || mn <= flit(conv(h, false))))
-        lo.foreach(l => cond = cond && (mx.isNull || mx >= flit(conv(l, true))))
-      case None if tpe == "double" =>
-        val mn = mn0.cast("double")
-        val mx = mx0.cast("double")
-        hi.foreach(h => cond = cond && (mn.isNull || mn <= flit(h.trim.toDouble)))
-        lo.foreach(l => cond = cond && (mx.isNull || mx >= flit(l.trim.toDouble)))
-      case None if tpe == "float" =>
-        // float space on BOTH sides (stat strings round-trip via
-        // Float.parseFloat; widening only one side to double mis-prunes
-        // bounds like 0.7 — see plans.GenericLayout)
-        val mn = mn0.cast("float")
-        val mx = mx0.cast("float")
-        hi.foreach(h => cond = cond && (mn.isNull || mn <= flit(h.trim.toFloat)))
-        lo.foreach(l => cond = cond && (mx.isNull || mx >= flit(l.trim.toFloat)))
-      case None =>
-        hi.foreach(h => cond = cond && (mn0.isNull || mn0 <= flit(h)))
-        lo.foreach(l => cond = cond && (mx0.isNull || mx0 >= flit(l)))
-    }
-    chunks.filter(cond)
-  }
-
-  /** Chunks whose bloom for `colName` may contain the value (pre-hashed:
-    * ints directly, longs via Bloom.foldLong, strings via Bloom.fnv1a of
-    * their UTF-8 bytes). Absent blooms keep the chunk. */
-  def pruneBloom(chunks: Dataset[GenericChunk], colName: String, hash: Int): Dataset[GenericChunk] = {
-    val i = colIndexOf(chunks, colName)
-    chunks.filter(org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      graft.functions.BloomProbe(
-        org.apache.spark.sql.catalyst.expressions.GetArrayItem(
-          org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute("col_blooms"),
-          org.apache.spark.sql.catalyst.expressions.Literal(i)),
-        org.apache.spark.sql.catalyst.expressions.Literal(hash))))
+    val (attrs, layout) = decodeLayout(names, types, Nil)
+    val bridge = org.apache.spark.sql.graftbridge.ColumnBridge
+    // resolve and type-coerce as a filter over the decoded rows, then, as
+    // the optimizer does before the rule runs, fold literal casts
+    // (`lit("2026-01-03").cast("timestamp")`) into Literals and unwrap a
+    // widening cast on the column side (`k >= 1800L` over an int k)
+    val rows = bridge.ofRows(chunks.sparkSession, LocalRelation(attrs))
+    val Filter(cond, _) = UnwrapCastInBinaryComparison(
+      ConstantFolding(rows.filter(predicate).queryExecution.analyzed))
+    graft.plans.ChunkFilterPushdown.chunkCond(cond, attrs, layout,
+        org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(_))
+      .fold(chunks)(cc => chunks.filter(bridge.column(cc)))
   }
 
   /** Row-offset seek over a generic chunk table (schema-generic SeekToRow,

@@ -41,6 +41,17 @@ object TokenIndex {
       .select(explode(col("tokens")).as("token"), col("chunk_id"))
       .distinct()
 
+  /** The posting lists at `indexDir` as `(token, chunk_ids)` rows; an
+    * index with no postings (every indexed token array null or empty)
+    * reads as an empty frame of that shape, so lookups and merges still
+    * resolve `token`. */
+  private def postings(spark: SparkSession, indexDir: String): DataFrame = {
+    val t = GenericEncode.readTable(spark, indexDir)
+    if (t.columns.nonEmpty) t
+    else t.select(lit(null).cast("int").as("token"),
+      lit(null).cast("array<bigint>").as("chunk_ids"))
+  }
+
   /** Build the index: one distributed pass over the chunk table, posting
     * lists written as a generic chunk table at `indexDir` sorted by
     * token — so equality lookups prune by the generic min/max stats.
@@ -80,7 +91,7 @@ object TokenIndex {
       .groupBy("token")
       .agg(sort_array(collect_list("chunk_id")).as("new_ids"))
     val empty = array().cast("array<bigint>")
-    val merged = GenericEncode.readTable(spark, indexDir)
+    val merged = postings(spark, indexDir)
       .join(newPostings, Seq("token"), "full_outer")
       .select(col("token"),
         sort_array(concat(coalesce(col("chunk_ids"), empty),
@@ -106,7 +117,7 @@ object TokenIndex {
   def lookup(spark: SparkSession, indexDir: String,
              chunks: Dataset[EncodedChunk], tokenId: Int): Dataset[String] = {
     import spark.implicits._
-    val covering = GenericEncode.readTable(spark, indexDir)
+    val covering = postings(spark, indexDir)
       .filter(col("token") === tokenId)
       .select(explode(col("chunk_ids")).as("chunk_id"))
     val pruned = chunks.toDF()
@@ -131,7 +142,7 @@ object TokenIndex {
     import spark.implicits._
     require(phrase.nonEmpty, "phrase must have at least one token")
     val k = phrase.size
-    val covering = GenericEncode.readTable(spark, indexDir)
+    val covering = postings(spark, indexDir)
       .filter(col("token").isin(phrase.distinct.map(Int.box): _*))
       .select(col("token"), explode(col("chunk_ids")).as("chunk_id"))
       .groupBy("chunk_id")

@@ -161,12 +161,12 @@ class CodecPropertySpec extends AnyFunSuite {
           case _ => r.nextInt()
         }
       }
-      val enc = Chunks.encodeIntsPaged(a, 0, n)
+      val enc = Chunks.encodeIntsPagedWithStats(a, 0, n)._1
       val full = Chunks.decodeInts(enc)
       assert(full.toSeq == a.toSeq)
       val from = r.nextInt(n)
       val count = r.nextInt(n - from + 1)
-      val (slice, decoded, total) = Chunks.decodeIntsSlice(enc, from, count)
+      val (slice, decoded, total) = Chunks.decodeIntsSliceFrom(new ByteReader(enc), from, count)
       assert(slice.toSeq == a.slice(from, from + count).toSeq)
       assert(decoded <= total)
     }

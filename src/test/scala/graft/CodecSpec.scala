@@ -277,7 +277,7 @@ class CodecSpec extends AnyFunSuite {
 
   test("paged int chunks round-trip and pick per-page codecs") {
     for ((name, v) <- intVectors) {
-      val enc = Chunks.encodeIntsPaged(v, 0, v.length, pageValues = 1024)
+      val enc = Chunks.encodeIntsPagedWithStats(v, 0, v.length, pageValues = 1024)._1
       assert(Chunks.decodeInts(enc).toSeq == v.toSeq, name)
     }
     // mixed families in one chunk → different codecs per page

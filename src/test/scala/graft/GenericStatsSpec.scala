@@ -27,34 +27,34 @@ class GenericStatsSpec extends AnyFunSuite with TempDirs {
   test("range pruning skips provably disjoint chunks, keeps all matches") {
     val total = chunks.count()
     assert(total >= 15, s"need many chunks, got $total")
-    val pruned = GenericEncode.pruneRange(chunks, "k", Some("3000"), Some("3300"))
+    val pruned = GenericEncode.prune(chunks, col("k").between(3000, 3300))
     val kept = pruned.count()
     assert(kept <= 3, s"expected <=3 covering chunks, kept $kept of $total")
     val rows = GenericEncode.decode(spark, pruned)
       .filter(col("k").between(3000, 3300)).collect()
     assert(rows.length == 301)
     // long column stats prune too (v = 7k)
-    val prunedV = GenericEncode.pruneRange(chunks, "v", Some("0"), Some("700"))
+    val prunedV = GenericEncode.prune(chunks, col("v").between(0L, 700L))
     assert(prunedV.count() <= 2)
     // string column: lexicographic bounds
-    val prunedS = GenericEncode.pruneRange(chunks, "name", Some("key-09990"), None)
+    val prunedS = GenericEncode.prune(chunks, col("name") >= "key-09990")
     assert(prunedS.count() <= 2)
     // a column with nulls everywhere in a chunk keeps min/max of non-nulls
-    val prunedNull = GenericEncode.pruneRange(chunks, "score", Some("4999.5"), None)
+    val prunedNull = GenericEncode.prune(chunks, col("score") >= 4999.5)
     assert(prunedNull.count() <= 2)
   }
 
   test("string min stats truncate on UTF-8 char boundaries (no U+FFFD inflation)") {
     // the 65-byte minimum 63*'a'+'é' used to byte-truncate mid-char and
     // render U+FFFD (EF BF BD), which sorts ABOVE the real min's C3 lead
-    // byte — pruneRange then dropped the chunk that CONTAINS the value
+    // byte — range pruning then dropped the chunk that CONTAINS the value
     val v = "a" * 63 + "é"
     val df = spark.range(100).select(
       when(col("id") === 0, lit(v)).otherwise(format_string("zz-%03d", col("id")))
         .as("s"))
       .coalesce(1)
     val ch = GenericEncode.encode(df, rowsPerChunk = 1024)
-    val kept = GenericEncode.pruneRange(ch, "s", Some(v), Some(v))
+    val kept = GenericEncode.prune(ch, col("s") >= v && col("s") <= v)
     assert(kept.count() == 1, "chunk containing the exact bound was pruned")
     assert(GenericEncode.decode(spark, kept, Seq("s"))
       .filter(col("s") === v).count() == 1)
@@ -75,7 +75,7 @@ class GenericStatsSpec extends AnyFunSuite with TempDirs {
       .as[String].collect().toSeq == Seq("a"))
   }
 
-  test("pruneRange accepts natural timestamp/decimal bounds (typed, not double)") {
+  test("prune takes timestamp/decimal literals in the stats' own units") {
     import spark.implicits._
     val df = spark.range(1000).select(
       (lit("2026-01-01 00:00:00").cast("timestamp")
@@ -85,17 +85,17 @@ class GenericStatsSpec extends AnyFunSuite with TempDirs {
       .coalesce(1).sortWithinPartitions("ts")
     val ch = GenericEncode.encode(df, rowsPerChunk = 100).cache()
     assert(ch.count() == 10)
-    // natural ISO bound: first ~100 hours → 1-2 covering chunks (internal
-    // stats are epoch micros; the old double compare nulled out and
+    // timestamp literal: first ~48 hours → 1-2 covering chunks (internal
+    // stats are epoch micros; an old double compare nulled out and
     // pruned EVERYTHING)
-    val early = GenericEncode.pruneRange(ch, "ts", None, Some("2026-01-03"))
+    val early = GenericEncode.prune(ch, col("ts") <= lit("2026-01-03").cast("timestamp"))
     val keptTs = early.count()
     assert(keptTs >= 1 && keptTs <= 2, s"kept $keptTs chunks")
     assert(GenericEncode.decode(spark, early, Seq("ts")).count() >= 48)
-    // natural decimal bound: d in [0, 250) quarters; hi=50.00 covers the
-    // first ~200 rows → 2-3 chunks (old unscaled-vs-natural double
+    // decimal literal: d in [0, 250) quarters; d <= 50.00 covers the
+    // first ~200 rows → 2-3 chunks (an old unscaled-vs-natural double
     // compare pruned chunks containing matches)
-    val lowD = GenericEncode.pruneRange(ch, "d", None, Some("50.00"))
+    val lowD = GenericEncode.prune(ch, col("d") <= lit(BigDecimal("50.00")))
     val keptD = lowD.count()
     assert(keptD >= 2 && keptD <= 3, s"kept $keptD chunks")
     assert(GenericEncode.decode(spark, lowD, Seq("d"))
@@ -104,22 +104,22 @@ class GenericStatsSpec extends AnyFunSuite with TempDirs {
   }
 
   test("bloom pruning: present values keep their chunk, absent values prune hard") {
-    import graft.codec.Bloom
     // string bloom
-    val hit = GenericEncode.pruneBloom(chunks, "name",
-      Bloom.fnv1a("key-04321".getBytes("UTF-8")))
+    val hit = GenericEncode.prune(chunks, col("name") === "key-04321")
     assert(GenericEncode.decode(spark, hit, Seq("name"))
       .filter(col("name") === "key-04321").count() == 1)
-    val miss = GenericEncode.pruneBloom(chunks, "name",
-      Bloom.fnv1a("no-such-key".getBytes("UTF-8")))
-    assert(miss.count() <= 3, s"bloom kept ${miss.count()} chunks for an absent key")
+    // absent keys at both ends of the key range: the IN list's [min, max]
+    // interval keeps every chunk, so only the blooms can prune
+    val total = chunks.count()
+    val miss = GenericEncode.prune(chunks, col("name").isin("key-00000x", "key-09998x"))
+    assert(miss.count() <= 3, s"bloom kept ${miss.count()} of $total chunks for absent keys")
     // int bloom
-    val intHit = GenericEncode.pruneBloom(chunks, "k", 4321)
+    val intHit = GenericEncode.prune(chunks, col("k") === 4321)
     assert(GenericEncode.decode(spark, intHit, Seq("k"))
       .filter(col("k") === 4321).count() == 1)
-    // long bloom
-    val longMiss = GenericEncode.pruneBloom(chunks, "v", Bloom.foldLong(12345679L))
-    assert(longMiss.count() <= 3)
+    // long bloom: v = 7 * id holds neither 1 nor 69,990 + 1
+    val longMiss = GenericEncode.prune(chunks, col("v").isin(1L, 69991L))
+    assert(longMiss.count() <= 3, s"bloom kept ${longMiss.count()} of $total chunks")
   }
 
   test("projected decode reads only requested columns and their CRCs") {
@@ -159,11 +159,11 @@ class GenericStatsSpec extends AnyFunSuite with TempDirs {
   test("row-level filters push down to chunk stats and blooms automatically") {
     import spark.implicits._
     // corrupt the payloads of every chunk whose k-min is above 3300 and
-    // PERSIST the table (the pushdown targets relation-backed tables —
-    // for in-memory Datasets the object-serializer pruning has already
-    // dropped the stats columns, so nothing can be pushed there): a
-    // plain .filter succeeds ONLY if the optimizer pruned those chunks
-    // before any CRC check or decode (no manual pruneRange anywhere)
+    // PERSIST the table (the pushdown needs the stats columns below the
+    // decode — an UNCACHED in-memory Dataset has them pruned out of its
+    // object serializer, and is pruned with GenericEncode.prune instead):
+    // a plain .filter succeeds ONLY if the optimizer pruned those chunks
+    // before any CRC check or decode (no manual prune call anywhere)
     val corrupted = chunks.map { c =>
       if (c.col_mins(0).toLong > 3300L)
         c.copy(cols_bin = c.cols_bin.map(_ => Array[Byte](9)))
@@ -334,7 +334,7 @@ class GenericStatsSpec extends AnyFunSuite with TempDirs {
       array(col("id").cast("int"), (col("id") + 1).cast("int")).as("toks"))
       .coalesce(1).sortWithinPartitions("k")
     val ch = GenericEncode.encode(df, rowsPerChunk = 256)
-    val pruned = GenericEncode.pruneRange(ch, "toks", Some("1500"), Some("1500"))
+    val pruned = GenericEncode.prune(ch, array_contains(col("toks"), 1500))
     assert(pruned.count() <= 2, s"kept ${pruned.count()} of ${ch.count()}")
   }
 
@@ -342,14 +342,14 @@ class GenericStatsSpec extends AnyFunSuite with TempDirs {
     // at scale a disjoint range prunes everything — the empty result must
     // keep its columns so downstream filters/projects still resolve
     // (regression: sf0.001 q_generic_prune hit UNRESOLVED_COLUMN)
-    val pruned = GenericEncode.pruneRange(chunks, "k", Some("900000"), Some("990000"))
+    val pruned = GenericEncode.prune(chunks, col("k").between(900000, 990000))
     assert(pruned.count() == 0)
     val out = GenericEncode.decode(spark, pruned, Seq("k", "v"))
       .filter(col("k") > 100).select("v")
     assert(out.schema.fieldNames.toSeq == Seq("v"))
     assert(out.count() == 0)
     // chained prunes over the empty set keep working too
-    val rePruned = GenericEncode.pruneRange(pruned, "v", Some("0"), Some("10"))
+    val rePruned = GenericEncode.prune(pruned, col("v").between(0L, 10L))
     assert(rePruned.count() == 0)
     // seekRows over an all-pruned table: empty but typed
     val sought = GenericEncode.seekRows(spark, pruned, 0, 10, Seq("name"))

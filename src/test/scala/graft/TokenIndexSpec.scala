@@ -137,6 +137,34 @@ class TokenIndexSpec extends AnyFunSuite with TempDirs {
     }
   }
 
+  test("an index with no postings answers lookups and extends incrementally") {
+    import spark.implicits._
+    val all = TokenTableGen.generate(spark, 250, 2)
+    val base = tmpDir("tis-empty")
+    def write(rows: org.apache.spark.sql.Dataset[TokenRow], partOffset: Int, mode: String): Unit =
+      EncodePipeline.encode(rows, 1, tokensPerChunk = 8 * 1024)
+        .map(c => c.copy(part_id = c.part_id + partOffset,
+          chunk_id = ((c.part_id + partOffset).toLong << 32) | (c.chunk_id & 0xFFFFFFFFL)))
+        .write.mode(mode)
+        .option("compression", EncodePipeline.ChunkTableCompression)
+        .parquet(s"$base/chunks")
+    // 50 rows whose token arrays are all null: the index holds no postings
+    write(all.limit(50).map(_.copy(tokens = null, n_tok = -1)), 0, "overwrite")
+    val nullOnly = spark.read.parquet(s"$base/chunks").as[EncodedChunk]
+    TokenIndex.build(nullOnly, s"$base/index")
+    val tok = all.filter(r => r.tokens != null && r.tokens.nonEmpty).head().tokens.head
+    assert(TokenIndex.lookup(spark, s"$base/index", nullOnly, tok).count() == 0)
+    assert(TokenIndex.lookupPhrase(spark, s"$base/index", nullOnly, Seq(tok, tok)).count() == 0)
+    // appended chunks with tokens merge into the empty posting table
+    write(all, 1, "append")
+    val chunks = spark.read.parquet(s"$base/chunks").as[EncodedChunk]
+    TokenIndex.buildIncremental(chunks, s"$base/index")
+    val want = all.filter(r => r.tokens != null && r.tokens.contains(tok))
+      .map(_.doc_id).collect().sorted.toSeq
+    assert(want.nonEmpty)
+    assert(TokenIndex.lookup(spark, s"$base/index", chunks, tok).collect().sorted.toSeq == want)
+  }
+
   test("tokens stream corruption fails loudly at index build") {
     import spark.implicits._
     val rows = TokenTableGen.generate(spark, 300, 2)

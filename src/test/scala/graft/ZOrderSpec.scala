@@ -53,10 +53,9 @@ class ZOrderSpec extends AnyFunSuite {
       (col("id") * 3).as("payload"))
 
     def kept(chunks: org.apache.spark.sql.Dataset[GenericChunk],
-             dims: (String, String, String)*): Long =
-      dims.foldLeft(chunks) { case (c, (d, lo, hi)) =>
-        GenericEncode.pruneRange(c, d, Some(lo), Some(hi))
-      }.count()
+             dims: (String, Long, Long)*): Long =
+      GenericEncode.prune(chunks,
+        dims.map { case (d, lo, hi) => col(d).between(lo, hi) }.reduce(_ && _)).count()
 
     // 256-row chunks: a linear-on-x chunk spans ~1.3 x-values but ALL of
     // y, so its y stats are vacuous; a z-ordered chunk is a ~16x16 curve
@@ -70,14 +69,14 @@ class ZOrderSpec extends AnyFunSuite {
     val total = zChunks.count()
     // 20x20 box = 1% of the area: linear keeps ~10% of chunks (its x
     // span), z-order a small multiple of the 1% area fraction
-    val zBox = kept(zChunks, ("x", "50", "69"), ("y", "50", "69"))
-    val linBox = kept(linChunks, ("x", "50", "69"), ("y", "50", "69"))
+    val zBox = kept(zChunks, ("x", 50L, 69L), ("y", 50L, 69L))
+    val linBox = kept(linChunks, ("x", 50L, 69L), ("y", 50L, 69L))
     assert(zBox * 2 <= linBox, s"box: z-order kept $zBox of $total, linear $linBox")
     assert(zBox <= total / 10, s"box: z-order kept $zBox of $total chunks")
     // y-only band: the linear layout cannot prune AT ALL (every chunk
     // holds the full y range); z-order still prunes to ~the band fraction
-    val zBand = kept(zChunks, ("y", "50", "69"))
-    val linBand = kept(linChunks, ("y", "50", "69"))
+    val zBand = kept(zChunks, ("y", 50L, 69L))
+    val linBand = kept(linChunks, ("y", 50L, 69L))
     assert(linBand >= (total * 9) / 10, s"band: linear layout kept $linBand of $total")
     assert(zBand * 3 <= linBand, s"band: z-order kept $zBand of $total, linear $linBand")
 
